@@ -3,16 +3,13 @@ family into ``registry.CATALOG``.
 
 The external driver samples the FIRST ~50 catalog entries (registration
 order) for its per-round correctness gate, so ``_PRIORITY`` front-loads the
-queries that most need driver-side evidence this round. CORRECTNESS_r10 was
-50/50 green; cumulatively all 235 pre-r11 catalog queries have green driver
-rows (r01 ∪ … ∪ r10), no query's latest row is red, and no latest row is
-older than r6 (latest-round histogram r6:35, r7:50, r8:50, r9:50, r10:50).
-Round 11 front-loads (a) the ONE new entry (q_pointer_publish_roundtrip —
-the driver-checked MVCC/pointer publish round-trip, VERDICT r10 item 3),
-then (b) the VERDICT r10 item-1 rotation: all 35 rows whose latest driver
-evidence is r6 (CORRECTNESS_r06 order), topped up with the 14 oldest r7
-rows (CORRECTNESS_r07 order). 1+35+14 = 50; after this round no driver row
-anywhere in the union is older than r7.
+queries that most need driver-side evidence. Every catalog query has a
+green driver row in CORRECTNESS_r01 … r12, and no query's latest row is
+red. The front block is the queries whose code moved since their last
+driver row (the publish/compaction/store-probe consolidation and the PQ
+ANN and item-CF rewrites); the rest of the 50 are the rows with the
+oldest latest driver evidence (all 36 r7 rows, then the 8 oldest r8
+rows, in CORRECTNESS-file order).
 
 STANDING RULE (VERDICT r4 item 7): when the catalog grows after
 convergence, new entries go to the FRONT of _PRIORITY in the same round
@@ -28,96 +25,72 @@ from __future__ import annotations
 from . import queries as _queries  # noqa: F401  (core relational operators)
 from . import queries_analytics as _queries_analytics  # noqa: F401  (windows/rollup/pivot)
 from . import queries_etl as _queries_etl  # noqa: F401  (DML/cleaning/audit)
+from . import queries_ext as _queries_ext  # noqa: F401  (dedup/similarity/streaming)
+from . import queries_ml as _queries_ml  # noqa: F401  (expectations/sampling/char-LM)
+from . import queries_stats as _queries_stats  # noqa: F401  (stats/sequence analytics)
+from . import queries_sci as _queries_sci  # noqa: F401  (nonparametric/survival)
 from .registry import CATALOG, QuerySpec
 
-try:  # extensions land in a later milestone
-    from . import queries_ext as _queries_ext  # noqa: F401
-
-    _EXT_LOADED = True
-except ImportError:
-    _EXT_LOADED = False
-
-try:  # round-3 session additions (expectations/sampling/anomaly/char-LM)
-    from . import queries_ml as _queries_ml  # noqa: F401
-except ImportError:
-    pass
-
-try:  # round-3 session additions, batch 4 (stats/sequence analytics)
-    from . import queries_stats as _queries_stats  # noqa: F401
-except ImportError:
-    pass
-
-try:  # round-3 session additions, batch 11 (nonparametric inference/survival)
-    from . import queries_sci as _queries_sci  # noqa: F401
-except ImportError:
-    pass
-
 _PRIORITY = [
-    # --- round-11 block A: NEW entries (standing rule: new goes FRONT) ---
-    "q_pointer_publish_roundtrip",  # MVCC publish round-trip (VERDICT r10 item 3)
-    # --- round-11 block B: all 35 rows whose latest driver evidence is
-    # r6 (CORRECTNESS_r06 order) ---
-    "op_filter_range",
-    "op_filter_null",
-    "op_filter_regex",
-    "op_filter_in_list",
-    "op_filter_complement",
-    "op_join_inner",
-    "op_join_inner_expr",
-    "op_join_left",
-    "op_join_multi",
-    "op_join_semi",
-    "q_no_orders",
-    "op_corr_scalar_subquery",
-    "op_agg_counts",
-    "q1_pricing_summary",
-    "op_agg_having",
-    "op_agg_sum_coalesce",
-    "q_prime_cities",
-    "op_agg_scalars_report",
-    "op_win_rownum_dedup",
-    "op_topk",
-    "op_topk_ties",
-    "op_sort_nulls",
-    "op_set_union",
-    "op_set_intersect_except",
-    "q_order_revenue",
-    "q_supplier_stock",
-    "q_top3_products",
-    "q_top_categories",
-    "op_win_lead_lag",
-    "op_win_running_total",
-    "op_win_moving_avg",
-    "op_rollup",
-    "op_cube",
-    "op_pivot",
-    "op_agg_stats",
-    # --- round-11 block C: the 14 oldest r7 rows (CORRECTNESS_r07
-    # order) — tops the sample up to 50 ---
+    "q_pointer_publish_roundtrip",
+    "q_compaction_roundtrip",
     "dedup_store_probe",
-    "op_mv_minmax",
-    "op_mv_join_agg",
-    "op_distinct_projection",
-    "op_asof_join",
-    "op_range_join",
-    "op_percentiles",
-    "op_win_share_of_total",
-    "op_approx_count_distinct",
-    "op_approx_percentile",
-    "op_zscore_outliers",
-    "q_clean_scalars",
-    "q_pipe_clean_customers",
-    "q_pipe_clean_orders",
+    "sim_ann_pq",
+    "sim_ann_pq_rerank",
+    "op_item_cf_jaccard",
+    "q_pipe_clean_products",
+    "q_pipe_clean_order_details",
+    "q_pipe_clean_reviews",
+    "q_pipe_placeholder_parents",
+    "q_normalize_3nf",
+    "q_audit_report",
+    "q_update_set",
+    "q_update_from",
+    "q_delete",
+    "q_upsert",
+    "q_cascade_delete",
+    "q_insert_values",
+    "q_scd2_merge",
+    "pipe_training_corpus",
+    "dedup_exact",
+    "dedup_minhash",
+    "dedup_simhash",
+    "dedup_ngram_jaccard",
+    "dedup_embedding",
+    "dedup_cluster_corpus",
+    "sim_cosine_topk",
+    "sim_ann_lsh",
+    "sim_ann_ivf",
+    "text_stats",
+    "text_quality_langid",
+    "text_tfidf_top_terms",
+    "mm_decode",
+    "mm_frame_sample",
+    "mm_embed_ann",
+    "q_pipe_clean_suppliers",
+    "mm_decode_quarantine",
+    "dedup_ngram_jaccard_maxdf",
+    "q_constraint_catalog",
+    "events_hourly",
+    "events_sessionize",
+    "events_dedup",
+    "op_mv_dim_update",
+    "op_mv_var",
+    "events_funnel",
+    "events_props_json",
+    "events_props_struct",
+    "events_time_rollup",
+    "events_enriched",
+    "text_fingerprint",
 ]
 
 
 def _reorder() -> None:
     missing = [n for n in _PRIORITY if n not in CATALOG]
-    if missing and _EXT_LOADED:
+    if missing:
         # fail loudly: a typo here would silently demote a query
         raise RuntimeError(f"catalog priority references unknown queries: {missing}")
-    # extensions module absent (degraded install): order what did register
-    ordered = {n: CATALOG[n] for n in _PRIORITY if n in CATALOG}
+    ordered = {n: CATALOG[n] for n in _PRIORITY}
     ordered.update((n, s) for n, s in CATALOG.items() if n not in ordered)
     CATALOG.clear()
     CATALOG.update(ordered)

@@ -72,7 +72,7 @@ def norm_uuid_prevalidated(c: Column | str) -> Column:
     already-validated column pays it a second time per row). Equivalent to
     ``norm_uuid`` exactly on rows satisfying
     ``clean_text(c) IS NULL OR is_valid_uuid(clean_text(c))`` — pinned by
-    tests/test_pipelines.py; do NOT use on unvalidated text (a non-uuid
+    tests/test_cleaning_pipeline.py; do NOT use on unvalidated text (a non-uuid
     value would pass through lowercased instead of nulling)."""
     t = F.trim(_c(c))
     return F.when(t != "", F.lower(t))

@@ -1103,13 +1103,11 @@ def write_minhash_store(
     _write_manifest(spark, path, num_hashes, bands, num_prefixes, k, seed, "batch")
 
 
-def _write_manifest(
-    spark, path, num_hashes, bands, num_prefixes, k, seed, layout, publish="swap"
-):
+def _write_manifest(spark, path, num_hashes, bands, num_prefixes, k, seed, layout):
     spark.createDataFrame(
-        [(num_hashes, bands, num_prefixes, k, seed, layout, publish)],
+        [(num_hashes, bands, num_prefixes, k, seed, layout)],
         "num_hashes int, bands int, num_prefixes int, k int, seed int, "
-        "layout string, publish string",
+        "layout string",
     ).write.mode("overwrite").parquet(f"{path}/manifest")
 
 
@@ -1138,9 +1136,8 @@ def _read_manifest(spark, path: str) -> dict:
         return spark.read.parquet(mdir).collect()[0].asDict()
 
 
-#: versioned root of a POINTER-published append store (r11): the live
-#: index/features trees sit inside one generation directory
-#: ``{path}/store/data/v=N`` behind a ``{path}/store/_LATEST`` pointer
+#: versioned root of an append-layout store: the live index/features trees
+#: sit inside one generation directory ``{path}/store/data/v=N``
 _GEN = "store"
 
 
@@ -1148,74 +1145,33 @@ def _gen_root(path: str) -> str:
     return f"{path}/{_GEN}"
 
 
-def _store_is_pointer(path: str) -> bool:
-    """On-disk publish-mode discriminator (os-level, no session needed):
-    a pointer-published store carries the generation pointer file. The
-    layout itself is authoritative — the manifest's ``publish`` column is
-    documentation of the bootstrap-time choice, not a second source of
-    truth that could disagree with the tree."""
-    import os
-
-    from ..sources import versioned as V
-
-    return os.path.exists(os.path.join(_gen_root(path), V._POINTER))
-
-
 def _store_trees(path: str) -> tuple[str, str]:
     """Resolved ``(features_dir, index_dir)`` live trees of a minhash
-    store, under either publish mode. Swap/legacy stores keep the r7
-    layout (trees at the store root, republished by directory rename);
-    pointer stores resolve through the generation pointer — appends are
-    dynamic partition overwrites INTO the current generation (the live
+    store. Batch-layout stores keep both trees at the store root;
+    append-layout stores resolve through the generation pointer — appends
+    are dynamic partition overwrites INTO the current generation (the live
     tree is mutable; what is immutable is a SUPERSEDED generation), and
     only compaction creates a new generation."""
-    if _store_is_pointer(path):
-        from ..sources import versioned as V
+    from ..sources import versioned as V
 
-        root = _gen_root(path)
-        d = V._data_dir(root, V.current_version(root))
-        return f"{d}/features", f"{d}/index"
-    return f"{path}/features", f"{path}/index"
+    root = _gen_root(path)
+    v = V.current_version(root)
+    d = V.snapshot_path(root, v) if v is not None else path
+    return f"{d}/features", f"{d}/index"
 
 
 def heal_minhash_store(path: str) -> None:
-    """Publish-mode-dispatched pre-read heal — every store consumer entry
-    point runs this UNCONDITIONALLY before any existence probe (the
-    ADVICE-r9 rule: on a swap-published tree, ``exists()`` is only
-    meaningful after the heal).
+    """Pre-read heal run by every store consumer entry point: prune
+    generations ABOVE the pointer — compactions that never published.
+    There is no restore arm: the pointed generation stayed live through
+    any crash. Generations BELOW the pointer are deliberately not heal's
+    business: they are retained reader-grace history
+    (``compact_minhash_store(keep_generations>1)``) or a post-flip vacuum
+    crash's leftovers, and the next compaction's vacuum applies the
+    retention policy either way. A no-op on batch-layout stores."""
+    from ..sources import versioned as V
 
-    Swap mode: :func:`~..sources.sinks.recover_swap` on both trees (a
-    compaction crash between a swap's two renames leaves the only copy of
-    a tree in a ``__old__`` sibling — restore it).
-
-    Pointer mode: prune generations ABOVE the pointer — compactions that
-    never published, which would otherwise collide with the next
-    compaction's ``errorifexists`` generation write. There is no restore
-    arm at all: the pointed generation stayed live through any crash.
-    Generations BELOW the pointer are deliberately NOT heal's business
-    (r11 self-review): they are either retained reader-grace history
-    (``compact_minhash_store(keep_generations>1)`` — a concurrent
-    external probe may still hold a plan onto the superseded tree, the
-    versioned.py retention-window contract) or a post-flip vacuum
-    crash's leftovers, and the next compaction's own vacuum applies the
-    retention policy either way — a heal that pruned below the pointer
-    would silently undo the operator's retention choice on every
-    ingest-loop batch."""
-    if _store_is_pointer(path):
-        import shutil
-
-        from ..sources import versioned as V
-
-        root = _gen_root(path)
-        cur = V.current_version(root)
-        for v in V.list_versions(root):
-            if cur is None or v > cur:
-                shutil.rmtree(V._data_dir(root, v), ignore_errors=True)
-    else:
-        from ..sources.sinks import recover_swap
-
-        recover_swap(f"{path}/features")
-        recover_swap(f"{path}/index")
+    V.heal(_gen_root(path))
 
 
 def bootstrap_minhash_store(
@@ -1226,64 +1182,36 @@ def bootstrap_minhash_store(
     num_prefixes: int = 64,
     k: int = 3,
     seed: int = 42,
-    publish: str = "swap",
 ) -> None:
-    """Create an EMPTY append-layout store: manifest only (index/features
-    appear with the first ``append_minhash_store``). The append layout
-    carries an extra ``__ingest`` partition column on both frames — a
-    monotone batch key — which ``write_minhash_store``'s batch layout does
-    not; the two layouts must not be mixed in one store.
+    """Create an EMPTY append-layout store: manifest plus an empty
+    generation 1 (index/features appear with the first
+    ``append_minhash_store``). The append layout carries an extra
+    ``__ingest`` partition column on both frames — a monotone batch key —
+    which ``write_minhash_store``'s batch layout does not; the two layouts
+    must not be mixed in one store.
 
-    ``publish`` selects the COMPACTION publication primitive (r11,
-    VERDICT r10 item 2 — the store was the last rename-dependent publish
-    on the object-store path):
+    Both live trees sit inside ONE generation directory
+    ``{path}/store/data/v=N`` behind a pointer (:mod:`..sources.versioned`).
+    Appends are dynamic partition overwrites into the CURRENT generation
+    (the log-structured contract); compaction materializes the folded
+    trees as generation N+1 and publishes BOTH with one atomic pointer
+    flip, so index and features never publish apart and a crash leaves
+    only an unpointed generation to prune (:func:`heal_minhash_store`)."""
+    import os
 
-    - ``"swap"`` (default): the r7 layout — live trees at the store root,
-      compaction republishes each via atomic directory rename
-      (POSIX/HDFS).
-    - ``"pointer"``: both live trees sit inside ONE generation directory
-      ``{path}/store/data/v=N`` behind a ``_LATEST`` pointer. Appends are
-      still dynamic partition overwrites into the CURRENT generation
-      (appends mutate the live tree by design — that is the log-
-      structured contract); compaction materializes the folded trees as
-      generation N+1 and publishes BOTH with one atomic pointer flip
-      (``os.replace`` locally; a conditional PUT on an object store).
-      Nothing live is ever renamed, the crash algebra has no restore arm
-      (torn generations are garbage to prune, see
-      :func:`heal_minhash_store`), and — unlike the swap arm's two
-      sequential tree swaps — index and features can never publish torn
-      APART from each other. Also the Spark-Connect-safe mode: no
-      consumer touches the JVM filesystem gateway (all pointer/heal
-      operations are driver-side ``os`` calls, like the per-bucket MVCC
-      MV sink).
+    from ..sources import versioned as V
 
-    The mode is recorded in the manifest and discriminated on disk by the
-    generation pointer itself, so every consumer (append, probe, compact,
-    the streaming ingest loop) resolves the live trees automatically —
-    there is no wrong-primitive read path to guard."""
     if num_hashes % bands != 0:
         raise ValueError(
             f"bootstrap_minhash_store: bands={bands} must divide num_hashes={num_hashes}"
         )
-    if publish not in ("swap", "pointer"):
-        raise ValueError(
-            f"bootstrap_minhash_store: publish={publish!r} (want 'swap' or 'pointer')"
-        )
-    _write_manifest(
-        spark, path, num_hashes, bands, num_prefixes, k, seed, "append", publish
-    )
-    if publish == "pointer":
-        import os
-
-        from ..sources import versioned as V
-
-        # generation 1 starts EMPTY: the version directory exists so the
-        # pointer has a referent, but features/index subtrees only appear
-        # with the first append (existence probes keep their "has this
-        # store ingested anything yet" meaning under both modes)
-        root = _gen_root(path)
-        os.makedirs(V._data_dir(root, 1), exist_ok=True)
-        V._publish(root, 1)
+    _write_manifest(spark, path, num_hashes, bands, num_prefixes, k, seed, "append")
+    # generation 1 starts EMPTY: the version directory exists so the
+    # pointer has a referent, but the features/index subtrees only appear
+    # with the first append ("has this store ingested anything yet")
+    root = _gen_root(path)
+    os.makedirs(V.snapshot_path(root, 1), exist_ok=True)
+    V.publish(root, 1)
 
 
 def append_minhash_store(features: DataFrame, path: str, ingest_id: int) -> None:
@@ -1300,10 +1228,9 @@ def append_minhash_store(features: DataFrame, path: str, ingest_id: int) -> None
     Layout: ``features`` partitioned by ``__ingest``; ``index`` partitioned
     by ``(band, __pfx, __ingest)`` — band/pfx stay the LEADING directory
     levels, so the probe's static (band, pfx) pruning is unchanged and the
-    ingest filter prunes the trailing level. Under a pointer-published
-    store both trees resolve into the current GENERATION directory — the
-    write itself is identical (a dynamic partition overwrite of the
-    batch's own leaves inside the live tree; only compaction changes
+    ingest filter prunes the trailing level. Both trees resolve into the
+    store's current GENERATION directory (a dynamic partition overwrite of
+    the batch's own leaves inside the live tree; only compaction changes
     generations).
     """
     spark = features.sparkSession
@@ -1365,9 +1292,8 @@ def compact_minhash_store(
     (stamped ``upto_exclusive - 1``, so every probe with
     ``max_ingest_exclusive >= upto_exclusive`` — all future batches —
     still sees exactly the same history), preserves in-flight ingests
-    ``>= upto_exclusive`` untouched, and publishes via atomic swap
-    (readers see the old tree or the new, never a mix). Cost: one
-    index-sized + one features-sized pass — never the corpus text.
+    ``>= upto_exclusive`` untouched. Cost: one index-sized + one
+    features-sized pass — never the corpus text.
 
     SAFETY CONTRACT (the one thing compaction trades away): replaying an
     ingest batch BELOW ``upto_exclusive`` after compaction would
@@ -1377,33 +1303,23 @@ def compact_minhash_store(
     ingest key (or lower) — equivalently, compact while the stream is
     stopped.
 
-    PUBLICATION is publish-mode-dispatched (r11, VERDICT r10 item 2):
+    PUBLICATION: both folded trees materialize under generation ``N+1``
+    and publish with ONE atomic pointer flip, then superseded generations
+    are vacuumed. No rename ever touches live data (object-store-safe), a
+    crash before the flip leaves an unpointed generation that
+    :func:`heal_minhash_store` prunes, and a crash after it leaves only
+    the old generation to vacuum.
 
-    - swap store: each folded tree republishes via
-      :func:`~..sources.sinks.atomic_swap_write` (two renames per tree,
-      healable crash window between them — POSIX/HDFS only);
-    - pointer store: both folded trees materialize under generation
-      ``N+1`` and publish with ONE atomic pointer flip, then the
-      superseded generation is vacuumed. No rename ever touches live
-      data (object-store-safe), a crash before the flip leaves an
-      unpointed generation that :func:`heal_minhash_store` prunes, and a
-      crash after it leaves only the old generation to vacuum — the
-      no-restore-arm crash algebra, and it also closes the swap arm's
-      one asymmetry (a crash BETWEEN the two tree swaps publishes index
-      and features from different folds; harmless to probes, since both
-      stampings agree below ``max_ingest_exclusive``, but a window the
-      single flip simply does not have).
-
-    ``keep_generations`` (pointer mode only; r11) is the reader-grace
-    retention window: superseded generations up to this count stay on
-    disk after the flip, so an EXTERNAL probe that resolved its tree
-    paths just before the compaction finishes against the immutable old
-    generation instead of dying mid-plan — the same retention-window
-    contract every lakehouse vacuum has. The default 1 (latest only)
-    matches the single-writer ingest loop, where no concurrent reader
-    exists; multi-reader object-store deployments should keep >= 2 and
-    vacuum on their own probe-lifetime bound. Heal never prunes below
-    the pointer, so retention survives the loop's per-batch heals.
+    ``keep_generations`` is the reader-grace retention window: superseded
+    generations up to this count stay on disk after the flip, so an
+    EXTERNAL probe that resolved its tree paths just before the
+    compaction finishes against the immutable old generation instead of
+    dying mid-plan — the same retention-window contract every lakehouse
+    vacuum has. The default 1 (latest only) matches the single-writer
+    ingest loop, where no concurrent reader exists; multi-reader
+    deployments should keep >= 2 and vacuum on their own probe-lifetime
+    bound. Heal never prunes below the pointer, so retention survives the
+    loop's per-batch heals.
 
     Returns (files_before, files_after) over index + features.
     """
@@ -1423,11 +1339,18 @@ def compact_minhash_store(
             f"compact_minhash_store: {path} is a batch-layout store — "
             "only the append layout accretes ingest partitions"
         )
-    # a PRIOR compaction may have crashed mid-publish — heal before
-    # reading (self-review r9; the in-loop caller replays the same batch,
-    # so the re-run lands here first and self-heals). Under the pointer
-    # mode this also clears a torn generation out of the errorifexists
-    # target below.
+    from ..sources import versioned as V
+
+    root = _gen_root(path)
+    if V.current_version(root) is None:
+        raise ValueError(
+            f"compact_minhash_store: {path} has no generation pointer — an "
+            "append store that predates generation publishing; rebuild it "
+            "with bootstrap_minhash_store"
+        )
+    # a PRIOR compaction may have crashed before its flip — prune its
+    # generation before reading (the in-loop caller replays the same
+    # batch, so the re-run lands here first and self-heals)
     heal_minhash_store(path)
     feats_dir, idx_dir = _store_trees(path)
     before = _nfiles(feats_dir, idx_dir)
@@ -1440,31 +1363,20 @@ def compact_minhash_store(
     idx = idx.repartition("band", "__pfx")
     feats = spark.read.parquet(feats_dir).withColumn("__ingest", folded_ing)
     feats = feats.repartition("__ingest")
-    if _store_is_pointer(path):
-        from ..sources import versioned as V
-
-        root = _gen_root(path)
-        cur = V.current_version(root)
-        next_v = cur + 1
-        next_dir = V._data_dir(root, next_v)
-        (
-            idx.write.mode("errorifexists")
-            .partitionBy("band", "__pfx", "__ingest")
-            .parquet(f"{next_dir}/index")
-        )
-        (
-            feats.write.mode("errorifexists")
-            .partitionBy("__ingest")
-            .parquet(f"{next_dir}/features")
-        )
-        V._publish(root, next_v)  # the one atomic operation
-        V.vacuum(root, keep_last=max(1, keep_generations))
-        return before, _nfiles(f"{next_dir}/features", f"{next_dir}/index")
-    from ..sources.sinks import atomic_swap_write
-
-    atomic_swap_write(idx, idx_dir, partition_by=["band", "__pfx", "__ingest"])
-    atomic_swap_write(feats, feats_dir, partition_by=["__ingest"])
-    return before, _nfiles(feats_dir, idx_dir)
+    next_v = V.next_version(root)
+    next_dir = V.snapshot_path(root, next_v)
+    (
+        idx.write.mode("errorifexists")
+        .partitionBy("band", "__pfx", "__ingest")
+        .parquet(f"{next_dir}/index")
+    )
+    (
+        feats.write.mode("errorifexists")
+        .partitionBy("__ingest")
+        .parquet(f"{next_dir}/features")
+    )
+    V.publish(root, next_v, keep_last=max(1, keep_generations))
+    return before, _nfiles(f"{next_dir}/features", f"{next_dir}/index")
 
 
 def minhash_store_probe(

@@ -2,8 +2,9 @@
 
 PostgreSQL mutates heap tables in place; Spark DataFrames are immutable, so
 every mutation becomes a pure transformation returning the new table state.
-Pipelines write-to-temp-and-swap for persistence, which also gives the
-idempotency the reference gets from ``ON CONFLICT DO NOTHING`` (T:119) and
+Pipelines persist the new state as a fresh write (a CTAS, or a snapshot
+published through sources/versioned.py), which also gives the idempotency
+the reference gets from ``ON CONFLICT DO NOTHING`` (T:119) and
 transactional brackets (OP-TXN — a documented non-goal, SURVEY §2.3).
 
 Scale notes:

@@ -25,7 +25,7 @@ from ..operators.dml import upsert_ignore
 # step already filtered every row whose FK text is non-blank and non-uuid,
 # so the per-row uuid regex in the cleaned projection is redundant —
 # blank->NULL else lowercase(trim) is exactly norm_uuid on the surviving
-# rows (equivalence pinned in tests/test_pipelines.py).
+# rows (equivalence pinned in tests/test_cleaning_pipeline.py).
 UNKNOWN_SUPPLIER = {"suppliername": "UNKNOWN SUPPLIER"}  # ref T:131-135
 UNKNOWN_CUSTOMER = {"name": "UNKNOWN CUSTOMER"}  # ref T:215-219
 UNKNOWN_PRODUCT = {"productname": "UNKNOWN PRODUCT"}  # ref T:862-869

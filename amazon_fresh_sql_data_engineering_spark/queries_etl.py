@@ -1401,7 +1401,7 @@ def q_zorder_roundtrip(spark, sf_dir):
     "then compact_partitions rewrites ONLY the leaves past the file-count "
     "threshold — cold leaves are never read, each hot leaf republishes via "
     "a dot-hidden per-leaf swap; (b) flat with many small files, then "
-    "compact_files rewrites the whole table behind one atomic swap. Both "
+    "compact_files rewrites the whole table behind the same hidden swap. Both "
     "tiers are read BACK and aggregated; the oracle states the same "
     "aggregates over the original table, because compaction is pure "
     "physical reorganization — the round-trip must be value-lossless "
@@ -1456,7 +1456,7 @@ def q_compaction_roundtrip(spark, sf_dir):
                 raise RuntimeError(f"compact_partitions was a no-op: {res}")
 
         def tier_flat() -> None:
-            # (b) flat: 24 small files folded behind one atomic swap
+            # (b) flat: 24 small files folded behind one hidden swap
             o.repartition(24).write.parquet(flat)
             before, after = compact_files(spark, flat)
             if after >= before:
@@ -1500,26 +1500,25 @@ def q_compaction_roundtrip(spark, sf_dir):
         FROM orders WHERE o_orderstatus <> 'F' GROUP BY o_orderstatus
     """,
     doc="Pointer-publish (MVCC snapshot) round-trip (VERDICT r10 item 3; "
-    "the driver-checked face of sources/versioned.py — the mechanism "
-    "behind sinks.POINTER_PUBLISH, the per-bucket MVCC MV sink, and the "
-    "r11 pointer-mode minhash store, i.e. the package's object-store-safe "
-    "publish seam). Orders is published as immutable snapshot v=1 "
-    "(data/v=N directory behind one atomically-replaced _LATEST pointer), "
-    "then a DELETE-shaped v=2 (status 'F' dropped) supersedes it; the "
-    "query reads _LATEST (must observe v=2 — raises if the flip was a "
-    "no-op), TIME-TRAVELS back to v=1 (immutability: the superseded "
-    "snapshot is byte-stable on disk), ROLLS BACK the pointer to v=1 "
-    "(O(1), no data movement — raises if the rollback read still sees "
-    "the delete), and aggregates both the rolled-back _LATEST and the "
-    "time-travel v=2 read. The oracle states the same two aggregates "
-    "over the base table — snapshotting is pure physical publication, so "
-    "every read tier must be value-lossless. Crash-window semantics "
-    "(orphan generations pruned never restored, torn pointer writes, "
-    "vacuum retention) are pytest-asserted in test_sinks/test_streaming. "
-    "At 100 TB the pointer flip is what replaces the two-rename swap on "
-    "object stores, where rename is copy+delete; readers holding v=N "
-    "plans are isolated by immutability, and rollback is a pointer "
-    "write, not a restore job.",
+    "the driver-checked face of sources/versioned.py — the package's one "
+    "publish primitive, behind the streaming CDC and MV sinks and the "
+    "append-layout minhash store). Orders is published as immutable "
+    "snapshot v=1 (data/v=N directory behind one atomically-replaced "
+    "pointer file), then a DELETE-shaped v=2 (status 'F' dropped) "
+    "supersedes it; the query reads the current snapshot (must observe "
+    "v=2 — raises if the flip was a no-op), TIME-TRAVELS back to v=1 "
+    "(immutability: the superseded snapshot is byte-stable on disk), ROLLS "
+    "BACK the pointer to v=1 (O(1), no data movement — raises if the "
+    "rollback read still sees the delete), and aggregates both the "
+    "rolled-back current snapshot and the time-travel v=2 read. The "
+    "oracle states the same two aggregates over the base table — "
+    "snapshotting is pure physical publication, so every read tier must "
+    "be value-lossless. Crash-window semantics (orphan snapshots pruned "
+    "never restored, torn pointer writes, vacuum retention) are "
+    "pytest-asserted in test_sinks/test_streaming. At 100 TB the pointer "
+    "flip is what makes publication object-store-safe, where rename is "
+    "copy+delete; readers holding v=N plans are isolated by immutability, "
+    "and rollback is a pointer write, not a restore job.",
 )
 def q_pointer_publish_roundtrip(spark, sf_dir):
     import shutil
@@ -1546,11 +1545,11 @@ def q_pointer_publish_roundtrip(spark, sf_dir):
         v2 = V.write_snapshot(o.filter(F.col("o_orderstatus") != "F"), table)
         if (v1, v2) != (1, 2) or V.current_version(table) != 2:
             raise RuntimeError(f"publish no-op: v1={v1} v2={v2}")
-        # _LATEST must observe the v2 delete — a stale pointer read here
+        # the current snapshot must observe the v2 delete — a stale read here
         # means the flip didn't happen
         n_full = o.count()
         if V.read_snapshot(spark, table).count() >= n_full:
-            raise RuntimeError("pointer flip was a no-op: _LATEST still at v=1")
+            raise RuntimeError("pointer flip was a no-op: pointer still at v=1")
         # time-travel: the superseded snapshot is immutable and readable
         tt_v2 = V.read_snapshot(spark, table, version=2)
         # rollback: O(1) pointer write back to v=1, no data movement

@@ -8,16 +8,17 @@ Layout guidance encoded here:
 - **bucket** the biggest join pairs on the join key (orders ⋈ lineitem on
   the order key): both sides pre-shuffled at write time means the join
   runs shuffle-free forever after.
-- **atomic swap**: write to a temp path then rename — the idempotency
-  contract replacing the reference's BEGIN/COMMIT (OP-TXN, SURVEY §2.3).
+- **publish** (the OP-TXN replacement for the reference's BEGIN/COMMIT,
+  SURVEY §2.3) lives in :mod:`.versioned`: immutable snapshots behind an
+  atomically flipped pointer. The one rename swap left here is
+  compaction's (:func:`_swap_leaf`), because replacing a plain parquet
+  directory in place has no pointer to flip.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -106,207 +107,6 @@ def ctas_zordered(
     )
 
 
-def atomic_swap_write(
-    df: DataFrame, final_path: str, partition_by: list[str] | None = None
-) -> None:
-    """Rewrite-and-swap: materialize to a temp sibling, then atomically
-    replace ``final_path``. This is how OP-UPDATE/DELETE rewrites persist
-    without torn reads (SURVEY §2.3 OP-TXN non-goal note).
-
-    POSIX rename cannot atomically replace a non-empty directory, so the
-    swap is TWO renames (final -> __old__ sibling, then __tmp__ -> final)
-    and a crash between them leaves ``final_path`` missing with the only
-    published state in the ``__old__`` sibling. Stateful consumers that
-    treat a missing directory as "empty initial state" (the streaming MV
-    sinks) MUST call :func:`recover_swap` before reading, or a torn swap
-    silently re-folds from empty (self-review r9)."""
-    # suffixes are MONOTONIC (ns timestamp, zero-padded hex) so that if
-    # multiple __old__ siblings ever coexist, lexicographic order IS age
-    # order — recover_swap additionally falls back to directory mtime for
-    # pre-r10 uuid-suffixed backups (ADVICE r9)
-    stamp = f"{time.time_ns():016x}.{uuid.uuid4().hex[:6]}"
-    tmp = f"{final_path}.__tmp__{stamp}"
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
-    old = f"{final_path}.__old__{stamp}"
-    if os.path.exists(final_path):
-        os.rename(final_path, old)
-    os.rename(tmp, final_path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-
-
-def recover_swap(final_path: str) -> bool:
-    """Heal :func:`atomic_swap_write`'s two-rename crash window. Run by
-    stateful consumers BEFORE reading ``final_path``:
-
-    - ``__tmp__`` siblings are incomplete or unpublished writes — never
-      the only copy of anything — and are dropped.
-    - ``final_path`` present: any ``__old__`` sibling is an obsolete
-      backup whose cleanup died mid-swap — dropped.
-    - ``final_path`` MISSING with an ``__old__`` sibling: the crash hit
-      between the two renames; the sibling is the only published state —
-      restored (the interrupted operation then simply replays).
-
-    Returns True when a restore happened. Single-writer contract (the
-    same one the swap itself needs): no concurrent swapper."""
-    import glob as _glob
-
-    for t in _glob.glob(f"{final_path}.__tmp__*"):
-        shutil.rmtree(t, ignore_errors=True)
-    olds = _glob.glob(f"{final_path}.__old__*")
-    if os.path.exists(final_path):
-        for o in olds:
-            shutil.rmtree(o, ignore_errors=True)
-        return False
-    if not olds:
-        return False
-    # NEWEST backup is the published state. Suffixes are monotonic
-    # ns-stamps since r10 (16 hex digits, zero-padded: lexicographic
-    # order IS age order), so when every backup carries one, order by the
-    # SUFFIX — exact regardless of filesystem timestamp granularity
-    # (ADVICE r10: two backups materialized within one coarse-mtime tick
-    # tie under max(mtime) and the pick becomes arbitrary). Pre-r10
-    # backups carry random uuid suffixes where lexicographic order means
-    # nothing — fall back to directory mtime for a mixed/legacy set
-    # (rename preserves mtime, and the single-writer contract strictly
-    # orders materialization times at normal granularity).
-    import re as _re
-
-    _stamped = _re.compile(r"\.__old__[0-9a-f]{16}\.[0-9a-f]{6}$")
-    if all(_stamped.search(o) for o in olds):
-        newest = max(olds)
-    else:
-        newest = max(olds, key=os.path.getmtime)
-    os.rename(newest, final_path)
-    for o in olds:
-        if o != newest:
-            shutil.rmtree(o, ignore_errors=True)
-    return True
-
-
-class SwapPublish:
-    """POSIX-rename publish primitive: :func:`atomic_swap_write` +
-    :func:`recover_swap`. The state IS the directory at ``final_path``;
-    replacement is two renames with a healable crash window. Correct on
-    any filesystem with atomic directory rename (HDFS, POSIX) — NOT on
-    S3-semantics object stores, where rename is copy+delete."""
-
-    name = "swap"
-
-    def write(self, df: DataFrame, final_path: str, partition_by=None) -> None:
-        atomic_swap_write(df, final_path, partition_by)
-
-    def heal(self, final_path: str) -> bool:
-        return recover_swap(final_path)
-
-    def read_or_none(self, spark: SparkSession, final_path: str):
-        from pyspark.errors import AnalysisException
-
-        # cross-primitive guard: a pointer-published sink has no parquet
-        # at its root, so a direct read would come back None/empty and a
-        # stateful consumer would silently refold from scratch — the same
-        # failure mode the torn-swap heal exists for, caused by operator
-        # error instead of a crash. Fail loudly.
-        if os.path.exists(os.path.join(final_path, "_LATEST")):
-            raise ValueError(
-                f"swap publish: {final_path} is a POINTER-published sink "
-                "(_LATEST present) — read it with POINTER_PUBLISH"
-            )
-        try:
-            return spark.read.parquet(final_path)
-        except AnalysisException:
-            return None
-
-
-class PointerPublish:
-    """Object-store-safe publish primitive (VERDICT r9 item 3): immutable
-    ``data/v=N`` snapshot directories plus one atomically-replaced
-    ``_LATEST`` pointer file — :mod:`.versioned`'s mechanism lifted into
-    the sink publish seam. NOTHING is ever renamed into or out of the
-    live path: a snapshot is fully materialized under a fresh version
-    directory first, then the pointer flips (``os.replace`` locally; a
-    conditional PUT on object stores). There is therefore no torn-swap
-    window at all — a crash anywhere before the flip leaves the OLD
-    snapshot published and only an orphan directory to prune, which is
-    exactly why the two-rename swap's heal logic doesn't (and needn't)
-    transfer to S3 semantics. After a successful flip, superseded
-    snapshots are pruned (same retention the swap primitive has).
-
-    NOT for :mod:`.versioned` time-travel tables, despite sharing their
-    on-disk mechanism: ``write`` vacuums to latest-only and ``heal``
-    prunes every snapshot the pointer doesn't name — a rolled-back table
-    with newer snapshots on disk would lose them. Streaming sink state
-    is single-version by contract; use versioned.py directly when you
-    want history."""
-
-    name = "pointer"
-
-    def write(self, df: DataFrame, final_path: str, partition_by=None) -> None:
-        from . import versioned as V
-
-        os.makedirs(os.path.join(final_path, V._DATA), exist_ok=True)
-        versions = V.list_versions(final_path)
-        version = (versions[-1] + 1) if versions else 1
-        w = df.write.mode("errorifexists")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(V._data_dir(final_path, version))
-        V._publish(final_path, version)
-        V.vacuum(final_path, keep_last=1)
-
-    def heal(self, final_path: str) -> bool:
-        """Prune orphan snapshots NEWER than the pointer (torn writes that
-        never published — the analog of dropping ``__tmp__`` siblings).
-        Never restores anything: the previous publish is still live."""
-        from . import versioned as V
-
-        cur = V.current_version(final_path)
-        pruned = False
-        for v in V.list_versions(final_path):
-            if cur is None or v > cur:
-                shutil.rmtree(V._data_dir(final_path, v), ignore_errors=True)
-                pruned = True
-        return pruned
-
-    def read_or_none(self, spark: SparkSession, final_path: str):
-        from . import versioned as V
-
-        if V.current_version(final_path) is None:
-            # cross-primitive guard (mirror of SwapPublish's): root
-            # parquet files (flat swap layout) or hive partition
-            # directories (partitioned swap layout) mean this sink was
-            # published by the SWAP primitive — returning None here would
-            # silently discard it. Partition-dir detection follows Spark's
-            # InMemoryFileIndex rule (ADVICE r10): any 'name=value' entry
-            # counts EVEN with a leading underscore — Spark itself admits
-            # underscore-prefixed partition dirs (the rename-swap
-            # partitioned MV sink writes '__mv_bucket=N'), so excluding
-            # them here reopened the silent-refold-from-empty path this
-            # guard exists to close. Only dot-prefixed entries stay
-            # hidden (Spark never discovers those as partitions).
-            if os.path.isdir(final_path) and any(
-                e.startswith("part-")
-                or ("=" in e and e != V._DATA and not e.startswith("."))
-                for e in os.listdir(final_path)
-            ):
-                raise ValueError(
-                    f"pointer publish: {final_path} is a SWAP-published "
-                    "sink (root parquet files or partition directories, "
-                    "no _LATEST) — read it with SWAP_PUBLISH"
-                )
-            return None
-        return V.read_snapshot(spark, final_path)
-
-
-#: the default (rename-based) publish primitive
-SWAP_PUBLISH = SwapPublish()
-#: the object-store-safe (pointer-based) publish primitive
-POINTER_PUBLISH = PointerPublish()
-
-
 def drop_table_path(path: str) -> None:
     """DROP TABLE IF EXISTS for path-based tables (ref T:3-15)."""
     if os.path.exists(path):
@@ -339,8 +139,9 @@ def compact_files(
     launch overhead per file, and NameNode/object-store listing pain.
     Compaction rewrites the table into files sized to ``target_file_bytes``
     (computed from the CURRENT on-disk size, so compression ratio is
-    respected) and swaps atomically via :func:`atomic_swap_write` — readers
-    never see a torn table.
+    respected) and swaps it in with :func:`_swap_leaf` — readers see the
+    old table or the new one, and :func:`_recover_leaf` heals a crash
+    anywhere in the swap on the next call.
 
     ``sort_within_by`` optionally re-sorts rows within output files so
     min/max stats stay tight after compaction; ``zorder_by`` is the
@@ -356,9 +157,8 @@ def compact_files(
     if sort_within_by and zorder_by:
         raise ValueError("compact_files: sort_within_by and zorder_by are exclusive")
     # a prior compaction may have crashed between its swap's two renames,
-    # leaving the table in a __old__ sibling — heal before reading
-    # (self-review r9; without this the re-run reads a missing path)
-    recover_swap(path)
+    # leaving the table only in its hidden backup — heal before reading
+    _recover_leaf(path)
     parts = _glob.glob(os.path.join(path, "part-*"))
     files_before = len(parts)
     total_bytes = sum(os.path.getsize(p) for p in parts)
@@ -374,7 +174,7 @@ def compact_files(
         )
     else:
         out = df.coalesce(n_out) if n_out < files_before else df.repartition(n_out)
-    atomic_swap_write(out, path)
+    _swap_leaf(out, path)
     files_after = len(_glob.glob(os.path.join(path, "part-*")))
     return files_before, files_after
 
@@ -405,12 +205,10 @@ def compact_partitions(
     backup siblings are DOT-PREFIXED: a leaf dir is ``col=value``, and a
     visible ``col=value.__old__x`` sibling would be read by partition
     discovery as a bogus partition VALUE (found by the round-trip test) —
-    hidden dirs are ignored, the same trick as the MV sink's ``.mvold-``
-    backups. Partition column values live in the directory names, so a
-    leaf-local rewrite never touches them; readers of the whole table see
-    each leaf either fully old or fully new (per-directory swap atomicity
-    — the same granularity the bucketed MV sink and the minhash-store
-    compaction already use).
+    hidden dirs are ignored. Partition column values live in the
+    directory names, so a leaf-local rewrite never touches them; readers
+    of the whole table see each leaf either fully old or fully new
+    (per-directory swap atomicity).
 
     ``sort_within_by`` optionally re-sorts rows within each compacted
     leaf so footer min/max stats stay tight. Returns ``{"compacted":
@@ -432,12 +230,10 @@ def compact_partitions(
     for root, dirs, files in os.walk(path):
         # hidden/backup/tmp dirs are not table data. The dot/underscore
         # prefix rule is the WHOLE filter (parquet's own convention, and
-        # every swap sibling this package creates under a table root is
-        # dot-prefixed: _swap_leaf's .compact-*, the MV sink's .mvold-*).
-        # A substring test on '__tmp__'/'__old__' would wrongly exclude a
+        # the swap siblings _swap_leaf creates are dot-prefixed). A
+        # substring test on '__tmp__'/'__old__' would wrongly exclude a
         # legitimate partition VALUE containing those tokens, e.g.
-        # col=a__old__b (ADVICE r9); atomic_swap_write's visible siblings
-        # live BESIDE the table path, never inside the walk.
+        # col=a__old__b (ADVICE r9).
         dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
         if any(f.startswith("part-") for f in files):
             leaves.append(root)
@@ -484,12 +280,14 @@ def compact_partitions(
 
 
 def _swap_leaf(df: DataFrame, leaf: str) -> None:
-    """Rewrite-and-swap ONE hive leaf directory with HIDDEN siblings:
-    ``.compact-tmp-<name>`` and ``.compact-old-<name>`` are dot-prefixed
-    so partition discovery never reads them as partition values (an
-    ``atomic_swap_write``-style visible ``col=value.__old__x`` sibling IS
-    read as the bogus value ``value.__old__x``). Single writer; a crash
-    anywhere is healed by :func:`_recover_leaf` on the next pass."""
+    """Rewrite-and-swap ONE plain parquet directory (a whole flat table or
+    one hive leaf) with HIDDEN siblings: ``.compact-tmp-<name>`` and
+    ``.compact-old-<name>`` are dot-prefixed so partition discovery never
+    reads them as partition values (a visible ``col=value.__old__x``
+    sibling IS read as the bogus value ``value.__old__x``). POSIX rename
+    cannot replace a non-empty directory, so this is two renames; single
+    writer, and a crash anywhere is healed by :func:`_recover_leaf` on the
+    next pass."""
     parent, name = os.path.split(leaf)
     tmp = os.path.join(parent, f".compact-tmp-{name}")
     old = os.path.join(parent, f".compact-old-{name}")

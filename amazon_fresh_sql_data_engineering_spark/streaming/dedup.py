@@ -39,17 +39,14 @@ foreachBatch's at-least-once contract (only the LAST uncommitted batch
 ever replays), so no fold target can be re-appended. File count then
 stays bounded across an arbitrarily long drain (pytest-asserted).
 
-PUBLISH MODE (r11, VERDICT r10 item 2): the store's compaction was the
-package's last rename-dependent publish on the object-store path.
-``bootstrap_minhash_store(publish="pointer")`` re-bases it on a
-store-level generation pointer — live trees under ``store/data/v=N``,
-appends still dynamic partition overwrites into the CURRENT generation,
-compaction materializing generation N+1 and flipping one pointer (both
-trees publish together; crash windows are garbage to prune, never state
-to restore). The loop dispatches on the on-disk layout, so the same code
-drains either mode; the pointer mode additionally never touches the JVM
-filesystem gateway (Spark-Connect-safe, pytest-asserted under a stubbed
-gateway).
+PUBLISH: append-layout stores keep their live trees in one generation
+directory ``store/data/v=N`` behind a pointer (:mod:`..sources.versioned`).
+Appends are dynamic partition overwrites into the CURRENT generation;
+compaction materializes generation N+1 and flips one pointer, so both
+trees publish together and crash windows are garbage to prune, never
+state to restore. The whole loop runs on driver-side ``os`` calls and
+DataFrame I/O — no JVM filesystem gateway, so it also runs under Spark
+Connect.
 
 OWNERSHIP (the streaming/mv.py lesson, ADVICE r7): micro-batch ids are
 checkpoint-scoped, so a fresh checkpoint restarting at 0 would dynamic-
@@ -64,25 +61,19 @@ store content. (1e9 bounds batches-per-epoch, not corpus size.)
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
-    _store_is_pointer,
     _store_trees,
     append_minhash_store,
     heal_minhash_store,
     minhash_features,
     minhash_store_probe,
 )
+from .mv import _owner_id
 
 _EPOCH_SPAN = 1_000_000_000
-
-
-def _owner_id(checkpoint_dir: str) -> str:
-    return hashlib.md5(str(checkpoint_dir).rstrip("/").encode()).hexdigest()[:16]
 
 
 def _read_stream_meta(spark: SparkSession, store_path: str):
@@ -101,27 +92,12 @@ def _write_stream_meta(spark: SparkSession, store_path: str, owner: str, epoch: 
     ).write.mode("overwrite").parquet(f"{store_path}/stream")
 
 
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    from .mv import _fs  # Connect-safe JVM-gateway access, one helper (r9)
+def _features_present(store_path: str) -> bool:
+    """Has this store ingested anything yet? The live features tree
+    appears with the first append."""
+    import os
 
-    fs, jpath, _ = _fs(spark, path)
-    return bool(fs.exists(jpath))
-
-
-def _features_present(spark: SparkSession, store_path: str) -> bool:
-    """Has this store ingested anything yet? Resolves the live features
-    tree under either publish mode. The pointer mode probes with
-    driver-side ``os`` (its pointer/heal machinery is os-level
-    throughout, like the per-bucket MVCC MV sink — which also makes the
-    whole pointer-store ingest loop run without the JVM filesystem
-    gateway, i.e. under Spark Connect); the swap mode keeps the Hadoop
-    FileSystem probe it has always used."""
-    feats_dir, _ = _store_trees(store_path)
-    if _store_is_pointer(store_path):
-        import os
-
-        return os.path.isdir(feats_dir)
-    return _path_exists(spark, feats_dir)
+    return os.path.isdir(_store_trees(store_path)[0])
 
 
 def adopt_minhash_store_stream(
@@ -140,14 +116,11 @@ def adopt_minhash_store_stream(
     derived from the DATA — one past the highest epoch any ingested key
     belongs to — so the re-homed stream still cannot collide with
     anything on disk."""
-    # same blind spot as the ingest loop (ADVICE r9): a torn compaction
-    # hides the entire feature history (swap: in a __old__ sibling;
-    # pointer: behind an unpointed generation), and the data-derived
-    # epoch below would otherwise be computed over nothing
+    # prune a torn compaction's unpointed generation before reading
     heal_minhash_store(store_path)
     owner, epoch = _read_stream_meta(spark, store_path)
     if owner is None:
-        if not _features_present(spark, store_path):
+        if not _features_present(store_path):
             raise ValueError(
                 f"dedup stream: {store_path} has no stream record and no "
                 "ingested history — nothing to adopt (a first run stamps "
@@ -204,19 +177,8 @@ def run_store_dedup_stream(
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # ADVICE r9 (medium): a compaction crash between the features
-        # swap's two renames leaves features/ MISSING with the ONLY copy
-        # of history in a features.__old__* sibling. Every gate below
-        # probes features-exists: the compaction gate would skip (and
-        # with it compact_minhash_store's own internal heal), the
-        # torn-record guard would mistake history-present for absent, and
-        # append_minhash_store would recreate features/ holding only this
-        # batch — after which the NEXT compaction's recover_swap sees
-        # features/ present and deletes the backup as obsolete: permanent
-        # silent loss of the feature history. Heal UNCONDITIONALLY before
-        # anything reads or probes existence (publish-mode-dispatched
-        # since r11: the pointer mode's heal prunes torn generations —
-        # no restore arm, but the exists()-only-after-heal rule stands).
+        # prune a torn compaction's unpointed generation before anything
+        # reads the store
         heal_minhash_store(store_path)
         cur_owner, epoch = _read_stream_meta(spark, store_path)
         if cur_owner is None:
@@ -225,7 +187,7 @@ def run_store_dedup_stream(
             # write), NOT an unowned store — stamping epoch 0 here would
             # be exactly the ingest-key collision the guard exists to
             # prevent (self-review r8). Fail loudly; adopt recovers.
-            if _features_present(spark, store_path):
+            if _features_present(store_path):
                 raise ValueError(
                     f"dedup stream: store {store_path} holds ingested "
                     "history but its stream record is missing (torn "
@@ -247,7 +209,7 @@ def run_store_dedup_stream(
             compact_every
             and batch_id > 0
             and batch_id % compact_every == 0
-            and _features_present(spark, store_path)
+            and _features_present(store_path)
         ):
             # everything strictly below THIS batch's ingest key is
             # committed (docstring) — fold it before we accrete

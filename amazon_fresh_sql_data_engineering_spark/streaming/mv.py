@@ -6,19 +6,22 @@ delta rule, same results, asserted in tests/test_streaming.py).
 State lives in the SINK, not the engine (the streaming/cdc.py pattern):
 each micro-batch reads the published view state, folds its signed delta
 in with ``mv_apply_delta`` (one |MV|+|delta partials| shuffle, never a
-base rescan), and republishes via atomic swap. Engine state is zero and
-the sink parquet is the recoverable state.
+base rescan), and publishes the result as a new snapshot through
+:mod:`..sources.versioned` (immutable ``data/v=N`` behind an atomically
+flipped pointer file). Engine state is zero and the sink is the
+recoverable state. A crash anywhere leaves the previous snapshot
+published; the next batch's heal prunes what never published.
 
 Restart idempotency needs one more move than CDC: a (key, seq) merge is
 naturally idempotent under micro-batch replay, but aggregate FOLDING is
 not — re-applying a delta double-counts. foreachBatch is at-least-once,
 so the published state carries the last folded batch id as a stamp
-column inside the SAME atomically-swapped directory (stamp and data can
-never tear apart), and a replayed batch id is skipped. The one unstamped
-corner — a batch whose fold empties the view entirely — is idempotent by
-algebra: an empty post-state means every group's folded count reached
-<= 0, so replaying that same delta against the empty state drops every
-group again (pytest-asserted).
+column inside the SAME snapshot (stamp and data can never tear apart),
+and a replayed batch id is skipped. The one unstamped corner — a batch
+whose fold empties the view entirely — is idempotent by algebra: an
+empty post-state means every group's folded count reached <= 0, so
+replaying that same delta against the empty state drops every group
+again (pytest-asserted).
 
 OWNERSHIP (ADVICE r7): micro-batch ids are CHECKPOINT-scoped and restart
 at 0 under a fresh checkpoint, so pairing an existing stamped sink with
@@ -32,60 +35,26 @@ re-stamps owner and batch id explicitly, making the double-count /
 swallow decision the operator's, not the replay guard's. A sink that has
 the batch stamp but NO owner column is treated as an operator-seeded
 initial state and adopted on first fold (the documented seeding idiom);
-a sink with neither raises. On the BUCKET-PARTITIONED layout the adoption
-restamps the WHOLE tree once before the first partial fold (ADVICE r8:
-stamping only the touched buckets would accrete mixed per-file schemas,
-making the ownership guard's very column nondeterministic on later
-reads); partitioned-sink reads also use mergeSchema so any legacy mixed
-sink surfaces deterministically. The owner hash is of the checkpoint string
-as given (trailing slashes stripped): use one stable spelling of the
-checkpoint path across restarts.
+a sink with neither raises. On the bucketed layout the adoption stamps
+EVERY bucket before the first partial fold, so no bucket is left
+owner-less for a foreign checkpoint to fold into. The owner hash is of
+the checkpoint string as given (trailing slashes stripped): use one
+stable spelling of the checkpoint path across restarts.
 
-Scale: ``run_mv_maintain_stream`` rewrites the full view state per
-micro-batch — fine while the state is GROUP-grain (|groups| rows, not
-base rows). For a view too big to rewrite per batch,
-``run_mv_maintain_stream_partitioned`` partitions the sink by a stable
-hash-bucket of the grain keys and rewrites ONLY the buckets the batch
-touches (dynamic partition overwrite): the delta collapses to one
-partial row per touched group, so touched buckets are few and untouched
-partitions are not even read, let alone rewritten (byte-identity across
-a fold is pytest-asserted). Tear-proofing is PER-PARTITION stamps plus a
-per-bucket TWO-PHASE SWAP (the committer alone is not enough: dynamic
-overwrite's job commit replaces partitions delete-then-rename, so a
-mid-commit crash could leave a bucket neither old nor new — and a
-"missing" bucket would silently re-fold from empty). Each folded
-bucket's old directory is atomically renamed to a hidden backup before
-the write, and every micro-batch starts with a recovery pass
-(``_recover_buckets``): backup with a live directory => that bucket's
-fold committed, drop the backup; backup without one => it tore, restore
-it. After recovery every bucket is exactly one of {fully old: stamp <
-id, the replay re-folds it from its own rows} or {fully new: stamp =
-id, the replay skips it}, so replays converge from ANY crash point. A
-fold that empties a bucket clears it by dropping the backup without
-writing a replacement — same recovery argument.
+Two layouts; ``read_mv_state`` and ``adopt_mv_sink`` tell them apart on
+disk:
 
-Round 10 adds ``run_mv_maintain_stream_partitioned_mvcc`` — the same
-O(touched-buckets) fold re-based on per-bucket MVCC (each bucket is its
-own pointer table: immutable ``bucket=B/data/v=K`` snapshots behind an
-atomically-flipped ``_LATEST``). It needs NO filesystem renames of live
-data and NO JVM gateway, which makes it simultaneously the object-store
-form (rename-as-copy never touches published state; the flip maps to a
-conditional PUT) and the Spark-Connect-safe form of the scale sink; its
-crash windows are garbage to prune, never state to restore.
+- flat (``run_mv_maintain_stream``): the whole view is one versioned
+  table, rewritten per micro-batch — fine while the state is GROUP-grain
+  (|groups| rows, not base rows);
+- bucketed (``run_mv_maintain_stream_partitioned``): each stable
+  hash-bucket of the grain keys is its own versioned table,
+  ``out_path/bucket=B``, and a fold rewrites ONLY the buckets it touches;
+  untouched buckets are not read, not written, and byte-identical.
 
-Round 11 measured the two forms head-to-head (SCALE.md r11 A/B): the
-MVCC sink is FASTER at every tested bucket grain — 0.89x to 0.68x the
-rename sink's fold time, gap widening with touched buckets — because the
-rename sink's per-bucket exists/rename/delete calls each cross the py4j
-gateway (driver->NameNode RPCs on a cluster) while pointer flips are
-driver-side ``os.replace``. The MVCC form is therefore the DEFAULT
-recommendation at any grain; keep the rename form only when the
-read side requires it: its state is a plain hive-partitioned directory
-any ``spark.read.parquet`` consumer or external catalog reads directly,
-while the MVCC layout needs the pointer-resolving
-:func:`read_mv_state_mvcc`. Choose by read-side interop, not publish
-cost. Steady-state disk amplification of the MVCC sink is 1x
-(superseded snapshots pruned at the flip; pytest-locked).
+Neither layout renames live data or touches the JVM filesystem gateway:
+reads resolve pointers driver-side and hand Spark explicit snapshot
+paths, so both are object-store-safe and Spark-Connect-safe.
 """
 
 from __future__ import annotations
@@ -98,34 +67,36 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.mv import mv_apply_delta, mv_build
-from ..sources.sinks import SWAP_PUBLISH, atomic_swap_write, recover_swap
+from ..sources import versioned as V
 
-#: stamp column: last folded micro-batch id, riding inside the swapped dir
+#: stamp column: last folded micro-batch id, riding inside the snapshot
 _STAMP = "__mv_last_batch"
 #: owner column: hash of the checkpoint location whose batch-id sequence
 #: the stamps belong to (stamps are meaningless under any other checkpoint)
 _OWNER = "__mv_owner"
-#: partition column of the partitioned sink: stable hash-bucket of the keys
+#: bucket column of the bucketed layout: stable hash-bucket of the keys
 _BUCKET = "__mv_bucket"
 
 _RESERVED = (_STAMP, _OWNER, _BUCKET)
+
+#: directory-name prefix of one bucket's versioned table
+_BUCKET_DIR = "bucket="
+#: staging-directory prefix (dot-hidden; never the only copy of anything)
+_STAGE = ".mvstage-"
 
 
 def _owner_id(checkpoint_dir: str) -> str:
     return hashlib.md5(str(checkpoint_dir).rstrip("/").encode()).hexdigest()[:16]
 
 
-def _check_owner(published: DataFrame, owner: str, out_path: str) -> None:
+def _check_owner(published: DataFrame, owner: str, out_path: str) -> bool:
     """Fail loudly when the sink's stamps belong to a different checkpoint
-    (see OWNERSHIP in the module doc). Owner column absent = seeded state,
-    adopted by the caller's next write. Checked via the DISTINCT non-null
-    owners, not an arbitrary ``first()`` row (ADVICE r8): a legacy
-    mixed-schema sink surfaces NULL owners on unrewritten buckets under
-    mergeSchema, and a first() landing on one would spuriously raise —
-    NULL rows are seeded state, adopted as folds touch them."""
+    (see OWNERSHIP in the module doc). Checked via the DISTINCT owners, not
+    an arbitrary ``first()`` row (ADVICE r8). Returns True when some rows
+    carry no owner — operator-seeded state the caller adopts."""
     if _OWNER not in published.columns:
-        return
-    owners = [r[0] for r in published.select(_OWNER).distinct().collect()]
+        return True
+    owners = {r[0] for r in published.select(_OWNER).distinct().collect()}
     foreign = [o for o in owners if o is not None and o != owner]
     if foreign:
         raise ValueError(
@@ -136,13 +107,26 @@ def _check_owner(published: DataFrame, owner: str, out_path: str) -> None:
             "or double-count batches). If the re-home is intentional, "
             "call adopt_mv_sink()."
         )
+    return None in owners
 
 
 def _check_columns(keys: list[str], sums: dict[str, str], op_col: str) -> None:
-    # __mv_bpart is the mvcc sink's scratch staging-partition column
+    # __mv_bpart is the bucketed sink's scratch staging-partition column
     bad = (set(_RESERVED) | {"__mv_bpart"}) & (set(keys) | set(sums) | {op_col})
     if bad:
         raise ValueError(f"mv stream: {sorted(bad)} collide with view columns")
+
+
+def _start(stream: DataFrame, write, checkpoint_dir: str, trigger, block: bool):
+    q = (
+        stream.writeStream.foreachBatch(write)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
+    )
+    if block:
+        q.awaitTermination()
+    return q
 
 
 def run_mv_maintain_stream(
@@ -154,39 +138,24 @@ def run_mv_maintain_stream(
     op_col: str = "__op",
     trigger: dict | None = None,
     block: bool = True,
-    publish=SWAP_PUBLISH,
 ):
-    """Fold a signed-delta stream into a view-state sink. Default trigger is
-    an availableNow drain (blocks until the backlog is consumed); pass e.g.
-    ``trigger={"processingTime": "10 seconds"}, block=False`` for a
-    long-running micro-batch cadence — the returned StreamingQuery is the
-    caller's to stop (VERDICT r8 item 3: the fold/recovery logic is
-    trigger-agnostic, and the cadence tests drive it live).
-
-    ``publish`` selects the state-publication primitive (VERDICT r9 item
-    3): the default ``SWAP_PUBLISH`` republishes via atomic directory
-    rename (POSIX/HDFS); pass ``sinks.POINTER_PUBLISH`` on S3-semantics
-    object stores, where rename is copy+delete — state then lives in
-    immutable snapshot directories behind one atomically-replaced pointer
-    file and there is no torn-swap window to heal. Read the state back
-    with ``read_mv_state(..., publish=<same primitive>)``."""
+    """Fold a signed-delta stream into a flat view-state sink. Default
+    trigger is an availableNow drain (blocks until the backlog is
+    consumed); pass e.g. ``trigger={"processingTime": "10 seconds"},
+    block=False`` for a long-running micro-batch cadence — the returned
+    StreamingQuery is the caller's to stop. Read the state back with
+    :func:`read_mv_state`."""
     _check_columns(keys, sums, op_col)
     owner = _owner_id(checkpoint_dir)
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # heal the publish primitive's crash window before reading: for
-        # the swap that's the two-rename torn window (the read below
-        # would otherwise treat the sink as first-ever and refold from
-        # EMPTY — silent state loss, self-review r9); for the pointer
-        # it's pruning orphan never-published snapshots
-        publish.heal(out_path)
-        published = publish.read_or_none(spark, out_path)
+        V.heal(out_path)
+        published = V.read_or_none(spark, out_path)
         if published is not None:
             # a sink that exists but lacks the stamp is NOT an empty
             # state — treating it as one would silently discard published
-            # aggregates, so fail loudly instead (seeders must stamp; the
-            # narrow try above is only for sink-absent)
+            # aggregates, so fail loudly instead (seeders must stamp)
             if _STAMP not in published.columns:
                 raise ValueError(
                     f"mv stream: sink {out_path} exists without {_STAMP!r} — "
@@ -205,20 +174,13 @@ def run_mv_maintain_stream(
             # widened aggregate types every later fold casts back to)
             cur = mv_build(batch_df.filter(F.lit(False)).drop(op_col), keys, sums)
         new = mv_apply_delta(cur, batch_df, keys, sums, op_col)
-        publish.write(
+        V.write_snapshot(
             new.withColumn(_STAMP, F.lit(batch_id)).withColumn(_OWNER, F.lit(owner)),
             out_path,
+            keep_last=1,
         )
 
-    q = (
-        delta_stream.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
-    if block:
-        q.awaitTermination()
-    return q
+    return _start(delta_stream, _write, checkpoint_dir, trigger, block)
 
 
 def _bucket_col(keys: list[str], num_buckets: int):
@@ -227,96 +189,66 @@ def _bucket_col(keys: list[str], num_buckets: int):
     )
 
 
-#: backup-directory prefix for the partitioned sink's per-bucket two-phase
-#: swap; the LEADING DOT keeps parquet partition discovery from seeing it
-_BAK = ".mvold-"
+def _bucket_dir(out_path: str, b: int) -> str:
+    return f"{out_path}/{_BUCKET_DIR}{b}"
 
 
-def _fs(spark: SparkSession, path: str):
-    """Hadoop FileSystem access through the JVM gateway — the package's one
-    private-API dependency, needed because SparkSession exposes no public
-    filesystem surface and the per-bucket two-phase swap is rename-based.
-    Fails LOUDLY under Spark Connect (VERDICT r8 item 7): Connect sessions
-    carry no ``_jvm``/``_jsc`` gateway, and a silent fallback would drop
-    exactly the crash-recovery the swap exists for."""
-    try:
-        jvm = spark._jvm  # noqa: SLF001 — no public FS API on SparkSession
-        jsc = spark._jsc  # noqa: SLF001
-    except Exception as exc:  # pragma: no cover - exact exc type is version-specific
-        jvm = jsc = None
-        gateway_err = exc
-    else:
-        gateway_err = None
-    if jvm is None or jsc is None:
-        raise NotImplementedError(
-            "streaming sink: Hadoop FileSystem access needs the JVM "
-            "gateway, and this session exposes none (Spark Connect). The "
-            "partitioned MV maintainer's per-bucket two-phase swap and the "
-            "dedup ingest loop's store probes are rename/exists-based — "
-            "run them in a classic session, or use the flat "
-            "run_mv_maintain_stream (atomic directory swap, no FS renames)."
-        ) from gateway_err
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(jsc.hadoopConfiguration()), jpath, jvm
+def _buckets(out_path: str) -> list[int]:
+    if not os.path.isdir(out_path):
+        return []
+    return sorted(
+        int(d[len(_BUCKET_DIR):])
+        for d in os.listdir(out_path)
+        if d.startswith(_BUCKET_DIR)
+    )
 
 
-def _fs_rename(fs, src, dst) -> None:
-    """Hadoop FileSystem.rename signals failure by RETURNING FALSE, not
-    raising (ADVICE r8). A swallowed failed restore would leave a bucket's
-    only state hidden in its backup — the batch re-folds it from empty and
-    a later recovery deletes the backup: silent permanent loss. Raise so a
-    torn filesystem op fails the micro-batch loudly and replays."""
-    if not fs.rename(src, dst):
-        raise IOError(f"mv stream: filesystem rename {src} -> {dst} returned false")
+def _live_dirs(out_path: str, buckets: list[int]) -> list[str]:
+    """Resolved snapshot directories for the given buckets (never-
+    published buckets contribute nothing; an EMPTIED bucket's snapshot is
+    a schema-bearing 0-row parquet, so it contributes schema, not rows)."""
+    dirs = []
+    for b in buckets:
+        bdir = _bucket_dir(out_path, b)
+        v = V.current_version(bdir)
+        if v is not None:
+            dirs.append(V.snapshot_path(bdir, v))
+    return dirs
 
 
-def _fs_delete(fs, p) -> None:
-    """delete() also returns false for already-absent paths, which is the
-    benign TOCTOU against our own exists() probe — raise only when the
-    path still exists after a false return (a genuinely failed delete)."""
-    if not fs.delete(p, True) and fs.exists(p):
-        raise IOError(f"mv stream: filesystem delete {p} returned false")
-
-
-def _recover_buckets(spark: SparkSession, out_path: str) -> None:
-    """Per-bucket crash recovery for the partitioned sink (self-review r8):
-    Spark's dynamic-overwrite job commit replaces partitions one by one,
-    so a mid-commit crash could leave a bucket neither old nor new. The
-    fold therefore RENAMES each to-be-folded bucket directory to a hidden
-    backup before writing (rename is atomic per directory), and this
-    recovery — run at the start of every micro-batch — restores the
-    invariant: a backup whose live directory exists means that bucket's
-    fold committed (drop the backup); a backup without a live directory
-    means it did not (rename it back). After recovery every bucket is
-    exactly one of {fully old, fully new}, which is what the per-bucket
-    stamps need."""
-    fs, root, jvm = _fs(spark, out_path)
-    if not fs.exists(root):
+def _heal_bucketed(out_path: str) -> None:
+    """The bucketed layout's pre-read check and heal: refuse a flat sink
+    or unpointed data at the root, drop staging leftovers, and prune each
+    bucket's never-published snapshots."""
+    if not os.path.isdir(out_path):
         return
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not name.startswith(_BAK):
+    if V.current_version(out_path) is not None:
+        raise ValueError(
+            f"mv stream: {out_path} is a FLAT view-state sink — use "
+            "run_mv_maintain_stream"
+        )
+    V.check_unpointed(out_path, allow=(_BUCKET_DIR,))
+    for d in os.listdir(out_path):
+        if d.startswith(_STAGE):
+            shutil.rmtree(f"{out_path}/{d}", ignore_errors=True)
+    for b in _buckets(out_path):
+        V.heal(_bucket_dir(out_path, b))
+
+
+def _adopt_ownerless_buckets(spark: SparkSession, out_path: str, owner: str) -> None:
+    """Stamp ``owner`` on every bucket whose live snapshot carries no owner
+    column, per-row batch stamps PRESERVED (unlike :func:`adopt_mv_sink`,
+    which resets them — mid-life buckets carry heterogeneous stamps that
+    must survive). Each bucket is republished behind its own flip, so a
+    crash part-way leaves the rest owner-less and the next fold adopts
+    them."""
+    for b in _buckets(out_path):
+        bdir = _bucket_dir(out_path, b)
+        if V.current_version(bdir) is None:
             continue
-        live = jvm.org.apache.hadoop.fs.Path(out_path + "/" + name[len(_BAK):])
-        if fs.exists(live):
-            _fs_delete(fs, st.getPath())  # fold committed; backup obsolete
-        else:
-            _fs_rename(fs, st.getPath(), live)  # fold tore; restore old state
-
-
-def _restamp_partitioned_owner(spark: SparkSession, out_path: str, owner: str) -> None:
-    """Adopt an operator-seeded, owner-less BUCKET-PARTITIONED sink by
-    rewriting the whole tree with ``owner`` stamped on every row, per-row
-    batch stamps PRESERVED (unlike ``adopt_mv_sink``, which resets them —
-    mid-life buckets carry heterogeneous stamps that must survive). One
-    whole-tree swap on the first fold only; every later fold sees a
-    uniform schema and stays O(|touched buckets|). See ADVICE r8: stamping
-    the owner bucket-by-bucket instead would accrete mixed per-file
-    schemas, and plain reads would nondeterministically drop the column
-    (ownership guard silently off) or surface NULL owners."""
-    published = spark.read.option("mergeSchema", "true").parquet(out_path)
-    restamped = published.drop(_OWNER).withColumn(_OWNER, F.lit(owner))
-    atomic_swap_write(restamped, out_path, partition_by=[_BUCKET])
+        df = V.read_snapshot(spark, bdir)
+        if _OWNER not in df.columns:
+            V.write_snapshot(df.withColumn(_OWNER, F.lit(owner)), bdir, keep_last=1)
 
 
 def run_mv_maintain_stream_partitioned(
@@ -330,288 +262,30 @@ def run_mv_maintain_stream_partitioned(
     trigger: dict | None = None,
     block: bool = True,
 ):
-    """Fold a signed-delta stream into a BUCKET-PARTITIONED view-state
-    sink, rewriting only the buckets each micro-batch touches. Default
-    trigger is an availableNow drain; ``trigger``/``block`` as in
-    :func:`run_mv_maintain_stream` for a live micro-batch cadence.
+    """Fold a signed-delta stream into a BUCKETED view-state sink,
+    rewriting only the buckets each micro-batch touches. Default trigger
+    is an availableNow drain; ``trigger``/``block`` as in
+    :func:`run_mv_maintain_stream`.
 
-    The scale path for views too big to republish wholesale (module doc):
-    the sink is ``PARTITIONED BY (__mv_bucket)`` where the bucket is a
-    stable hash of the grain keys, the per-batch read is pruned to the
-    touched buckets (one flat ``isin`` over the partition column — a
-    metadata-sized driver list, at most ``num_buckets`` long), and the
-    write uses dynamic partition overwrite so untouched partitions keep
-    their exact files. ``num_buckets`` is a layout constant of the sink:
-    changing it re-homes groups, so pick it once per view (like a table's
-    bucketing spec) — it bounds the touched-partition rewrite grain, not
-    parallelism.
+    Layout: each hash-bucket of the grain keys is its OWN versioned table
+    — the pointer in ``out_path/bucket=B`` names an immutable snapshot
+    directory ``bucket=B/data/v=K``. A fold writes the touched buckets' NEW
+    snapshots to a dot-hidden staging tree in one clustered job, moves
+    each staged leaf into its bucket's next version slot (nothing
+    references the slot yet, so the move need not be atomic), then flips
+    each bucket's pointer and prunes the superseded snapshot. Untouched
+    buckets: not read, not written, byte-identical. ``num_buckets`` is a
+    layout constant of the sink: changing it re-homes groups, so pick it
+    once per view (like a table's bucketing spec).
 
-    Replay/tear safety is PER PARTITION (module doc): each bucket's rows
-    carry the last batch id folded into that bucket, so a replayed batch
-    skips already-new buckets and re-folds only the old ones; an emptied
-    bucket's directory is deleted after the write (a crash between leaves
-    it old-stamped and the replay re-empties it).
-    """
-    from pyspark.errors import AnalysisException
-
-    _check_columns(keys, sums, op_col)
-    owner = _owner_id(checkpoint_dir)
-    owner_checked = {"sink": False}
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # swap recovery FIRST (a torn adopt/restamp swap means the whole
-        # tree is in a __old__ sibling — without this the fold would
-        # silently rebuild touched buckets from empty), THEN per-bucket
-        # backup recovery inside the restored tree
-        recover_swap(out_path)
-        _recover_buckets(spark, out_path)
-        bd = batch_df.withColumn(_BUCKET, _bucket_col(keys, num_buckets))
-        touched = sorted(
-            r[0] for r in bd.select(_BUCKET).distinct().collect()
-        )  # metadata-sized: <= num_buckets
-        if not touched:
-            return
-        try:
-            # mergeSchema on the FIRST read of each run only (self-review
-            # r9): a legacy mixed-schema sink (pre-r9 partial folds over a
-            # seeded state) must surface __mv_owner deterministically for
-            # the classification below, but footer-merging every file on
-            # EVERY micro-batch taxes the hot path. After the first batch
-            # the sink is either uniform (restamped or our own folds) or a
-            # plain read's two possible outcomes are BOTH handled: schema
-            # includes __mv_owner (absent files read as NULL = seeded,
-            # adopted as folds touch them) or omits it (the owner-missing
-            # arm restamps the whole tree — converging, never wrong).
-            reader = spark.read
-            if not owner_checked["sink"]:
-                reader = reader.option("mergeSchema", "true")
-            published = reader.parquet(out_path)
-        except AnalysisException:
-            published = None
-        if published is not None:
-            if _STAMP not in published.columns or _BUCKET not in published.columns:
-                raise ValueError(
-                    f"mv stream: sink {out_path} is not a stamped "
-                    "bucket-partitioned view state — refusing to fold"
-                )
-            if _OWNER not in published.columns:
-                # operator-seeded owner-less sink (the flat-sink idiom): a
-                # PARTIAL fold would stamp __mv_owner only on the touched
-                # buckets, accreting mixed per-file schemas (ADVICE r8) —
-                # adopt by restamping the WHOLE tree once, stamps preserved,
-                # then fold normally against the uniform state
-                _restamp_partitioned_owner(spark, out_path, owner)
-                published = spark.read.option("mergeSchema", "true").parquet(
-                    out_path
-                )
-            # ownership checked SINK-WIDE once per stream run (a foreign
-            # owner in an untouched bucket is still a refusal — folding
-            # around it would leave a co-owned sink), then over the
-            # TOUCHED buckets only: after the first check the single-writer
-            # contract means only this stream's own stamps land, so the
-            # per-batch cost stays O(|touched|) like the fold itself
-            state_t = published.filter(F.col(_BUCKET).isin(touched))
-            if owner_checked["sink"]:
-                _check_owner(state_t, owner, out_path)
-            else:
-                _check_owner(published, owner, out_path)
-                owner_checked["sink"] = True
-            stamps = {
-                r[_BUCKET]: r["s"]
-                for r in state_t.groupBy(_BUCKET)
-                .agg(F.max(_STAMP).alias("s"))
-                .collect()
-            }
-            fold = [b for b in touched if stamps.get(b) is None or stamps[b] < batch_id]
-            if not fold:
-                return  # full replay: every touched bucket already folded
-            cur = state_t.filter(F.col(_BUCKET).isin(fold)).drop(*_RESERVED)
-        else:
-            fold = touched
-            cur = mv_build(batch_df.filter(F.lit(False)).drop(op_col), keys, sums)
-        delta_f = bd.filter(F.col(_BUCKET).isin(fold)).drop(_BUCKET)
-        new = mv_apply_delta(cur, delta_f, keys, sums, op_col)
-        out = (
-            new.withColumn(_BUCKET, _bucket_col(keys, num_buckets))
-            .withColumn(_STAMP, F.lit(batch_id))
-            .withColumn(_OWNER, F.lit(owner))
-            .persist()  # feeds both the write and the emptied-bucket check
-        )
-        try:
-            # the distinct-collect fully materializes `out` into cache —
-            # required before the renames below, which remove the very
-            # files out's lineage reads (a post-rename cache loss fails
-            # the job cleanly; recovery restores and the replay refolds)
-            present = {r[0] for r in out.select(_BUCKET).distinct().collect()}
-            # per-bucket two-phase swap, phase 1: move each folded
-            # bucket's OLD directory aside atomically (see
-            # _recover_buckets for the crash-window argument)
-            fs, _root, jvm = _fs(spark, out_path)
-            for b in fold:
-                live = jvm.org.apache.hadoop.fs.Path(f"{out_path}/{_BUCKET}={b}")
-                if fs.exists(live):
-                    _fs_rename(
-                        fs,
-                        live,
-                        jvm.org.apache.hadoop.fs.Path(
-                            f"{out_path}/{_BAK}{_BUCKET}={b}"
-                        ),
-                    )
-            (
-                # cluster on the partition column: one writer task per
-                # touched bucket directory instead of tasks x buckets tiny
-                # files (the write_minhash_store small-files lesson)
-                out.repartition(F.col(_BUCKET))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(_BUCKET)
-                .parquet(out_path)
-            )
-            # phase 2: drop the backups — for committed buckets they are
-            # obsolete, and for buckets whose fold ended EMPTY (absent
-            # from `present`) dropping the backup IS the clear. A crash
-            # anywhere in this loop is healed by the next batch's
-            # recovery (live-exists => drop backup; else restore+refold).
-            for b in sorted(fold):
-                bak = jvm.org.apache.hadoop.fs.Path(f"{out_path}/{_BAK}{_BUCKET}={b}")
-                if fs.exists(bak):
-                    _fs_delete(fs, bak)
-        finally:
-            out.unpersist()
-
-    q = (
-        delta_stream.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
-    if block:
-        q.awaitTermination()
-    return q
-
-
-#: per-bucket MVCC sink (pointer-partitioned layout): pointer file name
-_BP_PTR = "_LATEST"
-#: staging-directory prefix (dot-hidden; never the only copy of anything)
-_BP_STAGE = ".mvstage-"
-
-
-def _bp_dir(out_path: str, b: int) -> str:
-    return f"{out_path}/bucket={b}"
-
-
-def _bp_version(bdir: str) -> int | None:
-    """Version the bucket's pointer names, or None for a bucket that has
-    never published."""
-    import json
-
-    try:
-        with open(f"{bdir}/{_BP_PTR}") as f:
-            return int(json.load(f)["version"])
-    except FileNotFoundError:
-        return None
-
-
-def _bp_publish(bdir: str, version: int) -> None:
-    """Atomically flip the bucket's pointer (os.replace locally — the
-    conditional-PUT slot on an object store), then prune superseded
-    snapshots. The flip is the ONLY operation that must be atomic."""
-    import json
-
-    tmp = f"{bdir}/{_BP_PTR}.tmp.{version}"
-    with open(tmp, "w") as f:
-        json.dump({"version": version}, f)
-    os.replace(tmp, f"{bdir}/{_BP_PTR}")
-    data = f"{bdir}/data"
-    if os.path.isdir(data):
-        for d in os.listdir(data):
-            if d.startswith("v=") and int(d[2:]) != version:
-                shutil.rmtree(f"{data}/{d}", ignore_errors=True)
-
-
-def _bp_heal(bdir: str) -> None:
-    """Prune snapshots NEWER than the pointer (staged writes whose publish
-    never happened). Nothing is ever restored: the pointed snapshot stayed
-    live through any crash."""
-    cur = _bp_version(bdir)
-    data = f"{bdir}/data"
-    if not os.path.isdir(data):
-        return
-    for d in os.listdir(data):
-        if d.startswith("v=") and (cur is None or int(d[2:]) > cur):
-            shutil.rmtree(f"{data}/{d}", ignore_errors=True)
-
-
-def _bp_buckets(out_path: str) -> list[int]:
-    if not os.path.isdir(out_path):
-        return []
-    return sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(out_path)
-        if d.startswith("bucket=")
-    )
-
-
-def _bp_live_dirs(out_path: str, buckets: list[int]) -> list[str]:
-    """Resolved snapshot directories for the given buckets (never-
-    published buckets contribute nothing; an EMPTIED bucket's snapshot is
-    a schema-bearing 0-row parquet, so it contributes schema, not rows)."""
-    dirs = []
-    for b in buckets:
-        bdir = _bp_dir(out_path, b)
-        v = _bp_version(bdir)
-        if v is not None:
-            dirs.append(f"{bdir}/data/v={v}")
-    return dirs
-
-
-def run_mv_maintain_stream_partitioned_mvcc(
-    delta_stream: DataFrame,
-    out_path: str,
-    checkpoint_dir: str,
-    keys: list[str],
-    sums: dict[str, str],
-    op_col: str = "__op",
-    num_buckets: int = 64,
-    trigger: dict | None = None,
-    block: bool = True,
-):
-    """The partitioned view-state sink re-based on per-bucket MVCC — the
-    object-store-safe AND Spark-Connect-safe form of
-    :func:`run_mv_maintain_stream_partitioned` (VERDICT r9 item 3 carried
-    to the scale sink).
-
-    Layout: each hash-bucket of the grain keys is its OWN pointer table —
-    ``out_path/bucket=B/_LATEST`` names an immutable snapshot directory
-    ``bucket=B/data/v=K``. A fold writes the touched buckets' NEW
-    snapshots to a dot-hidden staging tree in one clustered job, MOVES
-    each staged leaf into its bucket's next version slot (a staging move:
-    atomicity NOT required — rename-as-copy on an object store is fine
-    here because nothing references the slot yet), then FLIPS each
-    bucket's pointer (``os.replace`` locally, conditional PUT on S3) and
-    prunes the superseded snapshot. Untouched buckets: not read, not
-    written, their snapshot directories byte-identical.
-
-    Crash algebra — strictly simpler than the rename sink's two-phase
-    swap, because nothing is ever restored: old snapshots are immutable
-    until AFTER their replacement is published, so at any crash point
-    every bucket is {flipped: stamp = batch id, the replay skips it} or
-    {not flipped: the OLD snapshot is still live, stamp < batch id, the
-    replay refolds it from its own rows}. Heal = prune unpointed
-    snapshots and staging leftovers — garbage collection, not recovery. A
-    fold that EMPTIES a bucket publishes a schema-bearing 0-ROW snapshot
-    at the bucket's next version behind the same atomic flip (deleting a
-    directory is not atomic; flipping a pointer is — and keeping the
-    schema keeps every reader's snapshot union well-typed), and a replay
-    of that batch re-empties by the same algebra as the flat sink.
-
-    No Hadoop FileSystem gateway anywhere — reads resolve pointer files
-    driver-side and hand Spark the explicit snapshot paths (``_BUCKET``
-    rides as a data column, so "partition pruning" is path selection,
-    stronger than a partition filter). Read the state back with
-    :func:`read_mv_state_mvcc`. Same ownership rules as the other sinks:
-    owner checked sink-wide on the first fold of a run, touched-only
+    Replay safety is PER BUCKET: old snapshots stay live until their
+    replacement is pointed at, so at any crash point every bucket is
+    {flipped: stamp = batch id, the replay skips it} or {not flipped: the
+    OLD snapshot is still live, stamp < batch id, the replay refolds it
+    from its own rows}. A fold that EMPTIES a bucket publishes a
+    schema-bearing 0-ROW snapshot behind the same flip (keeping the schema
+    keeps every reader's snapshot union well-typed). Ownership is checked
+    sink-wide on the first fold of a run and over the touched buckets
     after."""
     _check_columns(keys, sums, op_col)
     owner = _owner_id(checkpoint_dir)
@@ -619,48 +293,26 @@ def run_mv_maintain_stream_partitioned_mvcc(
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if os.path.isdir(out_path):
-            # cross-layout guards: this sink owns the whole directory
-            if os.path.exists(f"{out_path}/{_BP_PTR}"):
-                raise ValueError(
-                    f"mv stream: {out_path} is a flat POINTER sink — the "
-                    "mvcc maintainer buckets it; use run_mv_maintain_stream"
-                )
-            if any(d.startswith(_BUCKET) for d in os.listdir(out_path)):
-                raise ValueError(
-                    f"mv stream: {out_path} is a rename-swap partitioned "
-                    "sink — use run_mv_maintain_stream_partitioned, or "
-                    "rebuild it under the mvcc layout"
-                )
-            if any(d.startswith("part-") for d in os.listdir(out_path)):
-                raise ValueError(
-                    f"mv stream: {out_path} is a flat SWAP sink (root "
-                    "parquet files) — use run_mv_maintain_stream"
-                )
-            # heal: staging leftovers and never-published snapshots are
-            # garbage (never the only copy of anything)
-            for d in os.listdir(out_path):
-                if d.startswith(_BP_STAGE):
-                    shutil.rmtree(f"{out_path}/{d}", ignore_errors=True)
-            for b in _bp_buckets(out_path):
-                _bp_heal(_bp_dir(out_path, b))
+        _heal_bucketed(out_path)
         bd = batch_df.withColumn(_BUCKET, _bucket_col(keys, num_buckets))
         touched = sorted(r[0] for r in bd.select(_BUCKET).distinct().collect())
         if not touched:
             return
-        all_buckets = _bp_buckets(out_path)
-        read_set = (
-            touched if owner_checked["sink"] else sorted(set(all_buckets) | set(touched))
-        )
-        live = _bp_live_dirs(out_path, read_set)
-        if live:
-            published = spark.read.parquet(*live)
-            if _STAMP not in published.columns or _OWNER not in published.columns:
+        # the first fold of a run reads every bucket with merged schemas,
+        # so an owner-less (seeded) bucket anywhere surfaces as NULL owners
+        first = not owner_checked["sink"]
+        live = _live_dirs(out_path, _buckets(out_path) if first else touched)
+        reader = spark.read.option("mergeSchema", str(first).lower())
+        published = reader.parquet(*live) if live else None
+        if published is not None:
+            if _STAMP not in published.columns:
                 raise ValueError(
                     f"mv stream: {out_path} snapshots are not stamped view "
                     "state — refusing to fold"
                 )
-            _check_owner(published, owner, out_path)
+            if _check_owner(published, owner, out_path):
+                _adopt_ownerless_buckets(spark, out_path, owner)
+                published = spark.read.parquet(*_live_dirs(out_path, _buckets(out_path)))
             owner_checked["sink"] = True
             state_t = published.filter(F.col(_BUCKET).isin(touched))
             stamps = {
@@ -684,12 +336,11 @@ def run_mv_maintain_stream_partitioned_mvcc(
             .withColumn(_OWNER, F.lit(owner))
         )
         # ONE clustered job stages every folded bucket's new snapshot
-        # under a dot-hidden tree (one writer task per bucket directory).
-        # partitionBy REMOVES its column from the data files, and the
-        # snapshot reads have no hive discovery to put it back — so the
-        # directory routing uses a scratch COPY and _BUCKET stays a data
-        # column inside every snapshot.
-        stage = f"{out_path}/{_BP_STAGE}{batch_id}"
+        # (one writer task per bucket directory). partitionBy REMOVES its
+        # column from the data files, and snapshot reads have no hive
+        # discovery to put it back — so the routing uses a scratch COPY
+        # and _BUCKET stays a data column inside every snapshot.
+        stage = f"{out_path}/{_STAGE}{batch_id}"
         (
             out.withColumn("__mv_bpart", F.col(_BUCKET))
             .repartition(F.col(_BUCKET))
@@ -703,86 +354,31 @@ def run_mv_maintain_stream_partitioned_mvcc(
             if d.startswith("__mv_bpart=")
         }
         for b in fold:
-            bdir = _bp_dir(out_path, b)
-            cur_v = _bp_version(bdir)
-            next_v = (cur_v or 0) + 1
-            os.makedirs(f"{bdir}/data", exist_ok=True)
+            bdir = _bucket_dir(out_path, b)
             if b in staged:
-                os.rename(f"{stage}/__mv_bpart={b}", f"{bdir}/data/v={next_v}")
+                V.publish_dir(f"{stage}/__mv_bpart={b}", bdir, keep_last=1)
             else:
-                # the fold emptied this bucket: publish a schema-bearing
-                # 0-row snapshot behind the same atomic flip (deleting the
-                # bucket directory would not be atomic, and keeping the
-                # schema keeps every reader's union well-typed)
-                spark.createDataFrame([], out.schema).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(f"{bdir}/data/v={next_v}")
-            _bp_publish(bdir, next_v)
+                # the fold emptied this bucket: a 0-row snapshot keeps the
+                # schema and publishes behind the same atomic flip
+                V.write_snapshot(
+                    spark.createDataFrame([], out.schema).coalesce(1),
+                    bdir,
+                    keep_last=1,
+                )
         shutil.rmtree(stage, ignore_errors=True)
 
-    q = (
-        delta_stream.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
-    if block:
-        q.awaitTermination()
-    return q
+    return _start(delta_stream, _write, checkpoint_dir, trigger, block)
 
 
-def adopt_mv_sink_mvcc(
-    spark: SparkSession,
-    out_path: str,
-    checkpoint_dir: str,
-    last_batch: int = -1,
-) -> None:
-    """Re-home a per-bucket MVCC sink onto a NEW checkpoint — the
-    :func:`adopt_mv_sink` of the mvcc layout. Every bucket's live
-    snapshot is rewritten with the new owner and ``last_batch`` stamp and
-    published as a NEW version behind the usual atomic flip (old
-    snapshots stay live until their replacement is pointed at, so a
-    crash mid-adopt leaves a mix of adopted and unadopted buckets — the
-    unadopted ones still carry the foreign owner and the next fold
-    refuses loudly, exactly the explicit-decision contract adoption
-    exists to enforce; re-run the adopt to finish)."""
-    buckets = _bp_buckets(out_path)
-    if not buckets:
-        raise FileNotFoundError(f"mv stream: no published state at {out_path}")
-    for b in buckets:
-        _bp_heal(_bp_dir(out_path, b))
-    owner = _owner_id(checkpoint_dir)
-    for b in buckets:
-        bdir = _bp_dir(out_path, b)
-        cur_v = _bp_version(bdir)
-        if cur_v is None:
-            continue  # never-published bucket: nothing to adopt
-        df = spark.read.parquet(f"{bdir}/data/v={cur_v}")
-        if _STAMP not in df.columns:
-            raise ValueError(f"mv stream: {bdir} is not a stamped view state")
-        restamped = (
-            df.drop(_STAMP, _OWNER)
-            .withColumn(_STAMP, F.lit(last_batch))
-            .withColumn(_OWNER, F.lit(owner))
-        )
-        next_v = cur_v + 1
-        restamped.coalesce(1).write.mode("overwrite").parquet(
-            f"{bdir}/data/v={next_v}"
-        )
-        _bp_publish(bdir, next_v)
-
-
-def read_mv_state_mvcc(spark: SparkSession, out_path: str) -> DataFrame:
-    """Current state of a per-bucket MVCC sink: resolve every bucket's
-    pointer driver-side, read the named snapshots (emptied buckets are
-    0-row schema-bearing snapshots, so an all-emptied view reads as an
-    EMPTY frame, not an error), strip the meta columns. Raises on a
-    never-written sink."""
-    dirs = _bp_live_dirs(out_path, _bp_buckets(out_path))
-    if not dirs:
-        raise FileNotFoundError(f"mv stream: no published state at {out_path}")
-    df = spark.read.parquet(*dirs)
-    return df.drop(*[c for c in _RESERVED if c in df.columns])
+def _is_flat(out_path: str) -> bool:
+    """Layout of an existing sink: True for flat, False for bucketed.
+    Raises when nothing is published or the path holds unpointed data."""
+    if V.current_version(out_path) is not None:
+        return True
+    if _buckets(out_path):
+        return False
+    V.check_unpointed(out_path)
+    raise FileNotFoundError(f"mv stream: no published state at {out_path}")
 
 
 def adopt_mv_sink(
@@ -791,44 +387,49 @@ def adopt_mv_sink(
     checkpoint_dir: str,
     last_batch: int = -1,
 ) -> None:
-    """Explicitly re-home an existing view-state sink onto a NEW
-    checkpoint: re-stamps every row with the new owner and ``last_batch``
-    (default -1 = the new stream's batch 0 folds next). The operator is
-    asserting that the sink state is correct AS OF before the new
-    stream's first batch — the guard in ``_check_owner`` exists precisely
-    so this assertion is never made implicitly. Works for both the flat
-    and the bucket-partitioned sink layouts.
-    """
-    # a torn swap may be holding the whole tree in a __old__ sibling, and
-    # a torn partitioned fold may be holding a bucket's only copy in a
-    # hidden backup dir — heal both before reading, or the rewrite loses it
-    recover_swap(out_path)
-    _recover_buckets(spark, out_path)
-    # mergeSchema: adoption is exactly where legacy mixed-schema sinks
-    # (pre-r9 partial folds over seeded state) land to get healed
-    published = spark.read.option("mergeSchema", "true").parquet(out_path)
-    if _STAMP not in published.columns:
-        raise ValueError(f"mv stream: {out_path} is not a stamped view state")
+    """Explicitly re-home an existing view-state sink (either layout) onto
+    a NEW checkpoint: re-stamps every row with the new owner and
+    ``last_batch`` (default -1 = the new stream's batch 0 folds next). The
+    operator is asserting that the sink state is correct AS OF before the
+    new stream's first batch — the guard in ``_check_owner`` exists
+    precisely so this assertion is never made implicitly.
+
+    Every table (the flat sink, or each bucket) is republished behind its
+    own flip, so a crash mid-adopt on the bucketed layout leaves a mix of
+    adopted and unadopted buckets — the unadopted ones still carry the
+    foreign owner and the next fold refuses loudly; re-run the adopt to
+    finish."""
     owner = _owner_id(checkpoint_dir)
-    restamped = (
-        published.drop(_STAMP, _OWNER)
-        .withColumn(_STAMP, F.lit(last_batch))
-        .withColumn(_OWNER, F.lit(owner))
-    )
-    if _BUCKET in published.columns:
-        # full rewrite of all partitions via a swap of the whole tree:
-        # adoption is a rare operator action, not the per-batch hot path
-        atomic_swap_write(restamped, out_path, partition_by=[_BUCKET])
+    if _is_flat(out_path):
+        V.heal(out_path)
+        tables = [out_path]
     else:
-        atomic_swap_write(restamped, out_path)
+        _heal_bucketed(out_path)
+        tables = [_bucket_dir(out_path, b) for b in _buckets(out_path)]
+    for t in tables:
+        if V.current_version(t) is None:
+            continue  # never-published bucket: nothing to adopt
+        df = V.read_snapshot(spark, t)
+        if _STAMP not in df.columns:
+            raise ValueError(f"mv stream: {t} is not a stamped view state")
+        restamped = (
+            df.drop(_STAMP, _OWNER)
+            .withColumn(_STAMP, F.lit(last_batch))
+            .withColumn(_OWNER, F.lit(owner))
+        )
+        V.write_snapshot(restamped, t, keep_last=1)
 
 
-def read_mv_state(spark: SparkSession, out_path: str, publish=SWAP_PUBLISH) -> DataFrame:
-    """The current view state (stamp/owner/bucket columns stripped). Pass
-    the same ``publish`` primitive the maintainer ran with — a pointer-
-    published sink resolves through its ``_LATEST`` pointer, not a direct
-    directory read."""
-    df = publish.read_or_none(spark, out_path)
-    if df is None:
-        raise FileNotFoundError(f"mv stream: no published state at {out_path}")
+def read_mv_state(spark: SparkSession, out_path: str) -> DataFrame:
+    """Current view state of either layout (stamp/owner/bucket columns
+    stripped). Pointers resolve driver-side; emptied buckets are 0-row
+    schema-bearing snapshots, so an all-emptied view reads as an EMPTY
+    frame, not an error. Raises on a never-written sink."""
+    if _is_flat(out_path):
+        df = V.read_snapshot(spark, out_path)
+    else:
+        dirs = _live_dirs(out_path, _buckets(out_path))
+        if not dirs:
+            raise FileNotFoundError(f"mv stream: no published state at {out_path}")
+        df = spark.read.parquet(*dirs)
     return df.drop(*[c for c in _RESERVED if c in df.columns])

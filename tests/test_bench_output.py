@@ -163,29 +163,37 @@ def test_adjudicate_symbol_map_is_function_level():
 
 
 def test_symbol_map_sees_default_arg_publish_instances():
-    """ADVICE r10 (low): symbols reached only through a default-argument
-    INSTANCE (``publish=SWAP_PUBLISH``) or duck-typed calls on it
-    (``publish.write``) must still flag — the walker records the
-    instance's class symbol and walks the class's methods, so edits to
-    SwapPublish.write (or helpers behind it, like atomic_swap_write) hit
-    the change map."""
+    """ADVICE r10 (low): two kinds of symbols the bytecode alone never
+    shows must still flag in the change map. (1) Names in DEFAULT-ARGUMENT
+    position (``mod=MERSENNE_P`` in ``_shingle_hashes_np``) are evaluated
+    in the enclosing scope, so the walker harvests them from the AST. (2)
+    Methods called on a package class INSTANCE (``k.sort_col()`` on the
+    ranking ``_Key`` specs) resolve to nothing statically, so the walker
+    records the class and walks its methods."""
     from bench import _query_source_symbols, _symbols_touched
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    from amazon_fresh_sql_data_engineering_spark.streaming.mv import (
-        run_mv_maintain_stream,
+    from amazon_fresh_sql_data_engineering_spark.operators.dedup import (
+        _shingle_hashes_np,
+    )
+    from amazon_fresh_sql_data_engineering_spark.operators.ranking import (
+        global_rank,
     )
 
-    syms = _query_source_symbols(run_mv_maintain_stream, repo)
-    sinks = "amazon_fresh_sql_data_engineering_spark/sources/sinks.py"
-    assert (sinks, "SwapPublish") in syms, sorted(s for f, s in syms if f == sinks)
-    # methods walked: atomic_swap_write hides behind SwapPublish.write
-    assert (sinks, "atomic_swap_write") in syms
-    # an edit to the class (or the helper behind it) therefore intersects;
-    # prefix matching means the bare class symbol hits method-level changes
-    assert _symbols_touched(syms, {sinks: {"SwapPublish.write"}})
-    assert _symbols_touched(syms, {sinks: {"atomic_swap_write"}})
-    assert _symbols_touched(syms, {sinks: {"SwapPublish"}})
+    dedup = "amazon_fresh_sql_data_engineering_spark/operators/dedup.py"
+    assert "MERSENNE_P" not in _shingle_hashes_np.__code__.co_names
+    syms = _query_source_symbols(_shingle_hashes_np, repo)
+    assert (dedup, "MERSENNE_P") in syms, sorted(s for f, s in syms if f == dedup)
+    assert _symbols_touched(syms, {dedup: {"MERSENNE_P"}})
+
+    ranking = "amazon_fresh_sql_data_engineering_spark/operators/ranking.py"
+    syms = _query_source_symbols(global_rank, repo)
+    assert (ranking, "_Key") in syms
+    # methods walked: sort_col is only ever called on _Key instances
+    assert (ranking, "_Key.sort_col") in syms
+    # prefix matching: the bare class symbol hits method-level changes
+    assert _symbols_touched(syms, {ranking: {"_Key.sort_col"}})
+    assert _symbols_touched(syms, {ranking: {"_Key"}})
 
 
 def test_adjudicate_warm_and_position_rules_self_clear(tmp_path):

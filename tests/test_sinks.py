@@ -1,5 +1,6 @@
 """Sink/layout tests: partition pruning, shuffle-free bucketed joins,
-atomic swap semantics — the storage-side 100 TB levers."""
+snapshot publish and compaction swap semantics — the storage-side 100 TB
+levers."""
 
 from __future__ import annotations
 
@@ -68,18 +69,6 @@ def test_analyze_table_populates_stats(spark, sf_dir):
         assert "Statistics" in desc and "rows" in desc["Statistics"]
     finally:
         spark.sql("DROP TABLE IF EXISTS region_stats_t")
-
-
-def test_atomic_swap_write(spark, sf_dir, tmp_path):
-    p = str(tmp_path / "swap_target")
-    region = load_table(spark, sf_dir, "region")
-    sinks.atomic_swap_write(region, p)
-    assert spark.read.parquet(p).count() == 5
-    # swap again with modified data; old data fully replaced
-    sinks.atomic_swap_write(region.filter(F.col("r_regionkey") < 2), p)
-    assert spark.read.parquet(p).count() == 2
-    leftovers = [d for d in os.listdir(tmp_path) if "__tmp__" in d or "__old__" in d]
-    assert not leftovers
 
 
 def test_pipe_clean_publish_partitioned_prunes(spark, sf_dir, tmp_path):
@@ -614,37 +603,31 @@ def test_append_store_rejects_batch_layout(spark, tmp_path):
         )
 
 
-def test_recover_swap_heals_torn_two_rename_window(spark, tmp_path):
-    """self-review r9: atomic_swap_write is TWO renames; a crash between
-    them leaves the final path missing with the only state in a __old__
-    sibling. recover_swap must restore it, drop orphaned __tmp__ writes,
-    and treat old-siblings-next-to-a-live-final as obsolete backups."""
-    import os
-
-    from amazon_fresh_sql_data_engineering_spark.sources.sinks import (
-        atomic_swap_write,
-        recover_swap,
-    )
-
-    path = str(tmp_path / "state")
-    df = spark.createDataFrame([(1, "a")], "id int, v string")
-    atomic_swap_write(df, path)
-    # torn window: final renamed aside, replacement never landed
-    os.rename(path, f"{path}.__old__deadbeef")
-    # plus an orphaned tmp from the interrupted write
-    os.makedirs(f"{path}.__tmp__cafe")
-    assert recover_swap(path) is True
-    assert spark.read.parquet(path).count() == 1
-    assert not os.path.exists(f"{path}.__tmp__cafe")
-    # final present: old sibling is an obsolete backup whose cleanup died
+def test_compact_files_heals_torn_swap(spark, sf_dir, tmp_path):
+    """compact_files replaces a plain directory with two renames through
+    hidden siblings. A crash between them leaves the table only in its
+    ``.compact-old-`` backup: the next compaction must restore it (not
+    read a missing path), drop an orphaned ``.compact-tmp-`` write, and
+    treat a backup next to a live table as obsolete."""
     import shutil
 
-    shutil.copytree(path, f"{path}.__old__feedface")
-    assert recover_swap(path) is False
-    assert not os.path.exists(f"{path}.__old__feedface")
-    assert spark.read.parquet(path).count() == 1
-    # nothing at all: no-op
-    assert recover_swap(str(tmp_path / "never_existed")) is False
+    region = load_table(spark, sf_dir, "region")
+    path = str(tmp_path / "t")
+    region.repartition(4).write.parquet(path)
+    old = str(tmp_path / ".compact-old-t")
+    tmp = str(tmp_path / ".compact-tmp-t")
+    # torn window: table renamed aside, replacement never landed
+    os.rename(path, old)
+    os.makedirs(tmp)
+    assert sinks.compact_files(spark, path)[0] == 4
+    assert spark.read.parquet(path).count() == 5
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+    # table live: a leftover backup is obsolete and dropped
+    shutil.copytree(path, old)
+    sinks.compact_files(spark, path)
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+    assert spark.read.parquet(path).count() == 5
+
 
 
 def test_compact_partitions_rewrites_only_hot_leaves(spark, sf_dir, tmp_path):
@@ -742,56 +725,6 @@ def test_compact_partitions_rewrites_only_hot_leaves(spark, sf_dir, tmp_path):
         sinks.compact_partitions(spark, flat)
 
 
-def test_recover_swap_restores_newest_of_multiple_backups(spark, tmp_path):
-    """ADVICE r9 (low): if more than one __old__ sibling coexists with a
-    missing final path, the NEWEST backup is the published state — and
-    pre-r10 uuid suffixes mean lexicographic order is NOT age order, so
-    recovery must go by mtime. Here the OLDER backup sorts LAST."""
-    import time
-
-    from amazon_fresh_sql_data_engineering_spark.sources.sinks import recover_swap
-
-    path = str(tmp_path / "state")
-    old_v1 = f"{path}.__old__zzzzzzzz"  # older state, lexicographically last
-    old_v2 = f"{path}.__old__aaaaaaaa"  # newer state, lexicographically first
-    spark.createDataFrame([(1, "stale")], "id int, v string").write.parquet(old_v1)
-    time.sleep(0.05)  # strictly order the directory mtimes
-    spark.createDataFrame([(2, "live")], "id int, v string").write.parquet(old_v2)
-    assert recover_swap(path) is True
-    row = spark.read.parquet(path).collect()[0]
-    assert (row["id"], row["v"]) == (2, "live")
-    assert not os.path.exists(old_v1) and not os.path.exists(old_v2)
-
-
-def test_atomic_swap_suffixes_are_monotonic(spark, tmp_path):
-    """r10: swap siblings carry a ns-timestamp suffix so lexicographic
-    order IS age order for anything written from now on (the mtime
-    fallback still covers pre-r10 backups)."""
-    import re
-
-    from amazon_fresh_sql_data_engineering_spark.sources import sinks as S
-
-    stamps = []
-    orig_rename = os.rename
-
-    def spy_rename(src, dst):
-        m = re.search(r"\.__old__([0-9a-f]{16})\.", src + "|" + dst)
-        if m:
-            stamps.append(m.group(1))
-        orig_rename(src, dst)
-
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame([(1,)], "id int")
-    S.atomic_swap_write(df, path)
-    os.rename = spy_rename
-    try:
-        S.atomic_swap_write(df, path)
-        S.atomic_swap_write(df, path)
-    finally:
-        os.rename = orig_rename
-    assert len(stamps) >= 2 and stamps == sorted(stamps)
-
-
 def test_compact_partitions_handles_token_lookalike_partition_values(
     spark, tmp_path
 ):
@@ -816,66 +749,59 @@ def test_compact_partitions_handles_token_lookalike_partition_values(
 
 
 def test_publish_primitive_cross_use_fails_loudly(spark, tmp_path):
-    """Self-review r10: pairing an existing sink with the WRONG publish
-    primitive must raise, not return None — a None reads as 'first-ever
-    batch' to the streaming sinks, which would silently refold published
-    state from empty (the operator-error twin of the torn-swap window)."""
+    """A sink directory holding parquet data but no pointer (a plain write,
+    or a sink from the retired rename-swap publish) must raise, not read
+    as None — a None reads as 'first-ever batch' to the streaming sinks,
+    which would silently refold published state from empty. Pointed sinks
+    and absent paths read normally."""
     import pytest
 
-    from amazon_fresh_sql_data_engineering_spark.sources.sinks import (
-        POINTER_PUBLISH,
-        SWAP_PUBLISH,
-    )
+    from amazon_fresh_sql_data_engineering_spark.sources import versioned as V
 
     df = spark.createDataFrame([(1, "a")], "id int, v string")
-    swap_sink = str(tmp_path / "swap_sink")
-    SWAP_PUBLISH.write(df, swap_sink)
-    with pytest.raises(ValueError, match="SWAP-published"):
-        POINTER_PUBLISH.read_or_none(spark, swap_sink)
+    plain = str(tmp_path / "plain_sink")
+    df.write.parquet(plain)
+    with pytest.raises(ValueError, match=f"no {V._POINTER} pointer"):
+        V.read_or_none(spark, plain)
     ptr_sink = str(tmp_path / "ptr_sink")
-    POINTER_PUBLISH.write(df, ptr_sink)
-    with pytest.raises(ValueError, match="POINTER-published"):
-        SWAP_PUBLISH.read_or_none(spark, ptr_sink)
-    # right pairings still read
-    assert SWAP_PUBLISH.read_or_none(spark, swap_sink).count() == 1
-    assert POINTER_PUBLISH.read_or_none(spark, ptr_sink).count() == 1
-    # absent sinks are None under both
-    assert SWAP_PUBLISH.read_or_none(spark, str(tmp_path / "nope")) is None
-    assert POINTER_PUBLISH.read_or_none(spark, str(tmp_path / "nope2")) is None
+    V.write_snapshot(df, ptr_sink, keep_last=1)
+    assert V.read_or_none(spark, ptr_sink).count() == 1
+    assert V.read_or_none(spark, str(tmp_path / "nope")) is None
+    # a crash before the first flip leaves an unpointed snapshot, which is
+    # not foreign data: heal prunes it and the sink reads as empty
+    V.write_snapshot(df, str(tmp_path / "torn"))
+    os.remove(str(tmp_path / "torn" / V._POINTER))
+    assert V.heal(str(tmp_path / "torn")) is True
+    assert V.read_or_none(spark, str(tmp_path / "torn")) is None
 
 
 def test_pointer_read_rejects_partitioned_swap_sink(spark, tmp_path):
-    """Self-review r10b: the cross-primitive guard must also catch a
-    PARTITIONED swap sink (hive dirs at the root, no part-* files) —
-    otherwise the pointer read returns None and a stateful consumer
-    silently discards it."""
+    """The unpointed-data check also catches a PARTITIONED plain directory
+    (hive dirs at the root, no part-* files) — the layout the retired
+    rename-swap sinks left behind."""
     import pytest
 
-    from amazon_fresh_sql_data_engineering_spark.sources.sinks import (
-        POINTER_PUBLISH,
-        SWAP_PUBLISH,
-    )
+    from amazon_fresh_sql_data_engineering_spark.sources import versioned as V
 
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, g string")
     sink = str(tmp_path / "part_sink")
-    SWAP_PUBLISH.write(df, sink, partition_by=["g"])
-    with pytest.raises(ValueError, match="SWAP-published"):
-        POINTER_PUBLISH.read_or_none(spark, sink)
+    df.write.partitionBy("g").parquet(sink)
+    with pytest.raises(ValueError, match=f"no {V._POINTER} pointer"):
+        V.read_or_none(spark, sink)
 
 
 def test_pointer_read_rejects_underscore_prefixed_partition_swap_sink(
     spark, tmp_path
 ):
     """ADVICE r10 (low): Spark's InMemoryFileIndex admits underscore-
-    prefixed 'name=value' partition dirs — the rename-swap partitioned MV
-    sink's layout is exactly '__mv_bucket=N' — so the pointer primitive's
-    cross-layout guard must count them as swap evidence too, not skip
-    them under the hidden-prefix rule and silently return None."""
+    prefixed 'name=value' partition dirs — the retired rename-swap
+    partitioned MV sink's layout is exactly '__mv_bucket=N' — so the
+    unpointed-data check must count them, not skip them under the
+    hidden-prefix rule and silently return None."""
     import pytest
 
-    from amazon_fresh_sql_data_engineering_spark.sources.sinks import (
-        POINTER_PUBLISH,
-    )
+    from amazon_fresh_sql_data_engineering_spark.sources import versioned as V
+    from amazon_fresh_sql_data_engineering_spark.streaming.mv import read_mv_state
 
     sink = str(tmp_path / "mv_bucket_sink")
     df = spark.createDataFrame(
@@ -884,31 +810,10 @@ def test_pointer_read_rejects_underscore_prefixed_partition_swap_sink(
     df.write.partitionBy("__mv_bucket").parquet(sink)
     # sanity: Spark itself discovers the underscore-prefixed partitions
     assert spark.read.parquet(sink).count() == 2
-    with pytest.raises(ValueError, match="SWAP-published"):
-        POINTER_PUBLISH.read_or_none(spark, sink)
-
-
-def test_recover_swap_prefers_monotonic_suffix_over_mtime(spark, tmp_path):
-    """ADVICE r10 (low): when every backup carries the r10 16-hex-digit
-    ns-stamp suffix, restore order comes from the SUFFIX — exact even when
-    a coarse-granularity filesystem gives both backups the same mtime (or,
-    as forced here, actively misleading mtimes). The mtime fallback stays
-    for legacy uuid-suffixed backups (covered by the multiple-backups
-    test above)."""
-    from amazon_fresh_sql_data_engineering_spark.sources.sinks import recover_swap
-
-    path = str(tmp_path / "state")
-    older = f"{path}.__old__00000000000000aa.abc123"
-    newer = f"{path}.__old__00000000000000ff.def456"
-    spark.createDataFrame([(1, "stale")], "id int, v string").write.parquet(older)
-    spark.createDataFrame([(2, "live")], "id int, v string").write.parquet(newer)
-    # actively mislead mtime: make the OLDER-stamped backup look newest
-    os.utime(older, (2_000_000_000, 2_000_000_000))
-    os.utime(newer, (1_000_000_000, 1_000_000_000))
-    assert recover_swap(path) is True
-    row = spark.read.parquet(path).collect()[0]
-    assert (row["id"], row["v"]) == (2, "live")
-    assert not os.path.exists(older) and not os.path.exists(newer)
+    with pytest.raises(ValueError, match=f"no {V._POINTER} pointer"):
+        V.read_or_none(spark, sink)
+    with pytest.raises(ValueError, match=f"no {V._POINTER} pointer"):
+        read_mv_state(spark, sink)
 
 
 def test_pointer_store_compaction_reader_grace(spark, sf_dir, tmp_path):
@@ -930,7 +835,7 @@ def test_pointer_store_compaction_reader_grace(spark, sf_dir, tmp_path):
         .filter(F.col("doc_id") < 20)
     )
     store = str(tmp_path / "store")
-    D.bootstrap_minhash_store(spark, store, num_prefixes=8, publish="pointer")
+    D.bootstrap_minhash_store(spark, store, num_prefixes=8)
     feats = D.minhash_features(docs, "doc_id", "text", 64, 3, 42)
     D.append_minhash_store(feats, store, 0)
     root = f"{store}/store"
@@ -963,7 +868,7 @@ def test_pointer_store_compaction_reader_grace(spark, sf_dir, tmp_path):
     newest = V.current_version(root)
     assert V.list_versions(root) == [newest]
     # vacuum clears an orphaned pointer tmp (torn _publish litter)
-    litter = f"{root}/_LATEST.tmp.999"
+    litter = f"{root}/{V._POINTER}.tmp.999"
     with open(litter, "w") as fh:
         fh.write("{}")
     V.vacuum(root, keep_last=1)
