@@ -32,6 +32,7 @@ from pyspark.sql.types import ArrayType, LongType
 
 from ..functions.text import tokens
 from ..functions.vectors import cosine_pairs, matrix_dots_udf
+from ..sources.loaders import read_parquet
 
 # Mersenne-31: keeps (a*h + b) < 2^62, so permutation arithmetic never
 # overflows a long even under ANSI mode (a vanilla Spark 4 session has
@@ -1133,7 +1134,7 @@ def _read_manifest(spark, path: str) -> dict:
         t = _pq.read_table(mdir)
         return {c: t.column(c)[0].as_py() for c in t.column_names}
     except Exception:  # noqa: BLE001 — non-local path or unreadable: let Spark decide
-        return spark.read.parquet(mdir).collect()[0].asDict()
+        return read_parquet(spark, mdir).collect()[0].asDict()
 
 
 #: versioned root of an append-layout store: the live index/features trees
@@ -1358,10 +1359,10 @@ def compact_minhash_store(
     folded_ing = F.when(
         F.col("__ingest") < upto_exclusive, stamp
     ).otherwise(F.col("__ingest"))
-    idx = spark.read.parquet(idx_dir).withColumn("__ingest", folded_ing)
+    idx = read_parquet(spark, idx_dir).withColumn("__ingest", folded_ing)
     # one writer per directory (the write_minhash_store clustering rule)
     idx = idx.repartition("band", "__pfx")
-    feats = spark.read.parquet(feats_dir).withColumn("__ingest", folded_ing)
+    feats = read_parquet(spark, feats_dir).withColumn("__ingest", folded_ing)
     feats = feats.repartition("__ingest")
     next_v = V.next_version(root)
     next_dir = V.snapshot_path(root, next_v)
@@ -1465,16 +1466,17 @@ def minhash_store_probe(
     ).withColumn("__pfx", F.pmod(F.xxhash64("bucket"), F.lit(num_prefixes))).persist()
     if pins is not None:
         pins.extend([new_feats, new_bands])
-    # §2.6 overlap: the store-tree reads (schema-inference + partition
-    # discovery driver jobs) are independent of the batch's feature pass —
-    # submit them from a small pool so they run UNDER the touched-collect
-    # job instead of serially after it.
+    # §2.6 overlap: the store-tree reads (partition discovery, plus a
+    # schema-inference job whenever the tree changed since its last read)
+    # are independent of the batch's feature pass — submit them from a
+    # small pool so they run UNDER the touched-collect job instead of
+    # serially after it.
     from concurrent.futures import ThreadPoolExecutor
 
     store_feats_dir, store_idx_dir = _store_trees(path)
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fut_idx = _pool.submit(spark.read.parquet, store_idx_dir)
-        _fut_feats = _pool.submit(spark.read.parquet, store_feats_dir)
+        _fut_idx = _pool.submit(read_parquet, spark, store_idx_dir)
+        _fut_feats = _pool.submit(read_parquet, spark, store_feats_dir)
         touched = [
             (r["band"], r["__pfx"])
             for r in new_bands.select("band", "__pfx").distinct().collect()

@@ -943,34 +943,41 @@ def global_ntile(
 
     SQL NTILE semantics: with N rows the first ``N % n`` tiles get
     ``N // n + 1`` rows, the rest get ``N // n``. Computed from the
-    two-phase global row_number plus the total count, which arrives as a
-    pid-keyed broadcast column (counts x broadcast(counts) re-agg on pid)
-    so the plan — like the rest of the family — contains no
-    single-partition exchange at all. Ordering should be total for
-    deterministic tile assignment.
+    two-phase global row_number plus the total count. Both per-pid
+    scalars — the offset (rows in earlier pids) and the total — come from
+    ONE metadata pass, counts x broadcast(counts) re-aggregated on pid, so
+    the plan — like the rest of the family — contains no single-partition
+    exchange at all. Ordering should be total for deterministic tile
+    assignment.
     """
     keys = _parse_spec(order_cols, descending)
     spec = [k.sort_col() for k in keys]
-    pid_df, counts, offsets = _two_phase(df, keys, num_partitions, pin, cache_key)
+    pid_df, counts, _ = _two_phase(df, keys, num_partitions, pin, cache_key)
     g, t = _LOCAL + "_rn", _TOT
+    # offset and total in one cross of the <= P count rows with itself: the
+    # global scalar arrives as a pid-keyed column (a plain .agg() would plan
+    # Exchange SinglePartition over the P count rows — metadata-sized, but
+    # the family's plan gate bans the node form)
+    other = counts.select(
+        F.col(_PID).alias("__gr_pid_b"), F.col(_CNT).alias("__gr_cnt_b")
+    )
+    meta = (
+        counts.crossJoin(F.broadcast(other))
+        .groupBy(_PID)
+        .agg(
+            F.coalesce(
+                F.sum(F.when(F.col("__gr_pid_b") < F.col(_PID), F.col("__gr_cnt_b"))),
+                F.lit(0),
+            ).alias(_OFF),
+            F.sum("__gr_cnt_b").alias(_TOT),
+        )
+    )
     w = Window.partitionBy(_PID).orderBy(*spec)
     rn = (
         pid_df.withColumn(_LOCAL, F.row_number().over(w))
-        .join(F.broadcast(offsets), _PID)
+        .join(F.broadcast(meta), _PID)
         .withColumn(g, (F.col(_LOCAL) + F.col(_OFF)).cast("bigint"))
     )
-    # per-pid total via the same broadcast idiom as the offsets (cross of
-    # the <= P-row counts with itself, re-agg on pid): the global scalar
-    # arrives as a pid-keyed column with ZERO single-partition exchange —
-    # a plain .agg() would plan Exchange SinglePartition over the P count
-    # rows (metadata-sized, but the family's plan gate bans the node form)
-    all_cnt = counts.select(F.col(_CNT).alias("__gr_cnt_all"))
-    totals = (
-        counts.crossJoin(F.broadcast(all_cnt))
-        .groupBy(_PID)
-        .agg(F.sum("__gr_cnt_all").alias(_TOT))
-    )
-    rn = rn.join(F.broadcast(totals), _PID)
     # integer `div` throughout: double division could mis-round at huge N
     tile = F.expr(
         f"CASE WHEN {g} <= ({t} % {n}) * ({t} div {n} + 1)"

@@ -13,6 +13,8 @@ Two tiers, as any production vector path:
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -273,6 +275,8 @@ def pq_topk(
     and the final top-k is exact squared-L2 on the shortlist — quantization
     error then only costs recall when a true neighbor misses the whole
     shortlist. ``dist`` in the output is the exact distance in that mode.
+    A query vector with a NULL or non-finite component raises
+    ``ValueError`` in that mode.
 
     Execution (r12 rewrite, guide §2.4/§4.2 — same results, one fewer
     corpus-sized shuffle class): codebooks and ADC tables are METADATA
@@ -352,6 +356,16 @@ def pq_topk(
     )
     init = sorted((r["__id"], r["__v"]) for r in meta_rows if r["__id"] < n_codes)
     queries = sorted((r["__id"], r["__v"]) for r in meta_rows if r["__isq"])
+    if rerank > 0:
+        # the rerank stage inlines query vectors as SQL double literals: a
+        # NULL or non-finite component has no literal form (nan/inf would
+        # fail deep in the SQL parser), so reject it here, by name
+        for qid, qv in queries:
+            if qv is None or any(x is None or not math.isfinite(x) for x in qv):
+                raise ValueError(
+                    f"pq_topk: query {qid!r} has a NULL or non-finite vector "
+                    "component; rerank needs finite query vectors"
+                )
     if not init or not queries:
         out_dist = "exact_dist" if rerank > 0 else "approx_dist"
         return e.select(

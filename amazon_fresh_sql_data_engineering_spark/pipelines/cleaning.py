@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cleaning import UUID_RE, clean_text, gen_uuid, is_valid_uuid
 from ..operators.dml import upsert_ignore
+from ..sources.loaders import read_parquet
 
 
 @dataclass(frozen=True)
@@ -251,7 +252,7 @@ def read_cleaned_range(
     """
     n = 7 if grain == "month" else 10
     part_col = f"{date_col}_{grain}"
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     return df.filter(
         (F.col(part_col) >= start[:n])
         & (F.col(part_col) <= end[:n])

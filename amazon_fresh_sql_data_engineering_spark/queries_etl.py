@@ -18,6 +18,7 @@ from .operators import dml
 from .pipelines.normalize import normalize_products
 from .registry import dec, fin, register
 from .registry import tables as _t
+from .sources.loaders import read_parquet
 
 
 def _fence(df):
@@ -49,7 +50,7 @@ def _staged_parquet(spark, key: str, build):
         ("staged", key),
         lambda d: build().write.mode("overwrite").parquet(f"{d}/data"),
     )
-    return spark.read.parquet(f"{path}/data")
+    return read_parquet(spark, f"{path}/data")
 
 
 def prestage_fixtures(spark, sf_dir: str) -> None:
@@ -1278,7 +1279,7 @@ def q_ctas_roundtrip(spark, sf_dir):
         ctas_partitioned(
             _t(spark, sf_dir, "orders"), path, ["o_orderpriority"]
         )
-        back = spark.read.parquet(path).filter(
+        back = read_parquet(spark, path).filter(
             F.col("o_orderpriority") == "1-URGENT"
         )
         out = back.groupBy("o_orderstatus").agg(
@@ -1356,7 +1357,7 @@ def q_zorder_roundtrip(spark, sf_dir):
             num_files=16,
             file_split="fixed",
         )
-        back = spark.read.parquet(path).filter(
+        back = read_parquet(spark, path).filter(
             (F.col("l_shipdate") >= F.to_date(F.lit("1997-01-01")))
             & (F.col("l_shipdate") < F.to_date(F.lit("1997-07-01")))
             & F.col("l_partkey").between(40, 160)
@@ -1470,8 +1471,8 @@ def q_compaction_roundtrip(spark, sf_dir):
             fa, fb = pool.submit(tier_partitioned), pool.submit(tier_flat)
             fa.result(), fb.result()
 
-        out = agg(spark.read.parquet(part).select(o.columns), "partitioned").unionAll(
-            agg(spark.read.parquet(flat), "flat")
+        out = agg(read_parquet(spark, part).select(o.columns), "partitioned").unionAll(
+            agg(read_parquet(spark, flat), "flat")
         )
         return out.localCheckpoint(eager=True)
     finally:

@@ -49,11 +49,15 @@ def ensure_engine_confs(spark: SparkSession) -> None:
     """Pin the semantics-critical confs on whatever session the caller
     (e.g. the external driver) hands us. The engine's contract is
     PG-compatible cast-to-NULL (ANSI off, SURVEY §4 trap 2), CORRECTED
-    date parsing, and UTC timestamps for oracle determinism."""
+    date parsing, and UTC timestamps for oracle determinism. The events
+    table's TIMESTAMP(NANOS) needs nanosAsLong (``loaders.read_events_raw``);
+    pinning it here rather than at the first events read keeps the parquet
+    inference confs, part of the schema-memo key, the same for every read."""
     for k, v in [
         ("spark.sql.ansi.enabled", "false"),
         ("spark.sql.legacy.timeParserPolicy", "CORRECTED"),
         ("spark.sql.session.timeZone", "UTC"),
+        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
     ]:
         try:
             spark.conf.set(k, v)

@@ -22,6 +22,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .loaders import read_parquet
+
 
 def ctas(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """CREATE TABLE AS SELECT -> parquet directory (ref T:242-247 CTAS
@@ -163,7 +165,7 @@ def compact_files(
     files_before = len(parts)
     total_bytes = sum(os.path.getsize(p) for p in parts)
     n_out = max(1, (total_bytes + target_file_bytes - 1) // target_file_bytes)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if zorder_by:
         from .layout import zorder_frame
 
@@ -262,7 +264,7 @@ def compact_partitions(
         before += len(parts)
         total_bytes = sum(os.path.getsize(p) for p in parts)
         n_out = max(1, (total_bytes + target_file_bytes - 1) // target_file_bytes)
-        df = spark.read.parquet(leaf)
+        df = read_parquet(spark, leaf)
         if sort_within_by:
             out = df.repartitionByRange(int(n_out), *sort_within_by)
             out = out.sortWithinPartitions(*sort_within_by)

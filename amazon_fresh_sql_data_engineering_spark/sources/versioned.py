@@ -42,6 +42,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .loaders import read_parquet
+
 _POINTER = "_LATEST"
 _DATA = "data"
 
@@ -129,7 +131,7 @@ def read_snapshot(
     path = snapshot_path(table_dir, v)
     if not os.path.isdir(path):
         raise FileNotFoundError(f"snapshot v={v} not on disk (vacuumed?)")
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def check_unpointed(table_dir: str, allow: tuple[str, ...] = ()) -> None:

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.loaders import read_parquet
 from .events import upsert_sink_foreach_batch
 
 
@@ -39,7 +40,7 @@ def fingerprint(text_col: str = "text") -> "F.Column":
 def stream_documents_from_parquet(spark: SparkSession, docs_dir: str) -> DataFrame:
     """readStream over a documents parquet directory (file-source
     streaming; schema taken from a static read, never inferred)."""
-    static = spark.read.parquet(docs_dir)
+    static = read_parquet(spark, docs_dir)
     return spark.readStream.schema(static.schema).parquet(docs_dir)
 
 
@@ -133,7 +134,7 @@ def run_corpus_neardup_upsert(
             .withColumn("__h", F.coalesce("__h", F.array().cast(h_t)))
         )
         try:
-            published = spark.read.parquet(out_path).select(id_col, "__sig", "__h")
+            published = read_parquet(spark, out_path).select(id_col, "__sig", "__h")
         except AnalysisException:
             published = None  # first batch: nothing published yet
         if published is not None:

@@ -71,6 +71,7 @@ from ..operators.dedup import (
     minhash_features,
     minhash_store_probe,
 )
+from ..sources.loaders import read_parquet
 from .mv import _owner_id
 
 _EPOCH_SPAN = 1_000_000_000
@@ -80,7 +81,7 @@ def _read_stream_meta(spark: SparkSession, store_path: str):
     from pyspark.errors import AnalysisException
 
     try:
-        row = spark.read.parquet(f"{store_path}/stream").collect()[0]
+        row = read_parquet(spark, f"{store_path}/stream").collect()[0]
         return row["owner"], row["epoch"]
     except AnalysisException:
         return None, None
@@ -127,7 +128,7 @@ def adopt_minhash_store_stream(
                 "itself)"
             )
         max_ingest = (
-            spark.read.parquet(_store_trees(store_path)[0])
+            read_parquet(spark, _store_trees(store_path)[0])
             .agg(F.max("__ingest"))
             .first()[0]
         )
@@ -214,7 +215,7 @@ def run_store_dedup_stream(
             # everything strictly below THIS batch's ingest key is
             # committed (docstring) — fold it before we accrete
             compact_minhash_store(spark, store_path, ingest)
-        m = spark.read.parquet(f"{store_path}/manifest").collect()[0]
+        m = read_parquet(spark, f"{store_path}/manifest").collect()[0]
         feats = minhash_features(
             batch_df, id_col, text_col, m["num_hashes"], m["k"], m["seed"]
         ).persist()
@@ -264,4 +265,4 @@ def run_store_dedup_stream(
 
 def read_dedup_pairs(spark: SparkSession, pairs_path: str) -> DataFrame:
     """All pairs emitted so far (the ``__ingest`` batch key stripped)."""
-    return spark.read.parquet(pairs_path).drop("__ingest")
+    return read_parquet(spark, pairs_path).drop("__ingest")

@@ -14,10 +14,13 @@ lag+cumsum formulation (deterministic, oracle-checkable); streaming uses
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import dec
+from ..sources.loaders import events_ts, read_events_raw, read_parquet, table_path
 
 
 def hourly_rollup(events: DataFrame) -> DataFrame:
@@ -86,18 +89,21 @@ def sessionize_stream(events: DataFrame, gap_minutes: int = 5) -> DataFrame:
     )
 
 
-def stream_events_from_parquet(
-    spark: SparkSession, sf_dir: str, schema=None
-) -> DataFrame:
-    """readStream over the events parquet (file-source streaming). The
-    nanos timestamp is read as long (nanosAsLong) and converted, same as
-    the batch loader."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = spark.readStream.schema(static.schema).parquet(f"{sf_dir}")
-    if dict(static.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return stream
+def stream_events_from_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """readStream over the events parquet (file-source streaming): the
+    events file only, with the batch loader's static schema and its
+    nanos -> micros ``ts`` conversion (``sources.loaders.events_ts``)."""
+    path = table_path(sf_dir, "events")
+    reader = spark.readStream.schema(read_events_raw(spark, sf_dir).schema)
+    if os.path.isdir(path):
+        return events_ts(reader.parquet(path))
+    # a file source streams directories: take the table's directory, keep
+    # only the events file
+    return events_ts(
+        reader.option("pathGlobFilter", os.path.basename(path)).parquet(
+            os.path.dirname(path)
+        )
+    )
 
 
 def run_stream_to_memory(
@@ -212,7 +218,7 @@ def upsert_sink_foreach_batch(out_path: str, keys: list[str]):
         spark = batch_df.sparkSession
         batch = batch_df.dropDuplicates(keys)
         try:
-            existing = spark.read.parquet(out_path).select(*keys).distinct()
+            existing = read_parquet(spark, out_path).select(*keys).distinct()
             batch = batch.join(existing, keys, "left_anti")
         except AnalysisException:
             pass  # first batch: sink path doesn't exist yet

@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 
 from ..operators.mv import mv_apply_delta, mv_build
 from ..sources import versioned as V
+from ..sources.loaders import read_parquet
 
 #: stamp column: last folded micro-batch id, riding inside the snapshot
 _STAMP = "__mv_last_batch"
@@ -302,8 +303,9 @@ def run_mv_maintain_stream_partitioned(
         # so an owner-less (seeded) bucket anywhere surfaces as NULL owners
         first = not owner_checked["sink"]
         live = _live_dirs(out_path, _buckets(out_path) if first else touched)
-        reader = spark.read.option("mergeSchema", str(first).lower())
-        published = reader.parquet(*live) if live else None
+        published = (
+            read_parquet(spark, *live, mergeSchema=str(first).lower()) if live else None
+        )
         if published is not None:
             if _STAMP not in published.columns:
                 raise ValueError(
@@ -312,7 +314,7 @@ def run_mv_maintain_stream_partitioned(
                 )
             if _check_owner(published, owner, out_path):
                 _adopt_ownerless_buckets(spark, out_path, owner)
-                published = spark.read.parquet(*_live_dirs(out_path, _buckets(out_path)))
+                published = read_parquet(spark, *_live_dirs(out_path, _buckets(out_path)))
             owner_checked["sink"] = True
             state_t = published.filter(F.col(_BUCKET).isin(touched))
             stamps = {
@@ -431,5 +433,5 @@ def read_mv_state(spark: SparkSession, out_path: str) -> DataFrame:
         dirs = _live_dirs(out_path, _buckets(out_path))
         if not dirs:
             raise FileNotFoundError(f"mv stream: no published state at {out_path}")
-        df = spark.read.parquet(*dirs)
+        df = read_parquet(spark, *dirs)
     return df.drop(*[c for c in _RESERVED if c in df.columns])

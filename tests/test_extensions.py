@@ -1093,3 +1093,21 @@ def test_compact_minhash_store_preserves_probe_results(spark, docs, tmp_path):
     )
     with pytest.raises(ValueError, match="batch-layout"):
         D.compact_minhash_store(spark, bpath, 1)
+
+
+@pytest.mark.parametrize(
+    "bad", [None, float("nan"), float("inf")], ids=["null", "nan", "inf"]
+)
+def test_pq_rerank_rejects_non_finite_query_vector(spark, bad):
+    """Rerank inlines query vectors as SQL double literals; a NULL or
+    non-finite component must fail loudly up front, not in the parser."""
+    from amazon_fresh_sql_data_engineering_spark.operators.similarity import pq_topk
+
+    rows = [(i, [float(i), 1.0, 2.0, float(-i)]) for i in range(8)]
+    rows[5] = (5, [bad, 1.0, 2.0, 3.0])
+    corpus = spark.createDataFrame(rows, "id int, v array<double>")
+    with pytest.raises(ValueError, match="NULL or non-finite"):
+        pq_topk(
+            corpus, "id", "v", lambda c: c == 5,
+            k=2, n_subspaces=2, sub_dim=2, n_codes=2, rerank=3,
+        )

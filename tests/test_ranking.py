@@ -789,3 +789,25 @@ def test_probe_cache_user_key_bridges_checkpoint_fences(spark):
     assert R.probe_cache_stats()["entries"] >= 2
     R.clear_probe_cache()
     spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize("n_rows", [1, 2, 3, 7, 100, 1001])
+def test_ntile_grid_matches_native(spark, n_rows):
+    """The one-pass offset+total metadata build against native NTILE over
+    every remainder shape: rows < n, rows == n, rows % n != 0, and pid
+    counts from the adaptive default up to more pids than rows."""
+    df = spark.range(n_rows).select(
+        F.col("id").cast("int").alias("id"), (F.col("id") * 7 % 5).cast("int").alias("v")
+    )
+    w = Window.orderBy("v", "id")
+    ns = (1, 3, 4, 10)
+    exp_rows = df.select("id", *[F.ntile(n).over(w).alias(f"t{n}") for n in ns]).collect()
+    exp = {n: {(r.id, r[f"t{n}"]) for r in exp_rows} for n in ns}
+    spec = [F.col("v").asc(), F.col("id").asc()]
+    bad = []
+    for parts in (None, 2, 5, 16):
+        for n in ns:
+            got = global_ntile(df, n, spec, "t", num_partitions=parts)
+            if {(r.id, r.t) for r in got.collect()} != exp[n]:
+                bad.append((n, parts))
+    assert bad == []

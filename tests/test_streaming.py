@@ -5,13 +5,16 @@ batch test can't show)."""
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from amazon_fresh_sql_data_engineering_spark.sources.loaders import load_table
 from amazon_fresh_sql_data_engineering_spark.streaming.events import (
     hourly_rollup,
     sliding_rollup,
+    stream_events_from_parquet,
 )
 
 TS = datetime.datetime  # all naive UTC
@@ -2119,3 +2122,29 @@ def test_store_compaction_crash_injection_converges(
     assert stamps() == new
     assert V.list_versions(root) == [V.current_version(root)]
     assert probe() == want_pairs
+
+
+@pytest.mark.parametrize("layout", ["file", "dir"])
+def test_events_stream_reads_only_the_events_table(spark, sf_dir, tmp_path, layout):
+    """The file-source stream over the events table yields exactly the
+    batch loader's rows and types: no rows from the other tables sharing
+    the directory (which surfaced as NULL event_id rows). ``dir`` is the
+    layout Spark-written (scaled) inputs have: events.parquet/part-*."""
+    import shutil
+
+    src = sf_dir
+    if layout == "dir":
+        src = str(tmp_path / "sf")
+        os.makedirs(f"{src}/events.parquet")
+        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet/part-0.parquet")
+        shutil.copy(f"{sf_dir}/orders.parquet", f"{src}/orders.parquet")
+    stream = stream_events_from_parquet(spark, src)
+    name = f"events_stream_rows_{layout}"
+    q = stream.writeStream.format("memory").queryName(name).trigger(availableNow=True).start()
+    q.awaitTermination()
+    got = spark.table(name)
+    exp = load_table(spark, sf_dir, "events")
+    assert got.dtypes == exp.dtypes
+    assert got.count() == exp.count()
+    assert got.filter(F.col("event_id").isNull()).count() == 0
+    assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
