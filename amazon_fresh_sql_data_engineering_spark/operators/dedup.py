@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from .. import fence
 from ..functions.text import tokens
 from ..functions.vectors import cosine_pairs, matrix_dots_udf
 from ..sources.loaders import read_parquet
@@ -325,7 +326,7 @@ def minhash_lsh_candidates(
     no crossJoin anywhere. Signatures are persisted first: CollapseProject
     would otherwise inline the signature UDF into EVERY band's bucket hash.
     """
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, k, seed).persist()
+    sig = fence.persist(minhash_signatures(df, id_col, text_col, num_hashes, k, seed))
     return _candidates_from_sig(sig, num_hashes, bands)
 
 
@@ -339,7 +340,6 @@ def minhash_incremental_pairs(
     bands: int = 16,
     k: int = 3,
     seed: int = 42,
-    pins: list | None = None,
 ) -> DataFrame:
     """Incremental near-dedup: new-batch documents vs an EXISTING MinHash
     feature store, without recomputing (or even reading the text of) the
@@ -372,13 +372,6 @@ def minhash_incremental_pairs(
     Nothing rescans corpus text; the verify joins shingle arrays already
     sitting in the two feature frames.
 
-    The batch features are persisted for the duration of the plan (the
-    band join and the verify both read them). Long-lived callers probing
-    many batches should release the pin per batch: pass ``pins`` (a list;
-    every frame this call persists is appended) and ``unpersist()`` each
-    after consuming the result (ADVICE r6 — the pin is evictable, so a
-    leak degrades to recompute, never to wrong results, but it is a leak).
-
     Broadcast hints were MEASURED AND DECLINED here (r12): unlike the
     on-disk probe — whose store side is a pruned index SCAN that broadcast
     hints keep exchange-free — this path's store bands are a computed
@@ -387,15 +380,11 @@ def minhash_incremental_pairs(
     an interleaved A/B at sf0.1 (med 3.6 -> 4.1 s). The shuffled joins
     stay.
     """
-    new_feats = minhash_features(batch_docs, id_col, text_col, num_hashes, k, seed).persist()
-    if pins is not None:
-        pins.append(new_feats)
+    new_feats = fence.persist(minhash_features(batch_docs, id_col, text_col, num_hashes, k, seed))
     new_sig = new_feats.select("__id", "__sig")
     new_bands = _bands_from_sig(new_sig, num_hashes, bands)
     store_bands = _bands_from_sig(store_features.select("__id", "__sig"), num_hashes, bands)
-    return _incremental_verify(
-        store_features, new_feats, new_bands, store_bands, threshold, pins=pins
-    )
+    return _incremental_verify(store_features, new_feats, new_bands, store_bands, threshold)
 
 
 def _incremental_verify(
@@ -406,7 +395,6 @@ def _incremental_verify(
     threshold: float,
     broadcast_new: bool = False,
     max_broadcast_candidates: int = 2_000_000,
-    pins: list | None = None,
 ) -> DataFrame:
     """Candidate generation + exact-Jaccard verify shared by the in-memory
     (`minhash_incremental_pairs`) and on-disk (`minhash_store_probe`)
@@ -448,9 +436,7 @@ def _incremental_verify(
         .distinct()
     )
     if broadcast_new:
-        cross = cross.persist()
-        if pins is not None:
-            pins.append(cross)
+        cross = fence.persist(cross)
         cand_b = (
             F.broadcast
             if cross.count() <= max_broadcast_candidates
@@ -550,7 +536,7 @@ def minhash_dedup_pairs(
     on 31-bit shingle-hash arrays instead of shingle strings makes the
     intersection a long-array compare (~5x cheaper) with identical Jaccard
     barring within-pair collisions (~1e-6 at these set sizes)."""
-    feats = minhash_features(df, id_col, text_col, num_hashes, k, seed).persist()
+    feats = fence.persist(minhash_features(df, id_col, text_col, num_hashes, k, seed))
     cands = _candidates_from_sig(feats.select("__id", "__sig"), num_hashes, bands)
     sh = feats.select("__id", "__h")
     return (
@@ -591,8 +577,7 @@ def ngram_inverted_index(
     branch (the jaccard self-join reads it twice) otherwise re-run the
     scan + Arrow shingle pass per branch — the fence is one row per doc
     (array column), far smaller than the exploded index, and at 100 TB it
-    is the difference between one and two full corpus reads. The caller
-    owns the cache's lifetime (unpersist / clearCache when done)."""
+    is the difference between one and two full corpus reads."""
 
     @pandas_udf(ArrayType(LongType()))
     def _shs(texts: pd.Series) -> pd.Series:
@@ -607,7 +592,7 @@ def ngram_inverted_index(
         _shs(F.col(text_col)).alias("__sh"),
     ).filter(F.size("__sh") > 0)
     if persist_shingles:
-        sh = sh.persist()
+        sh = fence.persist(sh)
     inv = sh.select(
         *block_cols,
         F.col("__id"),
@@ -665,13 +650,7 @@ def ngram_jaccard_pairs(
     Shingles are hashed to int64 (the same vectorized UDF as
     ``minhash_features`` — the JVM transform/slice/concat_ws shingling runs
     interpreted at ~1 ms/doc); full-width hashes keep Jaccard identical to
-    string shingles at ~2^-63 collision odds.
-
-    NOTE: the ``max_df`` path persists the kept inverted index (it feeds
-    three plan branches whose lineage contains the Arrow shingle UDF) and
-    leaves it cached for the lazy result's lifetime — call
-    ``spark.catalog.clearCache()`` (or unpersist) between many invocations
-    in one long-lived session."""
+    string shingles at ~2^-63 collision odds."""
 
     if max_df is None:
         # fast path: __n is computed in the pre-explode projection (free),
@@ -716,9 +695,9 @@ def ngram_jaccard_pairs(
         # shuffle on the same (block, shingle) key, so the extra cache
         # write buys nothing; only the fast path's alias-divergent
         # self-join benefits from the doc-level fence)
-        kept = ngram_inverted_index(
+        kept = fence.persist(ngram_inverted_index(
             df, id_col, text_col, block_cols, k=k, max_df=max_df, include_sizes=False
-        ).persist()
+        ))
         sizes = kept.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
         a = kept.select(*block_cols, F.col("__s"), F.col("__id").alias("id_a"))
         b = kept.select(*block_cols, F.col("__s"), F.col("__id").alias("id_b"))
@@ -854,7 +833,7 @@ def connected_components(
     # the pair frame is usually the tail of an expensive lineage (feature
     # UDF pass + LSH joins + verify); this function fires 2+ actions on it
     # (size probe, collect/edge build), so persist once up front
-    pairs = pairs.select("id_a", "id_b").persist()
+    pairs = fence.persist(pairs.select("id_a", "id_b"))
     # ONE action decides the path AND fetches the edges (r11 opt: the old
     # limit().count() + collect() pair cost two sequential jobs over the
     # same cache): limit(threshold+1) returns EVERY edge when the graph is
@@ -864,7 +843,7 @@ def connected_components(
     # arbitrary order is harmless.
     edges_local = pairs.limit(driver_threshold + 1).collect()
     if len(edges_local) <= driver_threshold:
-        pairs.unpersist()
+        fence.release(pairs)
         parent: dict = {}
 
         def find(x):
@@ -885,20 +864,18 @@ def connected_components(
         rows = [(x, find(x)) for x in parent]
         spark = pairs.sparkSession
         return spark.createDataFrame(rows, "id long, cluster_id long")
-    edges = (
+    edges = fence.persist(  # read every iteration of the propagation loop
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
-        .persist()  # read every iteration of the propagation loop
     )
     edges.count()  # materialize the edge cache, then drop the pair cache:
-    pairs.unpersist()  # the loop only ever reads ``edges`` from here on
+    fence.release(pairs)  # the loop only ever reads ``edges`` from here on
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("cluster_id", F.col("id"))
     )
-    prev_ckpt: DataFrame | None = None
     for it in range(max_iters):
         # every join in this loop is big-big at scale (labels is node-sized,
         # edges is edge-sized): hint shuffle_hash so the optimizer never
@@ -936,7 +913,7 @@ def connected_components(
         # localCheckpoint truncates the lineage each iteration: the doubling
         # self-join would otherwise nest the plan exponentially (driver OOM
         # on plan size by ~iteration 8, measured)
-        new_labels = new_labels.localCheckpoint(eager=True)
+        new_labels = fence.checkpoint(new_labels)
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o").hint("shuffle_hash"), on="id")
@@ -946,38 +923,20 @@ def connected_components(
         )
         # the new checkpoint is materialized and the changed-probe (the last
         # reader of the previous one) has run: free the previous iteration's
-        # checkpoint blocks so repeated calls in one session stay bounded
-        _free_local_checkpoint(prev_ckpt)
-        prev_ckpt = labels = new_labels
+        # checkpoint blocks (the first iteration's seed labels are unpinned)
+        fence.release(labels)
+        labels = new_labels
         LAST_CC_ITERS = it + 1
         if changed == 0:
-            edges.unpersist()
+            fence.release(edges)
             return labels
-    edges.unpersist()
-    _free_local_checkpoint(prev_ckpt)
+    fence.release(edges)
+    fence.release(labels)
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} iterations "
         "(graph diameter > 2^max_iters is implausible for near-dup data — "
         "check the pair generator)"
     )
-
-
-def _free_local_checkpoint(df: DataFrame | None) -> None:
-    """Unpersist the RDD blocks behind a ``localCheckpoint``-ed DataFrame.
-
-    ``DataFrame.unpersist`` goes through the SQL cache manager and does not
-    touch checkpoint RDD storage, so reach the ``LogicalRDD``'s RDD via
-    py4j. Best-effort: on any internal-API change we leak the blocks (the
-    pre-existing behavior) instead of failing the job. Only call this on
-    frames nothing will read again — a freed local checkpoint CANNOT be
-    recomputed.
-    """
-    if df is None:
-        return
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
 
 
 def dedup_corpus(
@@ -1388,7 +1347,6 @@ def minhash_store_probe(
     threshold: float = 0.7,
     max_pruned_terms: int = 4096,
     broadcast_batch: bool = True,
-    pins: list | None = None,
     max_broadcast_candidates: int = 2_000_000,
     batch_features: DataFrame | None = None,
     max_ingest_exclusive: int | None = None,
@@ -1422,13 +1380,6 @@ def minhash_store_probe(
     store-side locality with ``bucketBy(bucket).saveAsTable`` instead, but
     broadcast needs no catalog and also removes the verify-side exchange.)
 
-    The batch features/bands are persisted for the duration of the plan;
-    long-lived callers probing many batches should release the pins per
-    batch: pass ``pins`` (a list; every frame this call persists is
-    appended) and ``unpersist()`` each after consuming the result
-    (ADVICE r6). The pins are evictable, so a leak degrades to recompute,
-    never to wrong results.
-
     ``batch_features`` lets a caller that ALREADY computed the batch's
     ``minhash_features`` (the streaming accrete-then-probe loop pays the
     Arrow shingling pass once for both) hand them in; the frame is
@@ -1458,14 +1409,14 @@ def minhash_store_probe(
                 f"signatures but the store manifest says {num_hashes} — "
                 "a mismatched probe would silently miss pairs"
             )
-        new_feats = batch_features.persist()
+        new_feats = fence.persist(batch_features)
     else:
-        new_feats = minhash_features(batch_docs, id_col, text_col, num_hashes, k, seed).persist()
-    new_bands = _bands_from_sig(
+        new_feats = fence.persist(
+            minhash_features(batch_docs, id_col, text_col, num_hashes, k, seed)
+        )
+    new_bands = fence.persist(_bands_from_sig(
         new_feats.select("__id", "__sig"), num_hashes, bands
-    ).withColumn("__pfx", F.pmod(F.xxhash64("bucket"), F.lit(num_prefixes))).persist()
-    if pins is not None:
-        pins.extend([new_feats, new_bands])
+    ).withColumn("__pfx", F.pmod(F.xxhash64("bucket"), F.lit(num_prefixes))))
     # §2.6 overlap: the store-tree reads (partition discovery, plus a
     # schema-inference job whenever the tree changed since its last read)
     # are independent of the batch's feature pass — submit them from a
@@ -1509,6 +1460,6 @@ def minhash_store_probe(
         )
     return _incremental_verify(
         store_features, new_feats, new_bands, idx, threshold,
-        broadcast_new=broadcast_batch, pins=pins,
+        broadcast_new=broadcast_batch,
         max_broadcast_candidates=max_broadcast_candidates,
     )

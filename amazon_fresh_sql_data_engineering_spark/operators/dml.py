@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import fence
+
 
 def update_where(df: DataFrame, predicate: Column, assignments: dict[str, Column]) -> DataFrame:
     """``UPDATE t SET col = expr, ... WHERE pred`` (ref T:470-480, A:51-53,
@@ -162,8 +164,8 @@ def scd2_apply(
         changed_pred = changed_pred | ~F.col(f"c.{t}").eqNullSafe(F.col(f"u.{t}"))
     # persist: three consumers below (close, new-version, unchanged anti-join)
     # would otherwise each recompute the change-detection join
-    changed_keys = (
-        open_rows.alias("c").join(upd.alias("u"), on=key).filter(changed_pred).persist()
+    changed_keys = fence.persist(
+        open_rows.alias("c").join(upd.alias("u"), on=key).filter(changed_pred)
     )
 
     closing = changed_keys.select(

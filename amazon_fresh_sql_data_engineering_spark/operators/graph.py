@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import fence
+
 
 def triangle_count(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts over an undirected graph given as
@@ -56,14 +58,13 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     # pays thousands of no-op tasks; the eager checkpoint materializes
     # with AQE-coalesced partitioning and truncates lineage (the
     # dedup.connected_components discipline).
-    und = (
+    und = fence.checkpoint(
         edges.where(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = (
         und.select(F.col("a").alias("node"))
@@ -80,7 +81,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     a_first = (F.col("deg_a") < F.col("deg_b")) | (
         (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
     )
-    oriented = (
+    oriented = fence.checkpoint(  # read 3x: wedge sides + closing probe
         wd.where(a_first)
         .select(
             F.col("a").alias("u"), F.col("b").alias("v"), F.col("deg_b").alias("dv")
@@ -92,7 +93,6 @@ def triangle_count(edges: DataFrame) -> DataFrame:
                 F.col("deg_a").alias("dv"),
             )
         )
-        .localCheckpoint(eager=True)  # read 3x: wedge sides + closing probe
     )
     wedges = (
         oriented.alias("e1")
@@ -135,11 +135,10 @@ def pagerank(
     edges = edges.select(
         F.col("src"), F.col("dst"), F.col("weight").cast("double").alias("w")
     )
-    nodes = (
+    nodes = fence.persist(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
     n = nodes.count()  # scalar action: one number, metadata-sized
     out_w = edges.groupBy("src").agg(F.sum("w").alias("w_out"))
@@ -194,9 +193,9 @@ def label_propagation(
     und = edges.select(
         F.col("src"), F.col("dst"), F.col("weight").cast("double").alias("w")
     )
-    und = und.union(
-        und.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    ).localCheckpoint(eager=True)  # read every iteration; truncate lineage
+    und = fence.checkpoint(  # read every iteration; truncate lineage
+        und.union(und.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w"))
+    )
     labels = (
         und.select(F.col("src").alias("node"))
         .distinct()

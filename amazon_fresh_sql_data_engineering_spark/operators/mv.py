@@ -47,6 +47,8 @@ import functools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import fence
+
 #: partial-state column suffixes: every measure m is carried as m (the sum)
 #: plus the shared group row count __mv_cnt
 _CNT = "__mv_cnt"
@@ -152,7 +154,6 @@ def mv_apply_delta_minmax(
     maxs: dict[str, str],
     op_col: str = "__op",
     max_pruned_groups: int = 1000,
-    pins: list | None = None,
 ) -> DataFrame:
     """Apply a signed change batch to a ``mv_build_minmax`` state table.
 
@@ -186,14 +187,6 @@ def mv_apply_delta_minmax(
     rows plus ``op_col`` = +1 / -1, deletes matching rows present in the
     pre-batch base. Result == ``mv_build_minmax(base_after)`` exactly
     (the oracle and pytest assert it).
-
-    The |MV|+|delta| join frame is persisted for the duration of the
-    returned plan (see the group-grain pin below). Long-lived maintenance
-    loops applying many batches should release the pin per batch: pass
-    ``pins`` (a list; every frame this call persists is appended) and
-    ``unpersist()`` each after consuming the result (ADVICE r7 — same
-    contract as dedup's incremental paths; the pin is evictable, so a
-    leak degrades to recompute, never to wrong results).
     """
     if op_col in (set(keys) | set(mins) | set(maxs)):
         raise ValueError(f"mv: op column {op_col!r} collides with a view column")
@@ -260,9 +253,7 @@ def mv_apply_delta_minmax(
     # affected-keys collect below AND the algebraic arm of the returned
     # plan — without it the dominant shuffle join is computed twice (three
     # times on the semi-arm path). Evictable: loss degrades to recompute.
-    keyed = keyed.persist()
-    if pins is not None:
-        pins.append(keyed)
+    keyed = fence.persist(keyed)
     algebraic = keyed.filter(~F.col("__affected") & (F.col(_CNT) > 0)).drop("__affected")
 
     affected_keys = keyed.filter(F.col("__affected")).select(*keys)

@@ -52,12 +52,10 @@ so consumer plans are never canonically equal — ``CacheManager`` lookups
 miss (a ``persist()`` pin is silently bypassed) and ``ReuseExchange``
 cannot fire. Round 4 measured the composed cumsum wrong on 12k of 15k rows
 under AQE-off, and pinned it with an eager ``localCheckpoint`` — correct,
-but the checkpoint blocks are non-evictable and non-recomputable, so an
-executor loss mid-job was unrecoverable and long-running callers could not
-release the blocks. With literal boundaries the row->pid mapping cannot
-drift between branches *by construction*, every expression in the plan is
-deterministic (caches hit, exchanges reuse), and the operators are
-fault-tolerant: an executor loss simply recomputes through lineage.
+but not evictable, and lost with its executor. With literal boundaries the
+row->pid mapping cannot drift between branches *by construction*, every
+expression in the plan is deterministic (caches hit, exchanges reuse), and
+the operators are fault-tolerant: an executor loss recomputes through lineage.
 
 Skew note: a single key value that dominates the table still lands in one
 pid (any rank implementation must co-locate ties); for rank over
@@ -67,32 +65,22 @@ a stale or unlucky sample only skews partition sizes, never correctness.
 
 Pinning (the ``pin`` parameter on every operator):
 
-- ``"persist"`` (default) — MEMORY_AND_DISK-persist the input before the
-  boundary job, so the boundary pass plus each consumer branch reads one
-  materialization instead of recomputing upstream. Persist blocks are
-  evictable under memory pressure and recomputable after executor loss,
-  so a leaked pin degrades to recompute, never to wrong results or OOM.
-  Long-running jobs should still ``spark.catalog.clearCache()`` between
-  independent jobs (bench.py's between-query discipline).
-- ``"checkpoint"`` — eager ``localCheckpoint``: truncates lineage, for
-  callers stacking many operators whose lineage would otherwise grow
-  unboundedly (iterative algorithms). Not fault-tolerant to executor
-  loss; not evictable.
+- ``"persist"`` (default) — ``fence.persist`` the input MEMORY_AND_DISK
+  before the boundary job, so the boundary pass and every consumer branch
+  read one materialization (evictable, recomputable after executor loss).
 - ``None`` — no pin: zero cache footprint; the boundary count/sample jobs
   and each consumer branch recompute the input through lineage. Correct
   under every configuration (the literal boundaries make branch agreement
   unconditional); choose it when the input is a cheap scan.
 
-NONDETERMINISTIC INPUTS REQUIRE ``pin="checkpoint"``: literal boundaries
-pin the key->pid *mapping*, not the rows. If the input plan itself is
-nondeterministic (``sample``/``rand``/un-ordered ``limit`` upstream), a
-recompute — ``pin=None`` always, ``pin="persist"`` after cache eviction or
-executor loss — can materialize a *different row set* in the count /
-boundary / window / offset branches, composing wrong offsets exactly like
-the hazard round 4's unconditional checkpoint covered. ``localCheckpoint``
-is the only pin that freezes the rows themselves. Deterministic inputs
-(any pure scan->filter->join->agg lineage, i.e. every catalog consumer)
-are safe under all three modes.
+NONDETERMINISTIC INPUTS: pass ``fence.checkpoint(df)`` with ``pin=None``.
+Literal boundaries pin the key->pid *mapping*, not the rows; over a
+nondeterministic plan (``sample``/``rand``/un-ordered ``limit`` upstream)
+a recompute — ``pin=None`` always, ``pin="persist"`` after eviction or
+executor loss — can materialize a *different row set* per branch and
+compose wrong offsets (round 4's hazard). Only a local checkpoint freezes
+the rows (and truncates lineage, for callers stacking many operators).
+Deterministic inputs (every catalog consumer) are safe under both modes.
 """
 
 from __future__ import annotations
@@ -105,6 +93,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from .. import fence
 
 _PID = "__gr_pid"
 _CNT = "__gr_cnt"
@@ -670,21 +660,16 @@ def _prepare(
     expression is monotone for any boundary literal set, so even a
     colliding or outdated user key can only cost partition balance —
     but balance ownership moves to the caller: key on something that
-    changes when the data distribution does. NOTE the pin interaction: on a cache hit (and on the probe
-    path for inputs under ``_PROBE_CAP``) no full-scan job runs at build
-    time, so ``pin='persist'`` registers the cache lazily — it fills on
-    the first consumer action rather than eagerly at build. For
-    deterministic inputs the result is identical; for borderline-
-    nondeterministic inputs wanting the eager-pin guarantee, use
-    ``pin='checkpoint'`` (always eager) instead (ADVICE r6).
+    changes when the data distribution does. On a cache hit (and on the
+    probe path under ``_PROBE_CAP``) no full-scan job runs at build time,
+    so ``pin='persist'`` fills at the first consumer action; a caller that
+    needs an eager pin passes ``fence.checkpoint(df)`` with ``pin=None``.
     """
     global _PROBE_CACHE_HITS, _PROBE_CACHE_MISSES
     if pin == "persist":
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    elif pin == "checkpoint":
-        df = df.localCheckpoint(eager=True)
+        df = fence.persist(df, StorageLevel.MEMORY_AND_DISK)
     elif pin is not None:
-        raise ValueError(f"ranking: pin must be 'persist', 'checkpoint' or None, got {pin!r}")
+        raise ValueError(f"ranking: pin must be 'persist' or None, got {pin!r}")
     ckeys = _comparison_keys(df, keys)
     target = _target_pids(df, None)
 

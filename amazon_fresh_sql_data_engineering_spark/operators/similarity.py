@@ -296,6 +296,10 @@ def pq_topk(
     partial avg (the exchange carries <= n_subspaces*n_codes rows per
     task). All rounding stays in Spark expressions.
 
+    EAGER: building the plan runs 3 driver jobs (the collect of init
+    codebook + query vectors, then the refinement aggregate's shuffle and
+    collect), so the corpus is read at call time, not at the first action.
+
     Returns (query_id, neighbor_id, approx_dist, rank), self excluded.
     """
     e = corpus.select(
@@ -349,12 +353,13 @@ def pq_topk(
     # contract — a 4-byte-per-vector index only works because the model
     # state is tiny), pushed-filter scan, one job for both ---
     pred = query_pred(F.col("__id"))
+    isinit = F.col("__id") < n_codes
     meta_rows = (
-        e.where(pred | (F.col("__id") < n_codes))
-        .select("__id", "__v", pred.alias("__isq"))
+        e.where(pred | isinit)
+        .select("__id", "__v", pred.alias("__isq"), isinit.alias("__isinit"))
         .collect()
     )
-    init = sorted((r["__id"], r["__v"]) for r in meta_rows if r["__id"] < n_codes)
+    init = sorted((r["__id"], r["__v"]) for r in meta_rows if r["__isinit"])
     queries = sorted((r["__id"], r["__v"]) for r in meta_rows if r["__isq"])
     if rerank > 0:
         # the rerank stage inlines query vectors as SQL double literals: a

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from . import fence
 from .functions.cleaning import clean_text, parse_bool, parse_date_mdy, parse_int
 from .operators import constraints as C
 from .operators import dml
@@ -19,19 +20,6 @@ from .pipelines.normalize import normalize_products
 from .registry import dec, fin, register
 from .registry import tables as _t
 from .sources.loaders import read_parquet
-
-
-def _fence(df):
-    """Materialization fence for synthesized dirty staging.
-
-    The staged columns are md5/regex CASE expressions; Catalyst's
-    projection collapse + predicate pushdown would re-inline them into every
-    downstream filter/projection of the cleaning program (~4x recompute,
-    measured 26s -> 7s on lineitem-sized staging at sf0.1). A lazy local
-    checkpoint computes the staging once and feeds the pipeline plain
-    attributes — the same staging/clean stage boundary a real pipeline has.
-    """
-    return df.localCheckpoint(eager=False)
 
 
 def _staged_parquet(spark, key: str, build):
@@ -207,7 +195,11 @@ def _staged_customers(spark, sf_dir):
             "-", h.substr(1, 8), h.substr(9, 4), h.substr(13, 4), h.substr(17, 4), h.substr(21, 12)
         )
     )
-    return _fence(c.select(
+    # lazy local checkpoint = the staging/clean stage boundary: projection
+    # collapse + pushdown would otherwise re-inline the md5/regex CASE columns
+    # into every downstream filter/projection of the cleaning program (~4x
+    # recompute, measured 26s -> 7s on lineitem-sized staging at sf0.1)
+    return fence.checkpoint(c.select(
         F.when(k % 20 == 0, "")
         .when(k % 20 == 1, F.concat(F.lit("BAD-"), k.cast("string")))
         .when(k % 20 == 2, F.upper(uuid_base))
@@ -236,7 +228,7 @@ def _staged_customers(spark, sf_dir):
         .when(k % 6 == 4, "")
         .otherwise("junk")
         .alias("primemember"),
-    ))
+    ), eager=False)
 
 
 _ORD_STAGED_SQL = f"""
@@ -287,7 +279,8 @@ def _staged_orders(spark, sf_dir):
     ord_uuid = uuidify(F.md5(F.concat(F.lit("ord"), k.cast("string"))))
     cust_uuid = uuidify(F.md5(F.concat(F.lit("cust"), ck.cast("string"))))
     ghost_uuid = uuidify(F.md5(F.concat(F.lit("ghost"), ck.cast("string"))))
-    return _fence(o.select(
+    # lazy checkpoint: the staging/clean stage boundary (_staged_customers)
+    return fence.checkpoint(o.select(
         F.when(k % 20 == 0, "")
         .when(k % 20 == 1, F.concat(F.lit("BAD#"), k.cast("string")))
         .when(k % 20 == 2, F.upper(ord_uuid))
@@ -310,7 +303,7 @@ def _staged_orders(spark, sf_dir):
         .when(k % 4 == 2, "abc")
         .otherwise("250")
         .alias("totalamount"),
-    ))
+    ), eager=False)
 
 
 @register(
@@ -540,7 +533,8 @@ def q_pipe_clean_products(spark, sf_dir):
         .otherwise(sup_uuid)
         .alias("supplierid"),
     )
-    out = clean_entity(_fence(staging), spec_products()).final
+    # lazy checkpoint: the staging/clean stage boundary (_staged_customers)
+    out = clean_entity(fence.checkpoint(staging, eager=False), spec_products()).final
     return out.withColumn("priceperunit", fin("priceperunit"))
 
 
@@ -614,7 +608,8 @@ def q_pipe_clean_suppliers(spark, sf_dir):
         .alias("city"),
         F.when(k % 5 == 0, "WA").when(k % 5 == 1, "").otherwise(" OR ").alias("state"),
     )
-    return clean_entity(_fence(staging), spec_suppliers()).final
+    # lazy checkpoint: the staging/clean stage boundary (_staged_customers)
+    return clean_entity(fence.checkpoint(staging, eager=False), spec_suppliers()).final
 
 
 _OD_STAGED_SQL = f"""
@@ -802,7 +797,8 @@ def q_pipe_clean_reviews(spark, sf_dir):
         .alias("rating"),
         F.concat(F.lit("  review of order "), k.cast("string"), F.lit("  ")).alias("reviewtext"),
     )
-    return clean_entity(_fence(staging), spec_reviews()).final
+    # lazy checkpoint: the staging/clean stage boundary (_staged_customers)
+    return clean_entity(fence.checkpoint(staging, eager=False), spec_reviews()).final
 
 
 @register(
@@ -1239,7 +1235,7 @@ def q_csv_staging_roundtrip(spark, sf_dir):
             F.min("c_custkey").alias("min_key"),
             F.max("c_custkey").alias("max_key"),
         )
-        return out.localCheckpoint(eager=True)
+        return fence.checkpoint(out)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1288,7 +1284,7 @@ def q_ctas_roundtrip(spark, sf_dir):
             F.min("o_orderkey").alias("min_key"),
             F.max("o_orderkey").alias("max_key"),
         )
-        return out.localCheckpoint(eager=True)
+        return fence.checkpoint(out)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1368,7 +1364,7 @@ def q_zorder_roundtrip(spark, sf_dir):
             F.min("l_orderkey").alias("min_okey"),
             F.max("l_orderkey").alias("max_okey"),
         )
-        return out.localCheckpoint(eager=True)
+        return fence.checkpoint(out)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1474,7 +1470,7 @@ def q_compaction_roundtrip(spark, sf_dir):
         out = agg(read_parquet(spark, part).select(o.columns), "partitioned").unionAll(
             agg(read_parquet(spark, flat), "flat")
         )
-        return out.localCheckpoint(eager=True)
+        return fence.checkpoint(out)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1563,7 +1559,7 @@ def q_pointer_publish_roundtrip(spark, sf_dir):
         out = agg(latest, "latest_after_rollback").unionAll(
             agg(tt_v2, "time_travel_v2")
         )
-        return out.localCheckpoint(eager=True)
+        return fence.checkpoint(out)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from . import fence
 from .functions import text as TXT
 from .operators import dedup as D
 from .operators import multimodal as MM
@@ -317,11 +318,9 @@ def dedup_incremental(spark, sf_dir):
     )
     # stands in for the persisted store a production pipeline accretes;
     # persist = the one materialization both the band join and the verify read
-    pins = _gen_pins("dedup_incremental")
-    store = D.minhash_features(d, "doc_id", "text", 64, 3, 42).persist()
-    pins.append(store)
+    store = fence.persist(D.minhash_features(d, "doc_id", "text", 64, 3, 42))
     return D.minhash_incremental_pairs(
-        store, batch, "doc_id", "text", threshold=0.6, pins=pins
+        store, batch, "doc_id", "text", threshold=0.6
     ).withColumn("jaccard_sim", F.round("jaccard_sim", 6))
 
 
@@ -368,31 +367,8 @@ def dedup_store_probe(spark, sf_dir):
         .repartition(spark.sparkContext.defaultParallelism)
     )
     return D.minhash_store_probe(
-        batch, _corpus_store(spark, sf_dir), "doc_id", "text", threshold=0.6,
-        pins=_gen_pins("dedup_store_probe"),
+        batch, _corpus_store(spark, sf_dir), "doc_id", "text", threshold=0.6
     ).withColumn("jaccard_sim", F.round("jaccard_sim", 6))
-
-
-#: pins persisted by the LAST call of each pin-carrying catalog query
-#: (ADVICE r8): a catalog query hands its DataFrame back unconsumed, so the
-#: pins cannot be released inside the call without degrading the very probe
-#: they cache — instead each call drains the PREVIOUS call's generation
-#: before persisting its own. Repeated executions (bench cold/warm pairs,
-#: parity sweeps) then hold at most one generation of cached frames per
-#: query instead of accreting one per call; a single-shot process releases
-#: them at exit like any cache.
-_QUERY_PINS: dict[str, list] = {}
-
-
-def _gen_pins(query: str) -> list:
-    pins = _QUERY_PINS.setdefault(query, [])
-    while pins:
-        frame = pins.pop()
-        try:
-            frame.unpersist()
-        except Exception:  # noqa: BLE001 — best-effort release of a cache pin
-            pass
-    return pins
 
 
 def _corpus_store(spark, sf_dir):
@@ -1619,10 +1595,10 @@ def pipe_training_corpus(spark, sf_dir):
     # loser anti-join, final projection). Without the fences the scoring
     # recomputes per branch (22 s -> 6 s at sf0.1). At 100 TB these are the
     # stage boundaries you'd materialize to storage between pipeline runs.
-    kept1 = scored.filter(
+    kept1 = fence.persist(scored.filter(
         (F.col("lang_pred") == "en") & (F.col("quality") >= 0.5)
-    ).persist()
-    exact = D.exact_dedup(kept1, ["text"], "doc_id").persist()
+    ))
+    exact = fence.persist(D.exact_dedup(kept1, ["text"], "doc_id"))
     pairs = D.minhash_dedup_pairs(exact, "doc_id", "text", threshold=0.6)
     survivors = D.dedup_corpus(exact, pairs, "doc_id")
     bucket = (
@@ -2544,9 +2520,8 @@ def dedup_containment(spark, sf_dir):
     )
     # persist: the pair self-join reads the index twice and its lineage
     # contains the Arrow shingle UDF (same rationale as the max_df path in
-    # ngram_jaccard_pairs — clearCache() between invocations in a
-    # long-lived session)
-    inv = D.ngram_inverted_index(universe, "doc_id", "text", ["lang"], k=3).persist()
+    # ngram_jaccard_pairs)
+    inv = fence.persist(D.ngram_inverted_index(universe, "doc_id", "text", ["lang"], k=3))
     a = inv.select(
         "lang", "__s", F.col("__id").alias("id_a"), F.col("__n").alias("__na")
     )
@@ -2679,7 +2654,7 @@ def op_kmeans_refine(spark, sf_dir):
     # a2 feeds both the membership counts and the final centroids; persist
     # so the first iteration isn't replayed per branch (at scale: the
     # standard per-iteration materialization point of Lloyd's on Spark)
-    a2 = assign(c1).persist()
+    a2 = fence.persist(assign(c1))
     counts = a2.groupBy("cid").agg(F.count(F.lit(1)).alias("n_members"))
     c2 = recompute(a2)
     norm = F.round(

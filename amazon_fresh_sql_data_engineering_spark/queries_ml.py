@@ -14,6 +14,7 @@ import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from . import fence
 from .operators import expectations as X
 from .registry import CATALOG, register
 from .registry import tables as _t
@@ -528,13 +529,12 @@ def dedup_semantic(spark, sf_dir):
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    assigned = (
+    assigned = fence.persist(
         emb.crossJoin(F.broadcast(cents))
         .select("vec_id", "v", "cid", dist.alias("dist"))
         .groupBy("vec_id")
         .agg(F.min(F.struct("dist", "cid", "v")).alias("b"))
         .select("vec_id", F.col("b.cid").alias("cid"), F.col("b.v").alias("v"))
-        .persist()
     )
 
     def fold(va, vb):
@@ -754,28 +754,17 @@ def op_time_weighted_avg(spark, sf_dir):
     "per window stops fitting a shuffle partition.",
 )
 def events_sliding_distinct(spark, sf_dir):
-    # r11 opt (guide §2.3 "aggregate before you shuffle"): the r6-r10 form
-    # exploded every distinct (type, user, hour) presence row into its 24
-    # target hours and shuffled the whole fanned stream into a
-    # count_distinct (which expands to a two-round distinct aggregate over
-    # (type, target, user) — the fanned rows crossed the wire with the
-    # user id attached). Instead collect each (type, user)'s present hours
-    # into one array (single shuffle of PRESENCE-sized rows), expand to
-    # covered target hours ROW-LOCALLY with in-array dedup — after which
-    # each user contributes each target at most once, so the final count
-    # is a PLAIN count: map-side partial aggregation collapses the fanned
-    # rows to ~(type x hour) counts per task before the exchange, and the
-    # user id never rides the fanned shuffle at all. Same result by
-    # construction (user counted at target T iff present in some hour of
-    # (T-23h, T]); the NULL-user filter replicates count_distinct's NULL
-    # exclusion — with ONE stated divergence (ADVICE r11): an observed
-    # (type, hour) whose ONLY covering events carry NULL user_id
-    # previously surfaced as a distinct_users=0 row, but now has no
-    # contrib rows at all (NULL users never enter hours_per_user), so the
-    # INNER join below drops the group entirely. events.user_id has zero
-    # NULLs at every SF (oracle-hash-proven), so no current row is
-    # affected; inputs with NULL-user-only hours would need a LEFT join
-    # from observed with a coalesce-to-0 count instead.
+    # r11 opt (guide §2.3 "aggregate before you shuffle"): collect each
+    # (type, user)'s present hours into one array (one shuffle of
+    # PRESENCE-sized rows) and expand to covered target hours ROW-LOCALLY
+    # with in-array dedup, so each user contributes each target at most
+    # once: the final count is a PLAIN count whose map-side partial
+    # aggregation collapses the fanned rows before the exchange, and the
+    # user id never rides the fanned shuffle (the r6-r10 form shuffled the
+    # whole fanned stream into a two-round count_distinct). The NULL-user
+    # filter replicates count_distinct's NULL exclusion; the LEFT join from
+    # the observed hours with a coalesce to 0 keeps an observed (type, hour)
+    # covered only by NULL-user events, as the oracle's count(DISTINCT) does.
     e = _t(spark, sf_dir, "events")
     hours_per_user = (
         e.filter(F.col("user_id").isNotNull())
@@ -797,24 +786,21 @@ def events_sliding_distinct(spark, sf_dir):
             )
         )
     )
-    contrib = hours_per_user.select(
-        "event_type", F.explode(covered).alias("hour")
+    counts = (
+        hours_per_user.select("event_type", F.explode(covered).alias("hour"))
+        .groupBy("event_type", "hour")
+        .agg(F.count(F.lit(1)).alias("n"))
     )
+    # NULL keys never satisfy the oracle's equi-join: drop them up front
     observed = (
-        e.select(
-            F.col("event_type").alias("o_type"),
-            F.date_trunc("hour", F.col("ts")).alias("o_hour"),
-        )
+        e.select("event_type", F.date_trunc("hour", F.col("ts")).alias("hour"))
+        .dropna()
         .distinct()
     )
-    return (
-        contrib.join(
-            F.broadcast(observed),
-            (F.col("event_type") == F.col("o_type"))
-            & (F.col("hour") == F.col("o_hour")),
-        )
-        .groupBy("event_type", "hour")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("distinct_users"))
+    return observed.join(counts, ["event_type", "hour"], "left").select(
+        "event_type",
+        "hour",
+        F.coalesce(F.col("n"), F.lit(0)).cast("bigint").alias("distinct_users"),
     )
 
 
@@ -1178,7 +1164,10 @@ def op_triangle_count(spark, sf_dir):
     )
     cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cnm"))
     sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("snm"))
-    und0 = (
+    # feeds both the avg scalar and the thinned edge list; checkpoint
+    # (not persist) so the fence keeps AQE-sized partitions — see
+    # operators/graph.py triangle_count
+    und0 = fence.checkpoint(
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(cn), c["c_nationkey"] == cn["c_nk"])
@@ -1189,10 +1178,6 @@ def op_triangle_count(spark, sf_dir):
             F.least("cnm", "snm").alias("a"), F.greatest("cnm", "snm").alias("b")
         )
         .agg(F.count(F.lit(1)).alias("w"))
-        # feeds both the avg scalar and the thinned edge list; checkpoint
-        # (not persist) so the fence keeps AQE-sized partitions — see
-        # operators/graph.py triangle_count
-        .localCheckpoint(eager=True)
     )
     aw = und0.agg(F.avg("w").alias("aw"))
     kept = (

@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from . import fence
 from .operators.ranking import global_cumsum
 from .registry import fin, register
 from .registry import tables as _t
@@ -209,7 +210,7 @@ def op_ks_test(spark, sf_dir):
     # cum of na and of n in ONE two-phase pass (multi-column global_cumsum:
     # one range exchange + one window serve both arms); the fence keeps the
     # aggregate from replaying under the range sampler (NOTES_r3 rfm lesson)
-    vals = vals.localCheckpoint(eager=True)
+    vals = fence.checkpoint(vals)
     ec = global_cumsum(vals, ["v"], ["na", "n"], ["cum_a", "cum_n"])
     tot = vals.agg(
         F.sum("na").alias("n1"), F.sum(F.col("n") - F.col("na")).alias("n2")
@@ -319,7 +320,7 @@ def op_survival_km(spark, sf_dir):
     )
     # distinct-duration grain is metadata-sized; fence before the two
     # chained two-phase passes (NOTES_r3 rfm lesson)
-    g = g.localCheckpoint(eager=True)
+    g = fence.checkpoint(g)
     r = global_cumsum(g, ["dur"], "n", "at_risk", descending=True)
     ev = r.filter(F.col("d") > 0).select(
         "dur",
@@ -331,7 +332,7 @@ def op_survival_km(spark, sf_dir):
             / F.col("at_risk").cast("double")
         ).alias("term"),
     )
-    ev = ev.localCheckpoint(eager=True)
+    ev = fence.checkpoint(ev)
     s = global_cumsum(ev, ["dur"], "term", "logsum")
     return s.select(
         F.col("dur").alias("duration_d"),
@@ -664,7 +665,7 @@ def op_item_cf_jaccard(spark, sf_dir, max_items_per_user: int = 64):
     # interleaved A/B at sf0.1: med 5.4 -> 4.7 s with the shared exchange).
     from pyspark.storagelevel import StorageLevel
 
-    baskets = baskets.persist(StorageLevel.MEMORY_AND_DISK)
+    baskets = fence.persist(baskets, StorageLevel.MEMORY_AND_DISK)
     sizes = baskets.select(F.explode("items").alias("item")).groupBy(
         "item"
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -836,14 +837,13 @@ def op_pca_power(spark, sf_dir):
     ).agg(F.sum(dec("o_totalprice")).cast("double").alias("sp"))
     tot = s.groupBy("c").agg(F.sum("sp").alias("tot"))
     x = s.join(tot, "c").select("c", "i", (F.col("sp") / F.col("tot")).alias("v"))
-    x = x.localCheckpoint(eager=True)  # both self-join sides read it
+    x = fence.checkpoint(x)  # both self-join sides read it
     a = x.select("c", F.col("i"), F.col("v").alias("va"))
     b = x.select("c", F.col("i").alias("j"), F.col("v").alias("vb"))
-    g = (
+    g = fence.checkpoint(  # d^2 cells, read by both iterations
         a.join(b, "c")
         .groupBy("i", "j")
         .agg(F.round(F.sum(F.col("va") * F.col("vb")), 6).alias("g"))
-        .localCheckpoint(eager=True)  # d^2 cells, read by both iterations
     )
 
     def fold_sum(col_struct_arr):
@@ -873,7 +873,7 @@ def op_pca_power(spark, sf_dir):
         # branches (2^k matvec subtrees; the before-plan carried 38
         # exchanges for d=5). A lazy checkpoint of the d-row frame makes
         # the plan linear in iterations.
-        w = w.localCheckpoint(eager=False)
+        w = fence.checkpoint(w, eager=False)
         nrm = w.groupBy().agg(
             F.array_sort(
                 F.collect_list(
@@ -1199,7 +1199,7 @@ def events_concurrency_peak(spark, sf_dir):
     iv = sess.groupBy("user_id", "sid").agg(
         F.min("us").alias("s"), F.max("us").alias("e")
     )
-    iv = iv.localCheckpoint(eager=True)  # read by sweep twice + count
+    iv = fence.checkpoint(iv)  # read by sweep twice + count
     sweep = iv.select(
         F.col("s").alias("us"), F.lit(1).alias("delta"), "user_id", "sid"
     ).unionAll(
@@ -1208,7 +1208,7 @@ def events_concurrency_peak(spark, sf_dir):
     swept = global_cumsum(
         sweep, ["us", "neg_delta", "user_id", "sid"], "delta", "c"
     )
-    swept = swept.localCheckpoint(eager=True)  # peak + first-attainment reads
+    swept = fence.checkpoint(swept)  # peak + first-attainment reads
     peak = swept.agg(F.max("c").alias("peak_concurrency"))
     first = (
         swept.join(F.broadcast(peak), F.col("c") == F.col("peak_concurrency"))
@@ -2065,7 +2065,7 @@ def op_join_size_estimate(spark, sf_dir):
 def q_gdpr_erasure(spark, sf_dir):
     c, o, li = _t(spark, sf_dir, "customer", "orders", "lineitem")
     targets = c.where(F.col("c_custkey") % 97 == 0).select("c_custkey")
-    targets = targets.localCheckpoint(eager=True)  # read by all 3 levels
+    targets = fence.checkpoint(targets)  # read by all 3 levels
 
     def digest(df, key_expr, name):
         return df.select(key_expr.alias("kk")).agg(
@@ -2193,7 +2193,7 @@ def op_gains_chart(spark, sf_dir):
     # the output stream; unfenced, the whole spend-join + global_ntile
     # two-phase pipeline executed TWICE (before-plan: 72 exchanges /
     # 63 scans vs ~half after)
-    cells = cells.localCheckpoint(eager=False)
+    cells = fence.checkpoint(cells, eager=False)
     tot = cells.agg(
         F.sum("n_customers").alias("nc"), F.sum("n_responders").alias("nr")
     )
@@ -2298,7 +2298,7 @@ def op_shard_plan(spark, sf_dir):
     )
     tagged = d.select("doc_id", "n_chars", split.alias("split"))
     cum = global_cumsum(tagged, ["split", "doc_id"], "n_chars", "gcum")
-    cum = cum.localCheckpoint(eager=True)  # offsets + sharding both read it
+    cum = fence.checkpoint(cum)  # offsets + sharding both read it
     offs = cum.groupBy("split").agg(
         (F.min("gcum") - F.min_by("n_chars", "gcum")).alias("off")
     )
@@ -2429,7 +2429,7 @@ def events_shapley_attribution(spark, sf_dir):
         .groupBy("s")
         .agg(F.coalesce(F.sum("c"), F.lit(0)).alias("v"))
     )
-    v = v.localCheckpoint(eager=True)  # both sides of the marginal join
+    v = fence.checkpoint(v)  # both sides of the marginal join
     channels = spark.createDataFrame(
         [("click", 1), ("error", 2), ("signup", 4), ("view", 8)],
         "channel string, bit int",
@@ -2643,7 +2643,7 @@ def op_cuped(spark, sf_dir):
             .alias("y"),
         )
     )
-    per_cust = per_cust.localCheckpoint(eager=True)  # moments + adjust reads
+    per_cust = fence.checkpoint(per_cust)  # moments + adjust reads
     mom = per_cust.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),
@@ -2868,7 +2868,7 @@ def op_winsorized_mean(spark, sf_dir):
         F.row_number().over(w).alias("rn"),
         F.count(F.lit(1)).over(wc).alias("n"),
     )
-    ranked = ranked.localCheckpoint(eager=True)  # cuts + clamp both read it
+    ranked = fence.checkpoint(ranked)  # cuts + clamp both read it
     idx = lambda p: F.ceil(F.lit(p) * F.col("n").cast("double"))  # noqa: E731
     cuts = ranked.groupBy("segment", "n").agg(
         F.max(F.when(F.col("rn") == idx(0.05), F.col("p"))).alias("lo"),

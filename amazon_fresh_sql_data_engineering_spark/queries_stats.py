@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from . import fence
 from .operators.ranking import global_cumsum, global_ntile, global_row_number
 from .registry import dec, fin, register
 from .registry import tables as _t
@@ -353,7 +354,13 @@ def op_rfm_segmentation(spark, sf_dir):
         fin(F.sum(dec("o_totalprice"))).alias("monetary"),
     )
     maxd = o.agg(F.max("o_orderdate").alias("__max_ts"))
-    base = (
+    # fence: see doc — the chained ntiles otherwise replay this subtree
+    # once per plan branch (9+ times by the third ntile). LAZY (r11
+    # opt): the three fences' consumers are strictly sequential (each
+    # ntile's probe, then the next fence), so lazy checkpoints cut the
+    # same lineage while folding materialization into the consumer
+    # jobs — three fewer driver actions per execution than eager.
+    base = fence.checkpoint(
         per_cust.join(F.broadcast(maxd))
         .withColumn(
             "recency_days",
@@ -361,14 +368,8 @@ def op_rfm_segmentation(spark, sf_dir):
                 F.col("__max_ts").cast("date"), F.col("__last_ts").cast("date")
             ).cast("bigint"),
         )
-        .select("o_custkey", "recency_days", "frequency", "monetary")
-        # fence: see doc — the chained ntiles otherwise replay this subtree
-        # once per plan branch (9+ times by the third ntile). LAZY (r11
-        # opt): the three fences' consumers are strictly sequential (each
-        # ntile's probe, then the next fence), so lazy checkpoints cut the
-        # same lineage while folding materialization into the consumer
-        # jobs — three fewer driver actions per execution than eager.
-        .localCheckpoint(eager=False)
+        .select("o_custkey", "recency_days", "frequency", "monetary"),
+        eager=False,
     )
     # cache_key: the checkpoint fences give every execution fresh plan ids,
     # so the semantic-hash probe memo can never hit here — an explicit
@@ -376,14 +377,14 @@ def op_rfm_segmentation(spark, sf_dir):
     # measured ~2.6 s per overflow-path probe at sf0.1, 3 probes per run;
     # correctness is key-independent — monotone pid — and the key changes
     # with sf_dir, so balance staleness only spans re-runs on one input)
-    scored = global_ntile(
+    scored = fence.checkpoint(global_ntile(
         base, 4, [F.col("recency_days").asc(), F.col("o_custkey").asc()], "r_score",
         cache_key=f"rfm:{sf_dir}:r",
-    ).localCheckpoint(eager=False)
-    scored = global_ntile(
+    ), eager=False)
+    scored = fence.checkpoint(global_ntile(
         scored, 4, [F.col("frequency").desc(), F.col("o_custkey").asc()], "f_score",
         cache_key=f"rfm:{sf_dir}:f",
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     scored = global_ntile(
         scored, 4, [F.col("monetary").desc(), F.col("o_custkey").asc()], "m_score",
         cache_key=f"rfm:{sf_dir}:m",
@@ -851,9 +852,9 @@ def op_basket_lift(spark, sf_dir):
     # catalog-sized, so both attachments broadcast instead of re-shuffling
     # the pair stream (guide §3.1).
     l = _t(spark, sf_dir, "lineitem")  # noqa: E741
-    baskets = l.groupBy("l_orderkey").agg(
+    baskets = fence.checkpoint(l.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("items")
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     n = baskets.agg(F.count(F.lit(1)).cast("double").alias("n"))
     supp = (
         baskets.select(F.explode("items").alias("l_partkey"))

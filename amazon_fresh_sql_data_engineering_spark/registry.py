@@ -9,12 +9,14 @@ point for __spark_entry__ / bench.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import fence
 from .sources.loaders import load_table
 
 
@@ -39,7 +41,13 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
                 f"register({name!r}) decorates function {fn.__name__!r} — "
                 "decorator misplaced?"
             )
-        CATALOG[name] = QuerySpec(fn, oracle, doc)
+
+        @functools.wraps(fn)
+        def call(*args, **kwargs):  # one fence generation per top-level call
+            with fence.generation(name):
+                return fn(*args, **kwargs)
+
+        CATALOG[name] = QuerySpec(call, oracle, doc)
         return fn
 
     return deco

@@ -64,6 +64,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fence
 from ..operators.dedup import (
     _store_trees,
     append_minhash_store,
@@ -216,25 +217,24 @@ def run_store_dedup_stream(
             # committed (docstring) — fold it before we accrete
             compact_minhash_store(spark, store_path, ingest)
         m = read_parquet(spark, f"{store_path}/manifest").collect()[0]
-        feats = minhash_features(
-            batch_df, id_col, text_col, m["num_hashes"], m["k"], m["seed"]
-        ).persist()
-        if feats.first() is None:
-            # empty micro-batch: nothing to accrete, nothing to pair —
-            # and on a freshly bootstrapped store the probe would read
-            # the not-yet-created features dir and wedge the stream on
-            # every replay (self-review r8)
-            feats.unpersist()
-            return
-        pins: list = []
-        try:
+        # a throwing batch REPLAYS: the scope frees its pins on failure too
+        with fence.scope():
+            feats = fence.persist(minhash_features(
+                batch_df, id_col, text_col, m["num_hashes"], m["k"], m["seed"]
+            ))
+            if feats.first() is None:
+                # empty micro-batch: nothing to accrete, nothing to pair —
+                # and on a freshly bootstrapped store the probe would read
+                # the not-yet-created features dir and wedge the stream on
+                # every replay (self-review r8)
+                return
             # accrete FIRST (idempotent overwrite of this batch's leaf
             # partitions), then probe history strictly older than us —
             # insensitive to whether a torn earlier attempt already landed
             append_minhash_store(feats, store_path, ingest)
             pairs = minhash_store_probe(
                 batch_df, store_path, id_col, text_col, threshold=threshold,
-                batch_features=feats, max_ingest_exclusive=ingest, pins=pins,
+                batch_features=feats, max_ingest_exclusive=ingest,
             )
             (
                 pairs.withColumn("__ingest", F.lit(ingest).cast("long"))
@@ -244,13 +244,6 @@ def run_store_dedup_stream(
                 .partitionBy("__ingest")
                 .parquet(pairs_path)
             )
-        finally:
-            # drain in the failure path too (self-review r9): a throwing
-            # batch REPLAYS, and repeated failures would otherwise accrete
-            # one pin generation per attempt
-            for p in pins:
-                p.unpersist()
-            feats.unpersist()
 
     q = (
         doc_stream.writeStream.foreachBatch(_write)

@@ -273,7 +273,8 @@ def _query_source_symbols(fn, repo_root: str) -> set[tuple[str, str | None]]:
 
     out: set[tuple[str, str | None]] = set()
     seen_fns: set = set()
-    stack = [fn]
+    # the registry stores a fence-generation wrapper; walk the query body
+    stack = [inspect.unwrap(fn)]
 
     def _rel(obj) -> str | None:
         try:

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from amazon_fresh_sql_data_engineering_spark import fence
 from amazon_fresh_sql_data_engineering_spark.operators import dml
 
 
@@ -354,9 +355,9 @@ def test_mv_dim_delta_rejects_shared_nonjoin_columns(spark):
         mv.mv_dim_delta(fact, dim_delta, on="ck")
 
 
-def test_mv_minmax_pins_out_param_releases_cache(spark):
-    """mv_apply_delta_minmax persists the |MV|+|delta| join frame; the
-    pins out-param lets a maintenance loop release it per batch
+def test_mv_minmax_pin_is_freed_by_its_scope(spark):
+    """mv_apply_delta_minmax persists the |MV|+|delta| join frame through
+    the fence; a maintenance loop releases it per batch with a scope
     (ADVICE r7 — same contract as the dedup incremental paths)."""
     from amazon_fresh_sql_data_engineering_spark.operators import mv
     from pyspark.sql import functions as F
@@ -369,12 +370,12 @@ def test_mv_minmax_pins_out_param_releases_cache(spark):
         [(2, "a", 9.0, -1)], "id int, g string, v double, __op int"
     )
     base_after = base.filter(F.col("id") != 2)
-    pins = []
-    got = mv.mv_apply_delta_minmax(
-        mv0, delta, base_after, ["g"], {"mn": "v"}, {"mx": "v"}, pins=pins
-    )
-    rows = {r["g"]: (r["__mv_cnt"], r["mn"], r["mx"]) for r in got.collect()}
+    with fence.scope():
+        got = mv.mv_apply_delta_minmax(
+            mv0, delta, base_after, ["g"], {"mn": "v"}, {"mx": "v"}
+        )
+        rows = {r["g"]: (r["__mv_cnt"], r["mn"], r["mx"]) for r in got.collect()}
+        pins = [df for df, _ in fence._owner.get()]
+        assert len(pins) == 1 and pins[0].storageLevel.useMemory
     assert rows == {"a": (1, 5.0, 5.0), "b": (1, 2.0, 2.0)}
-    assert len(pins) == 1 and pins[0].storageLevel.useMemory
-    for p in pins:
-        p.unpersist()
+    assert not pins[0].storageLevel.useMemory

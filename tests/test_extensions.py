@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from amazon_fresh_sql_data_engineering_spark import fence
 from amazon_fresh_sql_data_engineering_spark.operators import dedup as D
 from amazon_fresh_sql_data_engineering_spark.operators import multimodal as MM
 from amazon_fresh_sql_data_engineering_spark.operators import similarity as S
@@ -101,11 +102,26 @@ def test_minhash_store_probe_prunes_and_matches_inmemory(spark, sf_dir, tmp_path
     path = str(tmp_path / "mh_store")
     D.write_minhash_store(store_feats, path, num_prefixes=8)
 
-    pins = []
-    probe = D.minhash_store_probe(batch, path, "doc_id", "text", threshold=0.5, pins=pins)
-    got = {
-        (r.id_a, r.id_b): (round(r.jaccard_sim, 6), r.vs) for r in probe.collect()
-    }
+    from amazon_fresh_sql_data_engineering_spark.plans import explain as X
+
+    with fence.scope():
+        probe = D.minhash_store_probe(batch, path, "doc_id", "text", threshold=0.5)
+        got = {
+            (r.id_a, r.id_b): (round(r.jaccard_sim, 6), r.vs) for r in probe.collect()
+        }
+        # exchange-free store side (VERDICT r6 item 8): with broadcast_batch
+        # (the default) every join in the probe is a broadcast hash join — the
+        # index and feature scans stream with no store-side shuffle
+        probe_plan = X.physical_plan(probe)
+        # the scope owns the batch-side caches: features, bands, and
+        # (ADVICE r7) the counted candidate-pair frame behind the guarded
+        # broadcast hint
+        pins = [df for df, _ in fence._owner.get()]
+        assert len(pins) == 3 and all(p.storageLevel.useMemory for p in pins)
+    assert not any(p.storageLevel.useMemory for p in pins)
+    assert "SortMergeJoin" not in probe_plan and "ShuffledHashJoin" not in probe_plan, (
+        probe_plan[:1500]
+    )
     exp = {
         (r.id_a, r.id_b): (round(r.jaccard_sim, 6), r.vs)
         for r in D.minhash_incremental_pairs(
@@ -113,22 +129,6 @@ def test_minhash_store_probe_prunes_and_matches_inmemory(spark, sf_dir, tmp_path
         ).collect()
     }
     assert got == exp and got  # non-trivial: the planted copies must hit
-
-    # exchange-free store side (VERDICT r6 item 8): with broadcast_batch
-    # (the default) every join in the probe is a broadcast hash join — the
-    # index and feature scans stream with no store-side shuffle
-    from amazon_fresh_sql_data_engineering_spark.plans import explain as X
-
-    probe_plan = X.physical_plan(probe)
-    assert "SortMergeJoin" not in probe_plan and "ShuffledHashJoin" not in probe_plan, (
-        probe_plan[:1500]
-    )
-    # the pins out-param surfaced the batch-side caches: features, bands,
-    # and (ADVICE r7) the counted candidate-pair frame behind the guarded
-    # broadcast hint
-    assert len(pins) == 3
-    for p in pins:
-        p.unpersist()
 
     # hot-bucket guard (ADVICE r7): the candidate-PAIR frame's broadcast
     # hint is count-guarded because pair count is store-occupancy-driven,
@@ -465,7 +465,7 @@ def test_connected_components_distributed_stress(spark):
     # release the returned checkpoint; everything else must already be freed
     # (<= not ==: the async ContextCleaner may also reap blocks predating
     # this test, so the count can legitimately DROP below the baseline)
-    D._free_local_checkpoint(labels)
+    fence.release(labels)
     assert len(sc._jsc.getPersistentRDDs()) <= baseline_blocks
 
 
@@ -1111,3 +1111,27 @@ def test_pq_rerank_rejects_non_finite_query_vector(spark, bad):
             corpus, "id", "v", lambda c: c == 5,
             k=2, n_subspaces=2, sub_dim=2, n_codes=2, rerank=3,
         )
+
+
+def test_pq_string_ids_train_the_same_index_as_int_ids(spark, sf_dir):
+    """The init-codebook flag (id < n_codes) is computed in the Spark
+    projection next to the query flag, so a string-typed copy of the
+    embeddings ids (zero-padded: same order as the ints, so the rank
+    tie-break agrees) trains the same codebooks and returns the same
+    neighbours."""
+    from amazon_fresh_sql_data_engineering_spark.operators.similarity import pq_topk
+    from amazon_fresh_sql_data_engineering_spark.registry import tables
+
+    e = tables(spark, sf_dir, "embeddings")
+
+    def neighbours(corpus):
+        out = pq_topk(corpus, "vec_id", "embedding", query_pred=lambda c: c < 10, k=5)
+        return {
+            (int(r.query_id), int(r.neighbor_id), r.approx_dist, r.rank)
+            for r in out.collect()
+        }
+
+    padded = e.withColumn("vec_id", F.format_string("%06d", F.col("vec_id")))
+    assert padded.schema["vec_id"].dataType.typeName() == "string"
+    got = neighbours(padded)
+    assert got and got == neighbours(e)

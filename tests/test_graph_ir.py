@@ -81,6 +81,40 @@ def test_sliding_distinct_dominates_single_hour(spark, sf_dir):
     assert joined.filter(F.col("distinct_users") > F.col("one_hour")).count() > 0
 
 
+def test_sliding_distinct_keeps_null_user_only_hours(spark, sf_dir, tmp_path):
+    """An observed (event_type, hour) covered only by NULL-user events is a
+    distinct_users = 0 row, as the oracle's count(DISTINCT) returns it."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.oracle_compare import compare, duckdb_connect
+
+    for f in os.listdir(sf_dir):
+        if f != "events.parquet":
+            os.symlink(os.path.join(sf_dir, f), tmp_path / f)
+    ev = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    extra = ev.slice(0, 1).to_pylist()[0] | {
+        "event_id": max(ev.column("event_id").to_pylist()) + 1,
+        "user_id": None,
+        "event_type": "null_user_only",
+    }
+    pq.write_table(
+        pa.concat_tables([ev, pa.Table.from_pylist([extra], schema=ev.schema)]),
+        tmp_path / "events.parquet",
+    )
+    spec = CATALOG["events_sliding_distinct"]
+    df = spec.fn(spark, str(tmp_path))
+    fresh = df.filter(F.col("event_type") == "null_user_only").collect()
+    assert [r["distinct_users"] for r in fresh] == [0]
+    con = duckdb_connect(str(tmp_path))
+    try:
+        assert not compare(df, con, spec.oracle)
+    finally:
+        con.close()
+
+
 def test_triangle_count_known_graphs(spark):
     from amazon_fresh_sql_data_engineering_spark.operators.graph import (
         triangle_count,

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pytest
 
+from amazon_fresh_sql_data_engineering_spark import fence
 from amazon_fresh_sql_data_engineering_spark.catalog import CATALOG
 from tests.oracle_compare import compare, duckdb_connect
 
@@ -30,13 +31,31 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
 
 
 def test_all_queries_return_rows(spark, sf_dir):
-    empties = []
+    """Every query returns rows, and — the catalog leak gate — once its
+    result is counted, ``fence.release_all()`` leaves no persisted RDD and
+    no cached plan behind: every pin a query makes goes through the fence."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def sweep():
+        spark.catalog.clearCache()
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        for rid in list(jmap.keySet().toArray()):
+            jmap.get(rid).unpersist()
+
+    sweep()
+    empties, leaks = [], {}
     for name, spec in CATALOG.items():
         if spec.fn(spark, sf_dir).limit(1).count() == 0 and name != "q_no_orders":
             empties.append(name)
+        fence.release_all()
+        n_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
+        if n_rdds or not cache.isEmpty():
+            leaks[name] = n_rdds
+            sweep()  # attribute each leak to the query that made it
     # q_no_orders may legitimately be empty depending on data; everything else
     # must discriminate (FIXTURES.md distribution requirements).
     assert not empties, f"queries returning zero rows: {empties}"
+    assert not leaks, f"queries leaving pins behind (persistent RDDs): {leaks}"
 
 
 def test_no_decimal_reaches_any_output_schema(spark, sf_dir):

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from amazon_fresh_sql_data_engineering_spark import fence
 from amazon_fresh_sql_data_engineering_spark.operators.ranking import (
     global_cumsum,
     global_lead,
@@ -265,12 +266,14 @@ def test_pin_modes_all_agree(spark):
         F.col("id"), (F.pmod(F.hash("id"), F.lit(321))).alias("v")
     )
     exp = {(r.id, r.r) for r in global_rank(df, "v", "r").collect()}
-    for pin in ("checkpoint", None):
-        got = {(r.id, r.r) for r in global_rank(df, "v", "r", pin=pin).collect()}
-        assert got == exp, pin
-    with pytest.raises(ValueError, match="pin"):
-        global_rank(df, "v", "r", pin="reliable")
+    for src in (fence.checkpoint(df), df):
+        got = {(r.id, r.r) for r in global_rank(src, "v", "r", pin=None).collect()}
+        assert got == exp
+    for bad in ("checkpoint", "reliable"):
+        with pytest.raises(ValueError, match="pin"):
+            global_rank(df, "v", "r", pin=bad)
     spark.catalog.clearCache()
+    fence.release_all()
 
 
 def test_cumsum_indexed_scratch_guard_and_empty_values(spark):
