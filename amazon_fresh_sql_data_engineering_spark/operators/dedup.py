@@ -33,7 +33,7 @@ from pyspark.sql.types import ArrayType, LongType
 from .. import fence
 from ..functions.text import tokens
 from ..functions.vectors import cosine_pairs, matrix_dots_udf
-from ..sources.loaders import read_parquet
+from ..sources.loaders import read_parquet, read_record
 
 # Mersenne-31: keeps (a*h + b) < 2^62, so permutation arithmetic never
 # overflows a long even under ANSI mode (a vanilla Spark 4 session has
@@ -1000,104 +1000,24 @@ def embedding_dedup_pairs(
     )
 
 
-def write_minhash_store(
-    features: DataFrame,
-    path: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    num_prefixes: int = 64,
-    k: int = 3,
-    seed: int = 42,
-) -> None:
-    """Persist a ``minhash_features`` frame as an on-disk incremental-dedup
-    feature store laid out for PRUNED probes (the 100 TB lever the
-    streaming sink notes as "partition the index by bucket prefix"):
-
-    - ``{path}/features`` — ``(__id, __sig, __h)``: the verify tier
-      (shingle sets ride with the store, history is never re-shingled);
-    - ``{path}/index`` — the banded LSH rows ``(__id, bucket)``
-      PARTITIONED BY ``(band, __pfx = xxhash64(bucket) mod num_prefixes)``,
-      so a batch probe reads only the (band, prefix) directories its own
-      buckets hash into — bands*num_prefixes directories total, each
-      ~1/(bands*num_prefixes) of the index — instead of scanning it all.
-
-    Append new batches with mode='append' writes of the same two frames;
-    the layout is stable because __pfx is a pure function of the bucket.
-
-    A one-row ``{path}/manifest`` records (num_hashes, bands, num_prefixes,
-    k, seed): every algorithm parameter changes the bucket strings or the
-    partition layout, so a probe under different values would silently
-    MISS true pairs — the probe therefore takes its parameters from the
-    manifest, never from its caller. ``k``/``seed`` ride along because the
-    batch features must be computed under the store's hashing.
-    """
-    spark = features.sparkSession
-    # the manifest exists to prevent silent probe misses, so it must not
-    # itself record a lie: assert the features frame really was built under
-    # num_hashes before stamping it (ADVICE r6 — a frame built with other
-    # parameters would yield an index/manifest that disagrees with the
-    # stored signatures). One limit-1 job, metadata-bounded at any scale.
-    head = features.select(F.size("__sig").alias("n")).first()
-    if head is not None and head["n"] != num_hashes:
+def store_manifest(path: str) -> dict:
+    """The store's one-row manifest ``(num_hashes, bands, num_prefixes, k,
+    seed)`` as a dict, read driver-side (:func:`..sources.loaders.read_record`:
+    no inference or collect job). Every parameter changes the bucket
+    strings or the partition layout, so a consumer must take them from
+    here, never from its own defaults. A path with no manifest is not a
+    store and fails loudly."""
+    m = read_record(f"{path}/manifest")
+    if m is None:
         raise ValueError(
-            f"write_minhash_store: features carry {head['n']}-hash signatures "
-            f"but num_hashes={num_hashes} was declared — the manifest would "
-            "silently mis-describe the store"
+            f"{path} is not a minhash store: it has no manifest "
+            "(create one with bootstrap_minhash_store)"
         )
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"write_minhash_store: bands={bands} must divide num_hashes={num_hashes}"
-        )
-    features.write.mode("overwrite").parquet(f"{path}/features")
-    idx = _bands_from_sig(features.select("__id", "__sig"), num_hashes, bands)
-    idx = idx.withColumn(
-        "__pfx", F.pmod(F.xxhash64("bucket"), F.lit(num_prefixes))
-    )
-    # cluster on the partition keys before the partitioned write: without
-    # this every input partition writes into every (band, pfx) directory —
-    # input_partitions x bands x num_prefixes tiny files (the classic
-    # partitionBy small-files explosion); with it each directory gets one
-    # writer. The clustering shuffle is index-sized, paid once at build.
-    idx = idx.repartition("band", "__pfx")
-    idx.write.mode("overwrite").partitionBy("band", "__pfx").parquet(f"{path}/index")
-    _write_manifest(spark, path, num_hashes, bands, num_prefixes, k, seed, "batch")
+    return m
 
 
-def _write_manifest(spark, path, num_hashes, bands, num_prefixes, k, seed, layout):
-    spark.createDataFrame(
-        [(num_hashes, bands, num_prefixes, k, seed, layout)],
-        "num_hashes int, bands int, num_prefixes int, k int, seed int, "
-        "layout string",
-    ).write.mode("overwrite").parquet(f"{path}/manifest")
-
-
-def _manifest_layout(m) -> str:
-    """Layout of a store manifest row; pre-r8 manifests lack the column
-    and are by construction batch-layout."""
-    d = m.asDict() if hasattr(m, "asDict") else m
-    return d.get("layout") or "batch"
-
-
-def _read_manifest(spark, path: str) -> dict:
-    """One-row store manifest as a dict, read DRIVER-SIDE (r12, guide §1.2
-    fewer actions): the manifest is table-format metadata — Delta/Iceberg
-    read theirs without a cluster job, and so does this (a Spark read of a
-    one-row parquet costs a schema-inference job plus a collect job, two
-    of the probe's ~6 sequential driver actions). Falls back to the Spark
-    read for filesystems pyarrow cannot reach, preserving the original
-    error behavior for missing/corrupt manifests."""
-    mdir = f"{path}/manifest"
-    try:
-        import pyarrow.parquet as _pq
-
-        t = _pq.read_table(mdir)
-        return {c: t.column(c)[0].as_py() for c in t.column_names}
-    except Exception:  # noqa: BLE001 — non-local path or unreadable: let Spark decide
-        return read_parquet(spark, mdir).collect()[0].asDict()
-
-
-#: versioned root of an append-layout store: the live index/features trees
-#: sit inside one generation directory ``{path}/store/data/v=N``
+#: versioned root of a store: the live index/features trees sit inside one
+#: generation directory ``{path}/store/data/v=N``
 _GEN = "store"
 
 
@@ -1106,18 +1026,39 @@ def _gen_root(path: str) -> str:
 
 
 def _store_trees(path: str) -> tuple[str, str]:
-    """Resolved ``(features_dir, index_dir)`` live trees of a minhash
-    store. Batch-layout stores keep both trees at the store root;
-    append-layout stores resolve through the generation pointer — appends
-    are dynamic partition overwrites INTO the current generation (the live
-    tree is mutable; what is immutable is a SUPERSEDED generation), and
-    only compaction creates a new generation."""
+    """Resolved ``(features_dir, index_dir)`` live trees of a minhash store,
+    through the generation pointer — appends are dynamic partition
+    overwrites INTO the current generation (the live tree is mutable; what
+    is immutable is a SUPERSEDED generation), and only compaction creates
+    a new generation. A path with no pointer is not a store."""
     from ..sources import versioned as V
 
     root = _gen_root(path)
     v = V.current_version(root)
-    d = V.snapshot_path(root, v) if v is not None else path
+    if v is None:
+        raise ValueError(
+            f"{path} is not a minhash store: it has no generation pointer "
+            "(create one with bootstrap_minhash_store)"
+        )
+    d = V.snapshot_path(root, v)
     return f"{d}/features", f"{d}/index"
+
+
+def store_ingests(path: str) -> list[int]:
+    """Ingest keys the store's live generation holds, ascending — empty
+    until the first non-empty append ("has this store ingested
+    anything"). Read from the ``__ingest=`` partition directory names of
+    the features tree: no Spark job."""
+    import os
+
+    feats_dir = _store_trees(path)[0]
+    if not os.path.isdir(feats_dir):
+        return []
+    return sorted(
+        int(d.split("=", 1)[1])
+        for d in os.listdir(feats_dir)
+        if d.startswith("__ingest=")
+    )
 
 
 def heal_minhash_store(path: str) -> None:
@@ -1128,7 +1069,7 @@ def heal_minhash_store(path: str) -> None:
     business: they are retained reader-grace history
     (``compact_minhash_store(keep_generations>1)``) or a post-flip vacuum
     crash's leftovers, and the next compaction's vacuum applies the
-    retention policy either way. A no-op on batch-layout stores."""
+    retention policy either way."""
     from ..sources import versioned as V
 
     V.heal(_gen_root(path))
@@ -1143,12 +1084,25 @@ def bootstrap_minhash_store(
     k: int = 3,
     seed: int = 42,
 ) -> None:
-    """Create an EMPTY append-layout store: manifest plus an empty
-    generation 1 (index/features appear with the first
-    ``append_minhash_store``). The append layout carries an extra
-    ``__ingest`` partition column on both frames — a monotone batch key —
-    which ``write_minhash_store``'s batch layout does not; the two layouts
-    must not be mixed in one store.
+    """Create an EMPTY on-disk minhash store laid out for PRUNED probes
+    (``minhash_store_probe``); ``append_minhash_store`` fills it:
+
+    - ``features`` — ``(__id, __sig, __h)`` partitioned by ``__ingest``:
+      the verify tier (shingle sets ride with the store, history is never
+      re-shingled);
+    - ``index`` — the banded LSH rows ``(__id, bucket)`` partitioned by
+      ``(band, __pfx = xxhash64(bucket) mod num_prefixes, __ingest)``, so
+      a batch probe reads only the (band, prefix) directories its own
+      buckets hash into instead of scanning the whole index;
+    - ``manifest`` — one row ``(num_hashes, bands, num_prefixes, k,
+      seed)``: every parameter changes the bucket strings or the partition
+      layout, so a probe under different values would silently MISS true
+      pairs — consumers take them from :func:`store_manifest`, never from
+      their caller.
+
+    ``__ingest`` is a monotone batch key. A store built from one corpus is
+    this bootstrap plus ``append_minhash_store(features, path, 0)``; the
+    index/features trees appear with the first non-empty append.
 
     Both live trees sit inside ONE generation directory
     ``{path}/store/data/v=N`` behind a pointer (:mod:`..sources.versioned`).
@@ -1165,7 +1119,10 @@ def bootstrap_minhash_store(
         raise ValueError(
             f"bootstrap_minhash_store: bands={bands} must divide num_hashes={num_hashes}"
         )
-    _write_manifest(spark, path, num_hashes, bands, num_prefixes, k, seed, "append")
+    spark.createDataFrame(
+        [(num_hashes, bands, num_prefixes, k, seed)],
+        "num_hashes int, bands int, num_prefixes int, k int, seed int",
+    ).write.mode("overwrite").parquet(f"{path}/manifest")
     # generation 1 starts EMPTY: the version directory exists so the
     # pointer has a referent, but the features/index subtrees only appear
     # with the first append ("has this store ingested anything yet")
@@ -1175,7 +1132,7 @@ def bootstrap_minhash_store(
 
 
 def append_minhash_store(features: DataFrame, path: str, ingest_id: int) -> None:
-    """Accrete one batch's ``minhash_features`` into an append-layout store
+    """Accrete one batch's ``minhash_features`` into a store
     (``bootstrap_minhash_store``), REPLAY-IDEMPOTENTLY: both writes are
     dynamic partition overwrites of the batch's own ``__ingest`` leaf
     partitions, so re-running the same (features, ingest_id) replaces the
@@ -1193,19 +1150,7 @@ def append_minhash_store(features: DataFrame, path: str, ingest_id: int) -> None
     the batch's own leaves inside the live tree; only compaction changes
     generations).
     """
-    spark = features.sparkSession
-    m = _read_manifest(spark, path)
-    # layout guard (self-review r8): the manifests are otherwise
-    # identical, and appending __ingest leaves under a batch-layout
-    # index makes partition discovery fail FAR from the cause
-    # ("Conflicting directory structures") — reject here instead
-    if _manifest_layout(m) != "append":
-        raise ValueError(
-            f"append_minhash_store: {path} is a batch-layout store "
-            "(write_minhash_store); appending __ingest partitions would "
-            "corrupt its partition tree. Bootstrap a new store with "
-            "bootstrap_minhash_store for the append layout."
-        )
+    m = store_manifest(path)
     num_hashes, bands, num_prefixes = m["num_hashes"], m["bands"], m["num_prefixes"]
     head = features.select(F.size("__sig").alias("n")).first()
     if head is None:
@@ -1227,7 +1172,11 @@ def append_minhash_store(features: DataFrame, path: str, ingest_id: int) -> None
     idx = idx.withColumn(
         "__pfx", F.pmod(F.xxhash64("bucket"), F.lit(num_prefixes))
     ).withColumn("__ingest", F.lit(ingest_id).cast("long"))
-    # same one-writer-per-directory clustering as the batch layout
+    # cluster on the partition keys before the partitioned write: without
+    # this every input partition writes into every (band, pfx) directory —
+    # input_partitions x bands x num_prefixes tiny files (the classic
+    # partitionBy small-files explosion); with it each directory gets one
+    # writer. The clustering shuffle is batch-index-sized.
     idx = idx.repartition("band", "__pfx")
     (
         idx.write.mode("overwrite")
@@ -1240,7 +1189,7 @@ def append_minhash_store(features: DataFrame, path: str, ingest_id: int) -> None
 def compact_minhash_store(
     spark, path: str, upto_exclusive: int, keep_generations: int = 1
 ) -> tuple[int, int]:
-    """Fold an append-layout store's accumulated ingest partitions together
+    """Fold a store's accumulated ingest partitions together
     (the OPTIMIZE of the log-structured dedup store).
 
     Every ``append_minhash_store`` batch adds one leaf-file set per
@@ -1293,33 +1242,22 @@ def compact_minhash_store(
             _glob.glob(_os.path.join(feats_dir, "**", "*.parquet"), recursive=True)
         )
 
-    m = _read_manifest(spark, path)
-    if _manifest_layout(m) != "append":
-        raise ValueError(
-            f"compact_minhash_store: {path} is a batch-layout store — "
-            "only the append layout accretes ingest partitions"
-        )
     from ..sources import versioned as V
 
     root = _gen_root(path)
-    if V.current_version(root) is None:
-        raise ValueError(
-            f"compact_minhash_store: {path} has no generation pointer — an "
-            "append store that predates generation publishing; rebuild it "
-            "with bootstrap_minhash_store"
-        )
+    # resolved first: a path with no pointer fails here, before heal
+    feats_dir, idx_dir = _store_trees(path)
     # a PRIOR compaction may have crashed before its flip — prune its
     # generation before reading (the in-loop caller replays the same
     # batch, so the re-run lands here first and self-heals)
     heal_minhash_store(path)
-    feats_dir, idx_dir = _store_trees(path)
     before = _nfiles(feats_dir, idx_dir)
     stamp = F.lit(upto_exclusive - 1).cast("long")
     folded_ing = F.when(
         F.col("__ingest") < upto_exclusive, stamp
     ).otherwise(F.col("__ingest"))
     idx = read_parquet(spark, idx_dir).withColumn("__ingest", folded_ing)
-    # one writer per directory (the write_minhash_store clustering rule)
+    # one writer per directory (append_minhash_store's clustering rule)
     idx = idx.repartition("band", "__pfx")
     feats = read_parquet(spark, feats_dir).withColumn("__ingest", folded_ing)
     feats = feats.repartition("__ingest")
@@ -1339,46 +1277,45 @@ def compact_minhash_store(
     return before, _nfiles(f"{next_dir}/features", f"{next_dir}/index")
 
 
+#: a probe prunes the index scan only while the batch touches at most this
+#: many (band, pfx) directories (and at most half of them, see the probe)
+MAX_PRUNED_TERMS = 4096
+
+
 def minhash_store_probe(
     batch_docs: DataFrame,
     path: str,
     id_col: str,
     text_col: str,
     threshold: float = 0.7,
-    max_pruned_terms: int = 4096,
-    broadcast_batch: bool = True,
     max_broadcast_candidates: int = 2_000_000,
     batch_features: DataFrame | None = None,
     max_ingest_exclusive: int | None = None,
 ) -> DataFrame:
-    """``minhash_incremental_pairs`` against a ``write_minhash_store``
-    directory, with STATIC partition pruning: the batch's distinct
-    (band, prefix) pairs — a metadata-bounded driver collect of at most
-    ``bands * num_prefixes`` tuples — become partition filters on the index
-    scan, so only matching directories are read (PartitionFilters
-    plan-asserted in tests). Falls back to a full index scan if the batch
-    somehow touches more than ``max_pruned_terms`` partitions (then
-    pruning buys nothing).
+    """``minhash_incremental_pairs`` against an on-disk store
+    (``bootstrap_minhash_store`` + ``append_minhash_store``), with STATIC
+    partition pruning: the batch's distinct (band, prefix) pairs — a
+    metadata-bounded driver collect of at most ``bands * num_prefixes``
+    tuples — become partition filters on the index scan, so only matching
+    directories are read (PartitionFilters plan-asserted in tests). Falls
+    back to a full index scan if the batch touches more than
+    ``MAX_PRUNED_TERMS`` partitions (then pruning buys nothing).
 
     Algorithm parameters come from the store's MANIFEST, never from the
     caller: any mismatch (different num_hashes/bands/k/seed changes the
     bucket strings, different num_prefixes changes the partition layout)
     would silently MISS true pairs rather than fail.
 
-    ``broadcast_batch`` (default True — the incremental contract: a probe
-    batch is minutes/hours of new docs vs an accreted store, so it is
-    store-fraction-sized by construction) pins every batch-derived frame
-    to the broadcast side, making the store side EXCHANGE-FREE: the pruned
-    index scan and the feature scan stream straight into broadcast hash
-    joins (plan-asserted in tests — no SortMergeJoin/ShuffledHashJoin
-    anywhere in the probe). Pass False for backfill-scale batches; the
-    joins fall back to shuffles. The candidate-PAIR frame's hint is
-    additionally guarded by a count (``_incremental_verify``): pair count
-    is store-bucket-occupancy-driven, not batch-bounded, so a hot bucket
-    degrades that one join to a shuffle instead of an oversized broadcast
-    (ADVICE r7). (A metastore deployment can get the same
-    store-side locality with ``bucketBy(bucket).saveAsTable`` instead, but
-    broadcast needs no catalog and also removes the verify-side exchange.)
+    Every batch-derived frame is pinned to the broadcast side (the
+    incremental contract: a probe batch is minutes/hours of new docs vs an
+    accreted store, so it is store-fraction-sized by construction),
+    making the store side EXCHANGE-FREE: the pruned index scan and the
+    feature scan stream straight into broadcast hash joins (plan-asserted
+    in tests — no SortMergeJoin/ShuffledHashJoin anywhere in the probe).
+    The candidate-PAIR frame's hint is additionally guarded by a count
+    (``_incremental_verify``): pair count is store-bucket-occupancy-driven,
+    not batch-bounded, so a hot bucket degrades that one join to a shuffle
+    instead of an oversized broadcast (ADVICE r7).
 
     ``batch_features`` lets a caller that ALREADY computed the batch's
     ``minhash_features`` (the streaming accrete-then-probe loop pays the
@@ -1386,21 +1323,18 @@ def minhash_store_probe(
     sanity-checked against the manifest's num_hashes — the manifest exists
     to prevent silent misses, so a bypass must not reopen that hole.
     ``max_ingest_exclusive`` restricts the store side to ingest keys
-    strictly below the given value — only meaningful for APPEND-layout
-    stores (``append_minhash_store``), where it makes probe-after-append
+    strictly below the given value, which makes probe-after-append
     replay-idempotent: the probe sees exactly the history older than the
     batch being folded, even if that batch's own rows already landed.
+
+    A store that has ingested nothing yet probes as EMPTY history: the
+    result is the within-batch pairs (``vs = 'batch'``) alone.
     """
     spark = batch_docs.sparkSession
-    m = _read_manifest(spark, path)
+    m = store_manifest(path)
     num_hashes, bands, num_prefixes, k, seed = (
         m["num_hashes"], m["bands"], m["num_prefixes"], m["k"], m["seed"]
     )
-    if max_ingest_exclusive is not None and _manifest_layout(m) != "append":
-        raise ValueError(
-            "minhash_store_probe: max_ingest_exclusive needs an "
-            "append-layout store (batch layouts carry no __ingest column)"
-        )
     if batch_features is not None:
         head = batch_features.select(F.size("__sig").alias("n")).first()
         if head is not None and head["n"] != num_hashes:
@@ -1417,6 +1351,14 @@ def minhash_store_probe(
     new_bands = fence.persist(_bands_from_sig(
         new_feats.select("__id", "__sig"), num_hashes, bands
     ).withColumn("__pfx", F.pmod(F.xxhash64("bucket"), F.lit(num_prefixes))))
+    if not store_ingests(path):
+        # no trees on disk yet: the batch's own frames, emptied, stand in
+        # for the history (same columns, no rows)
+        return _incremental_verify(
+            new_feats.limit(0), new_feats, new_bands, new_bands.limit(0),
+            threshold, broadcast_new=True,
+            max_broadcast_candidates=max_broadcast_candidates,
+        )
     # §2.6 overlap: the store-tree reads (partition discovery, plus a
     # schema-inference job whenever the tree changed since its last read)
     # are independent of the batch's feature pass — submit them from a
@@ -1439,10 +1381,10 @@ def minhash_store_probe(
     # 1024-dir store probed SLOWER pruned than full-scan); the pruning
     # regime is small-batch-vs-big-store, which is the incremental
     # contract's steady state
-    prune_cap = min(max_pruned_terms, (bands * num_prefixes) // 2)
+    prune_cap = min(MAX_PRUNED_TERMS, (bands * num_prefixes) // 2)
     if 0 < len(touched) <= prune_cap:
         # ONE flat In node, not an OR chain: a reduce-built Or tree is
-        # max_pruned_terms deep and overflows the JVM analyzer stack past
+        # MAX_PRUNED_TERMS deep and overflows the JVM analyzer stack past
         # a few hundred terms (hit at 656 in testing). Encoding the pair
         # as band*P + pfx keeps the predicate a pure function of the two
         # partition columns, so it still lands in PartitionFilters
@@ -1452,14 +1394,14 @@ def minhash_store_probe(
         idx = idx.filter(enc.isin([b * num_prefixes + p for b, p in touched]))
     store_features = _fut_feats.result()
     if max_ingest_exclusive is not None:
-        # __ingest is a partition column in append-layout stores, so both
-        # filters prune directories, composing with the (band, pfx) prune
+        # __ingest is a partition column of both trees, so both filters
+        # prune directories, composing with the (band, pfx) prune
         idx = idx.filter(F.col("__ingest") < F.lit(max_ingest_exclusive))
         store_features = store_features.filter(
             F.col("__ingest") < F.lit(max_ingest_exclusive)
         )
     return _incremental_verify(
         store_features, new_feats, new_bands, idx, threshold,
-        broadcast_new=broadcast_batch,
+        broadcast_new=True,
         max_broadcast_candidates=max_broadcast_candidates,
     )

@@ -8,14 +8,17 @@ scale-out behavior:
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing) — at
   100 TB this is what turns a static 32-partition plan into right-sized
   stages.
-- ``spark.sql.session.timeZone=UTC`` — timestamp determinism vs the oracle.
 - Arrow enabled — any pandas-UDF exchange is columnar, not pickled rows.
-- ANSI off — failed casts yield NULL like the reference's
-  validate-before-cast pipeline expects (ref TablesCreated-Imported.sql:245
-  guards every cast with a regex; we replicate that pattern, see
-  functions/cleaning.py).
-- ``timeParserPolicy=CORRECTED`` — ``to_date('M/d/yyyy')`` matches PG's
-  1-2-digit tolerant ``MM/DD/YYYY`` (ref TablesCreated-Imported.sql:174).
+- The semantics confs (UTC session time zone, ANSI off, CORRECTED date
+  parsing, nanosAsLong) come from ``registry.ensure_engine_confs``, the one
+  list the engine also pins on a session someone else built:
+  - UTC — timestamp determinism vs the oracle;
+  - ANSI off — failed casts yield NULL like the reference's
+    validate-before-cast pipeline expects (ref TablesCreated-Imported.sql:245
+    guards every cast with a regex; we replicate that pattern, see
+    functions/cleaning.py);
+  - ``timeParserPolicy=CORRECTED`` — ``to_date('M/d/yyyy')`` matches PG's
+    1-2-digit tolerant ``MM/DD/YYYY`` (ref TablesCreated-Imported.sql:174).
 """
 
 from __future__ import annotations
@@ -23,6 +26,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from .registry import ensure_engine_confs
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -60,10 +65,6 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Determinism vs the DuckDB oracle.
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.legacy.timeParserPolicy", "CORRECTED")
         # Columnar Python exchange for pandas UDFs / mapInPandas.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Keep parquet scans vectorized + pushdown-friendly (defaults, spelled
@@ -84,5 +85,6 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    ensure_engine_confs(spark)
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -170,6 +170,24 @@ def read_parquet(spark: SparkSession, *paths: str, **options) -> DataFrame:
     return df
 
 
+def read_record(path: str) -> dict | None:
+    """First row of a one-row parquet directory (a store manifest, a stream
+    owner record) as a dict, read DRIVER-SIDE with pyarrow: table-format
+    metadata needs no schema-inference or collect job. None when the
+    directory is missing or holds no rows (a torn overwrite leaves only
+    ``_temporary``/``_SUCCESS`` entries, which pyarrow skips). Local paths
+    only, like every store and sink path."""
+    import pyarrow.parquet as pq
+
+    try:
+        t = pq.read_table(path)
+    except FileNotFoundError:
+        return None
+    if t.num_rows == 0:
+        return None
+    return {c: t.column(c)[0].as_py() for c in t.column_names}
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
 

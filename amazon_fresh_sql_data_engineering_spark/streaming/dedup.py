@@ -1,12 +1,13 @@
 """Continuous corpus near-dedup ingest: the production loop the on-disk
-minhash store exists for (operators/dedup.py `write_minhash_store` /
-`minhash_store_probe`), run as a stream — each arriving micro-batch of
-documents is (a) ACCRETED into the persistent feature store and (b) PROBED
-against all PRIOR history, emitting its near-duplicate pairs. Draining a
-corpus through this loop yields exactly `minhash_dedup_pairs(full corpus)`
-(asserted in tests/test_streaming.py) while only ever paying batch-sized
-work per batch: one Arrow shingling pass over the NEW docs (shared by
-accrete and probe), a (band, pfx)-pruned index probe, and pair-sized joins.
+minhash store exists for (operators/dedup.py `bootstrap_minhash_store` /
+`append_minhash_store` / `minhash_store_probe`), run as a stream — each
+arriving micro-batch of documents is (a) ACCRETED into the persistent
+feature store and (b) PROBED against all PRIOR history, emitting its
+near-duplicate pairs. Draining a corpus through this loop yields exactly
+`minhash_dedup_pairs(full corpus)` (asserted in tests/test_streaming.py)
+while only ever paying batch-sized work per batch: one Arrow shingling
+pass over the NEW docs (shared by accrete and probe), a (band, pfx)-pruned
+index probe, and pair-sized joins.
 
 Replay safety WITHOUT a ledger: every side effect is a dynamic partition
 overwrite keyed on the batch —
@@ -39,14 +40,16 @@ foreachBatch's at-least-once contract (only the LAST uncommitted batch
 ever replays), so no fold target can be re-appended. File count then
 stays bounded across an arbitrarily long drain (pytest-asserted).
 
-PUBLISH: append-layout stores keep their live trees in one generation
-directory ``store/data/v=N`` behind a pointer (:mod:`..sources.versioned`).
-Appends are dynamic partition overwrites into the CURRENT generation;
-compaction materializes generation N+1 and flips one pointer, so both
-trees publish together and crash windows are garbage to prune, never
-state to restore. The whole loop runs on driver-side ``os`` calls and
-DataFrame I/O — no JVM filesystem gateway, so it also runs under Spark
-Connect.
+PUBLISH: a store keeps its live trees in one generation directory behind
+a pointer (:mod:`..sources.versioned`). Appends are dynamic partition
+overwrites into the CURRENT generation; compaction materializes
+generation N+1 and flips one pointer, so both trees publish together and
+crash windows are garbage to prune, never state to restore. The store's
+on-disk format is operators/dedup.py's alone: this loop reads the
+manifest (``store_manifest``) and the ingested keys (``store_ingests``)
+through it and touches no store path itself. The whole loop runs on
+driver-side ``os``/pyarrow calls and DataFrame I/O — no JVM filesystem
+gateway, so it also runs under Spark Connect.
 
 OWNERSHIP (the streaming/mv.py lesson, ADVICE r7): micro-batch ids are
 checkpoint-scoped, so a fresh checkpoint restarting at 0 would dynamic-
@@ -66,40 +69,31 @@ from pyspark.sql import functions as F
 
 from .. import fence
 from ..operators.dedup import (
-    _store_trees,
     append_minhash_store,
+    compact_minhash_store,
     heal_minhash_store,
     minhash_features,
     minhash_store_probe,
+    store_ingests,
+    store_manifest,
 )
-from ..sources.loaders import read_parquet
+from ..sources.loaders import read_parquet, read_record
 from .mv import _owner_id
 
 _EPOCH_SPAN = 1_000_000_000
 
 
-def _read_stream_meta(spark: SparkSession, store_path: str):
-    from pyspark.errors import AnalysisException
-
-    try:
-        row = read_parquet(spark, f"{store_path}/stream").collect()[0]
-        return row["owner"], row["epoch"]
-    except AnalysisException:
-        return None, None
+def _read_stream_meta(store_path: str):
+    """``(owner, epoch)`` of the store's stream record; ``(None, None)``
+    when the record is missing or empty (no owner)."""
+    row = read_record(f"{store_path}/stream")
+    return (row["owner"], row["epoch"]) if row else (None, None)
 
 
 def _write_stream_meta(spark: SparkSession, store_path: str, owner: str, epoch: int) -> None:
     spark.createDataFrame(
         [(owner, epoch)], "owner string, epoch long"
     ).write.mode("overwrite").parquet(f"{store_path}/stream")
-
-
-def _features_present(store_path: str) -> bool:
-    """Has this store ingested anything yet? The live features tree
-    appears with the first append."""
-    import os
-
-    return os.path.isdir(_store_trees(store_path)[0])
 
 
 def adopt_minhash_store_stream(
@@ -120,20 +114,16 @@ def adopt_minhash_store_stream(
     anything on disk."""
     # prune a torn compaction's unpointed generation before reading
     heal_minhash_store(store_path)
-    owner, epoch = _read_stream_meta(spark, store_path)
+    owner, epoch = _read_stream_meta(store_path)
     if owner is None:
-        if not _features_present(store_path):
+        ingests = store_ingests(store_path)
+        if not ingests:
             raise ValueError(
                 f"dedup stream: {store_path} has no stream record and no "
                 "ingested history — nothing to adopt (a first run stamps "
                 "itself)"
             )
-        max_ingest = (
-            read_parquet(spark, _store_trees(store_path)[0])
-            .agg(F.max("__ingest"))
-            .first()[0]
-        )
-        epoch = max_ingest // _EPOCH_SPAN
+        epoch = ingests[-1] // _EPOCH_SPAN
     new_epoch = epoch + 1
     _write_stream_meta(spark, store_path, _owner_id(checkpoint_dir), new_epoch)
     return new_epoch
@@ -173,8 +163,6 @@ def run_store_dedup_stream(
     are untouched, then dynamically overwritten by the re-accrete).
     Probe results are compaction-invariant (the folded stamp is
     ``upto - 1`` < every future ``max_ingest_exclusive``)."""
-    from ..operators.dedup import compact_minhash_store
-
     owner = _owner_id(checkpoint_dir)
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
@@ -182,14 +170,14 @@ def run_store_dedup_stream(
         # prune a torn compaction's unpointed generation before anything
         # reads the store
         heal_minhash_store(store_path)
-        cur_owner, epoch = _read_stream_meta(spark, store_path)
+        cur_owner, epoch = _read_stream_meta(store_path)
         if cur_owner is None:
             # a MISSING stream record over a store that already holds
             # history is a torn record (its overwrite is delete-then-
             # write), NOT an unowned store — stamping epoch 0 here would
             # be exactly the ingest-key collision the guard exists to
             # prevent (self-review r8). Fail loudly; adopt recovers.
-            if _features_present(store_path):
+            if store_ingests(store_path):
                 raise ValueError(
                     f"dedup stream: store {store_path} holds ingested "
                     "history but its stream record is missing (torn "
@@ -211,22 +199,20 @@ def run_store_dedup_stream(
             compact_every
             and batch_id > 0
             and batch_id % compact_every == 0
-            and _features_present(store_path)
+            and store_ingests(store_path)
         ):
             # everything strictly below THIS batch's ingest key is
             # committed (docstring) — fold it before we accrete
             compact_minhash_store(spark, store_path, ingest)
-        m = read_parquet(spark, f"{store_path}/manifest").collect()[0]
+        m = store_manifest(store_path)
         # a throwing batch REPLAYS: the scope frees its pins on failure too
         with fence.scope():
             feats = fence.persist(minhash_features(
                 batch_df, id_col, text_col, m["num_hashes"], m["k"], m["seed"]
             ))
             if feats.first() is None:
-                # empty micro-batch: nothing to accrete, nothing to pair —
-                # and on a freshly bootstrapped store the probe would read
-                # the not-yet-created features dir and wedge the stream on
-                # every replay (self-review r8)
+                # empty micro-batch: nothing to accrete, nothing to pair,
+                # so skip the probe's jobs and the pairs write
                 return
             # accrete FIRST (idempotent overwrite of this batch's leaf
             # partitions), then probe history strictly older than us —

@@ -579,30 +579,6 @@ def test_zorder_scratch_column_collisions_raise(spark):
         L.zorder_frame(df.withColumn("__z_key", F.lit(1)), ["id"], num_files=2)
 
 
-def test_append_store_rejects_batch_layout(spark, tmp_path):
-    """Appending __ingest partitions to a write_minhash_store layout would
-    corrupt its partition tree far from the cause — rejected up front
-    (self-review r8)."""
-    import pytest
-
-    from amazon_fresh_sql_data_engineering_spark.operators import dedup as D
-
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog today"),
-         (2, "a completely different document about parquet files")],
-        "doc_id long, text string",
-    )
-    feats = D.minhash_features(docs, "doc_id", "text", 64, 3, 42)
-    path = str(tmp_path / "batch_store")
-    D.write_minhash_store(feats, path, num_prefixes=8)
-    with pytest.raises(ValueError, match="batch-layout"):
-        D.append_minhash_store(feats, path, 0)
-    with pytest.raises(ValueError, match="append-layout"):
-        D.minhash_store_probe(
-            docs, path, "doc_id", "text", max_ingest_exclusive=1
-        )
-
-
 def test_compact_files_heals_torn_swap(spark, sf_dir, tmp_path):
     """compact_files replaces a plain directory with two renames through
     hidden siblings. A crash between them leaves the table only in its

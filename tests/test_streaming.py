@@ -975,7 +975,7 @@ def test_store_dedup_stream_accretes_and_matches_full_corpus(spark, sf_dir, tmp_
     # torn-batch replay: re-run the LAST batch's three effects by hand
     # (accrete + probe + publish under the same ingest key) — dynamic
     # partition overwrite + max_ingest_exclusive make it a no-op
-    _owner, epoch = SD._read_stream_meta(spark, store)
+    _owner, epoch = SD._read_stream_meta(store)
     last_key = epoch * SD._EPOCH_SPAN + 1  # second micro-batch
     feats = D.minhash_features(
         wave2, "doc_id", "text", 64, 3, 42
@@ -1380,14 +1380,14 @@ def test_store_dedup_stream_from_staged_seed(spark, sf_dir, tmp_path):
     planted copies, and every copy pairs with its original in the SEEDED
     history (never re-shingled); cache reuse returns the same directory."""
     from amazon_fresh_sql_data_engineering_spark.queries_ext import (
-        _corpus_append_store,
+        _corpus_store,
         staged_append_store_copy,
     )
     from amazon_fresh_sql_data_engineering_spark.streaming import dedup as SD
 
     store = staged_append_store_copy(spark, sf_dir, str(tmp_path / "store"))
     # once-per-process: the second lookup is the SAME staged directory
-    assert _corpus_append_store(spark, sf_dir) == _corpus_append_store(spark, sf_dir)
+    assert _corpus_store(spark, sf_dir) == _corpus_store(spark, sf_dir)
     ckpt = str(tmp_path / "ckpt")
     epoch = SD.adopt_minhash_store_stream(spark, store, ckpt)
     assert epoch >= 1  # derived from the seed's keys: cannot collide
@@ -1774,7 +1774,7 @@ def test_store_dedup_stream_pointer_publish_no_gateway(spark, sf_dir, tmp_path):
     feats_dir, idx_dir = D._store_trees(store)
     assert feats_dir.startswith(f"{root}/data/v={cur}")
     assert os.path.isdir(feats_dir) and os.path.isdir(idx_dir)
-    # nothing at the store root (the batch-layout tree locations)
+    # the live trees exist only inside the generation, never at the store root
     assert not os.path.exists(f"{store}/features")
     assert not os.path.exists(f"{store}/index")
 
