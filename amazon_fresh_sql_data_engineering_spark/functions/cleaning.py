@@ -45,12 +45,6 @@ def clean_text(c: Column | str) -> Column:
     return F.when(t == "", None).otherwise(t)
 
 
-def blank_to_null(c: Column | str) -> Column:
-    """``NULLIF(x, '')`` without trimming (T:169)."""
-    col = _c(c)
-    return F.when(col == "", None).otherwise(col)
-
-
 def is_valid_uuid(c: Column | str) -> Column:
     """uuid shape predicate ``x ~* '^[0-9a-f]{8}-...'`` (T:245-247)."""
     return F.trim(_c(c)).rlike(UUID_RE)

@@ -54,30 +54,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(d > 0, dot(a, b) / d)
 
 
-def with_const_matrix(df, col_name: str, matrix) -> "DataFrame":  # noqa: F821
-    """Attach a small constant matrix (list of float rows) to every row as
-    one ``array<array<double>>`` column via a broadcast one-row crossJoin.
-
-    Embedding a k x dim matrix as per-cell ``F.lit`` nodes puts k*dim
-    literals into the expression tree; Catalyst analysis + codegen is
-    O(tree size) and measurably dominates small-data ANN queries (seconds
-    of planning for 16x64). A one-row broadcast join keeps the tree tiny
-    and the matrix rides to every executor once — the same pattern that
-    ships centroid/plane state at 100 TB."""
-    spark = df.sparkSession
-    data = [([[float(x) for x in row] for row in matrix],)]
-    row_df = spark.createDataFrame(data, f"{col_name} array<array<double>>")
-    return df.crossJoin(F.broadcast(row_df))
-
-
-def sign_bits(v: Column, planes: Column) -> Column:
-    """``array<int>`` of sign bits of v . p for each plane row (JVM-side;
-    identical accumulation order to the per-plane literal form)."""
-    return F.transform(
-        planes, lambda p: F.when(dot(v, p) >= 0, F.lit(1)).otherwise(F.lit(0))
-    )
-
-
 def _stack(vs: pd.Series) -> np.ndarray:
     return np.stack([np.asarray(v, dtype=np.float64) for v in vs])
 

@@ -7,6 +7,9 @@ O(n²) pair space**:
 - MinHash LSH: shingle -> 64 minhashes -> 16 bands; candidate pairs come
   from a *bucket self-join* (equi-join on band hash — shuffled hash join on
   a high-cardinality key), then exact Jaccard verifies only candidates.
+  One engine (``_minhash_pairs``: a batch against optional history) makes
+  every MinHash pair — batch, incremental, on-disk store probe and the
+  streaming corpus screen.
 - SimHash: 64-bit signature via an Arrow-batched pandas UDF (bit-vote is a
   numpy one-liner; per-row Python would be 100x slower), banded into 4x16-bit
   chunks for candidates, verified by ``bit_count(xor)`` hamming distance.
@@ -253,29 +256,18 @@ def minhash_features(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 64,
-    k: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash signatures: (__id, __sig array<long> of len ``num_hashes``)
-    over k-word shingles; each permutation is (a*h + b) mod M31.
-    See ``minhash_features`` for the execution strategy."""
-    return minhash_features(df, id_col, text_col, num_hashes, k, seed).select("__id", "__sig")
-
-
 def _bands_from_sig(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(__id, band, bucket) banded form of a signature frame — the LSH
     index rows. The bucket key is the band's signature values themselves
     (joined as a string) rather than a hash of them: engine-portable (a SQL
     oracle can build the identical key), collision-free by construction,
     and the equi-join cost is the same — the key is a few dozen bytes
-    either way."""
+    either way. Rows with an empty or NULL ``__sig`` (a doc under the
+    shingle width) band to nothing: every band of theirs would be the
+    bucket ``''``, pairing each such doc with every other one only to
+    verify at 0."""
     rows_per_band = num_hashes // bands
-    return sig.select(
+    return sig.filter(F.size("__sig") > 0).select(
         "__id",
         F.explode(
             F.array(
@@ -297,37 +289,154 @@ def _bands_from_sig(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     ).select("__id", "bb.band", "bb.bucket")
 
 
-def _candidates_from_sig(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """Banded-LSH candidate pairs from a (persisted) signature frame."""
-    banded = _bands_from_sig(sig, num_hashes, bands)
-    left = banded.select(F.col("band"), F.col("bucket"), F.col("__id").alias("id_a"))
-    right = banded.select(F.col("band"), F.col("bucket"), F.col("__id").alias("id_b"))
-    return (
-        left.join(right, on=["band", "bucket"])
+def _minhash_pairs(
+    feats: DataFrame,
+    banded: DataFrame,
+    threshold: float,
+    history: tuple[DataFrame, DataFrame] | None = None,
+    broadcast_new: bool = False,
+    max_broadcast_candidates: int = 2_000_000,
+) -> tuple[DataFrame, DataFrame | None]:
+    """The one MinHash pair engine: a batch against optional history.
+
+    ``feats`` is the batch's persisted ``minhash_features`` and ``banded``
+    its ``_bands_from_sig`` rows (the caller bands once; the store probe
+    also reads them for its partition pruning). ``history`` is the
+    ``(features, bands)`` of already-screened documents: cached features
+    in memory, or the on-disk store's feature scan and pruned index scan.
+
+    Returns ``(within, cross)``, both verified with exact Jaccard on the
+    ``__h`` shingle-hash sets (the same persisted pass the bands came
+    from, so nothing is re-shingled):
+
+    - ``within`` — ``(id_a, id_b, jaccard_sim)`` with ``id_a < id_b``: the
+      batch's band self-join;
+    - ``cross`` — ``(id_new, id_old, jaccard_sim)``: batch vs history, or
+      ``None`` without history. The side lives in the column names, so no
+      caller decodes it from the ids.
+
+    ``broadcast_new=True`` pins every batch-derived frame (bands,
+    candidate pairs, shingle sets) to the build side of its join, so the
+    HISTORY side — index scan and feature scan, the 100 TB frames —
+    streams through broadcast hash joins with ZERO history-side Exchange
+    (the only shuffles left are candidate-pair-sized: the dedup
+    `distinct`). Only safe under the incremental contract that the batch
+    is store-fraction-sized; the in-memory callers keep shuffled joins
+    because they pass arbitrarily large batches.
+
+    The CROSS candidate-pair frame is the one batch-derived frame whose
+    size the incremental contract does NOT bound: it is batch bands x
+    store bucket occupancy, so one hot/skewed bucket in a large store can
+    make it arbitrarily large, and an explicit broadcast hint bypasses
+    autoBroadcastJoinThreshold entirely (ADVICE r7). So the pair frame's
+    hint is GUARDED: pairs are persisted and counted (the count reuses the
+    already-pruned, already-broadcast band join — one cheap job over work
+    the verify pays anyway), and past ``max_broadcast_candidates`` the
+    pair-vs-history-features join falls back to a shuffle while the
+    genuinely batch-sized frames (bands, shingle sets) keep their hints.
+    The broadcast frame is the pair frame ALONE (two longs per row — the
+    join order below attaches shingle arrays only after the history join,
+    so the count cap is a real byte cap): 2M pairs x 16 B = ~32 MB,
+    well inside executor/driver broadcast comfort.
+    """
+    maybe_b = F.broadcast if broadcast_new else (lambda df: df)
+    nb = banded.select("__id", "band", "bucket")
+
+    def shingles_as(df: DataFrame, id_name: str, h_name: str) -> DataFrame:
+        return df.select(F.col("__id").alias(id_name), F.col("__h").alias(h_name))
+
+    within = (
+        maybe_b(nb.select("band", "bucket", F.col("__id").alias("id_a")))
+        .join(nb.select("band", "bucket", F.col("__id").alias("id_b")), on=["band", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
+        .join(maybe_b(shingles_as(feats, "id_a", "__sh_a")), on="id_a")
+        .join(maybe_b(shingles_as(feats, "id_b", "__sh_b")), on="id_b")
+        .select(
+            "id_a",
+            "id_b",
+            jaccard(F.col("__sh_a"), F.col("__sh_b")).alias("jaccard_sim"),
+        )
+        .filter(F.col("jaccard_sim") >= threshold)
     )
+    if history is None:
+        return within, None
+    hist_feats, hist_bands = history
+    cands = (
+        maybe_b(nb.select("band", "bucket", F.col("__id").alias("id_new")))
+        .join(
+            hist_bands.select("band", "bucket", F.col("__id").alias("id_old")),
+            on=["band", "bucket"],
+        )
+        .select("id_new", "id_old")
+        .distinct()
+    )
+    cand_b = lambda df: df  # noqa: E731
+    if broadcast_new:
+        cands = fence.persist(cands)
+        if cands.count() <= max_broadcast_candidates:
+            cand_b = F.broadcast
+    cross = (
+        # JOIN ORDER is the byte bound (self-review r8): broadcast the
+        # PAIR frame alone (two longs per row — the count cap really is a
+        # byte cap) against the history features first, THEN attach the
+        # batch shingle arrays from the broadcast batch side. Hinting
+        # pairs JOIN batch shingles (the pre-r8 shape) would broadcast
+        # per-pair SHINGLE ARRAYS — count-capped but not byte-capped (a
+        # hot bucket at just-under-cap pair counts x KB-sized arrays is
+        # GBs).
+        cand_b(cands)
+        .join(shingles_as(hist_feats, "id_old", "__sh_o"), on="id_old")
+        # batch-side shingles: genuinely batch-bounded, hint kept so the
+        # pair-sized stream side never shuffles
+        .join(maybe_b(shingles_as(feats, "id_new", "__sh_n")), on="id_new")
+        .select(
+            "id_new",
+            "id_old",
+            jaccard(F.col("__sh_n"), F.col("__sh_o")).alias("jaccard_sim"),
+        )
+        .filter(F.col("jaccard_sim") >= threshold)
+    )
+    return within, cross
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
+def _with_sides(within: DataFrame, cross: DataFrame | None) -> DataFrame:
+    """The incremental operators' one frame: ``(id_a, id_b, jaccard_sim,
+    vs)`` with ``id_a < id_b``; ``vs`` names the partner's side,
+    ``'store'`` (history) or ``'batch'``."""
+    within = within.withColumn("vs", F.lit("batch"))
+    if cross is None:
+        return within
+    return cross.select(
+        F.least("id_new", "id_old").alias("id_a"),
+        F.greatest("id_new", "id_old").alias("id_b"),
+        "jaccard_sim",
+        F.lit("store").alias("vs"),
+    ).unionByName(within)
+
+
+def minhash_feature_pairs(
+    features: DataFrame,
+    threshold: float = 0.7,
+    history: DataFrame | None = None,
     num_hashes: int = 64,
     bands: int = 16,
-    k: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """Candidate near-dup pairs via banded LSH: docs sharing any band bucket.
-
-    Returns (id_a, id_b) with id_a < id_b, distinct. The only wide ops are
-    one explode (rows x bands) and one equi-self-join on the band hash —
-    no crossJoin anywhere. Signatures are persisted first: CollapseProject
-    would otherwise inline the signature UDF into EVERY band's bucket hash.
-    """
-    sig = fence.persist(minhash_signatures(df, id_col, text_col, num_hashes, k, seed))
-    return _candidates_from_sig(sig, num_hashes, bands)
+) -> tuple[DataFrame, DataFrame | None]:
+    """Near-dup pairs of precomputed ``minhash_features`` (persist them:
+    banding and verify both read the frame), optionally against the
+    ``history`` features of already-screened documents. Returns the
+    engine's ``(within, cross)``: ``(id_a, id_b, jaccard_sim)`` inside
+    the batch, and ``(id_new, id_old, jaccard_sim)`` against history
+    (``None`` without it). For a caller that needs the features for more
+    than pairing, so it pays the shingling pass once (the corpus near-dup
+    stream publishes them)."""
+    hist = None
+    if history is not None:
+        hist = (history, _bands_from_sig(history, num_hashes, bands))
+    return _minhash_pairs(
+        features, _bands_from_sig(features, num_hashes, bands), threshold, hist
+    )
 
 
 def minhash_incremental_pairs(
@@ -364,6 +473,8 @@ def minhash_incremental_pairs(
     ``minhash_dedup_pairs(store_docs UNION batch_docs)`` filtered to
     batch-touching pairs, at ANY scale, and applying it batch-by-batch
     replays the full-corpus result incrementally (asserted in pytest).
+    Against an empty store it is ``minhash_dedup_pairs(batch_docs)``, all
+    ``vs = 'batch'``: both are the same engine (``_minhash_pairs``).
 
     Scale shape: one Arrow UDF pass over the NEW batch only; the
     batch-vs-store candidate join is an equi-join on (band, bucket) — at
@@ -381,133 +492,9 @@ def minhash_incremental_pairs(
     stay.
     """
     new_feats = fence.persist(minhash_features(batch_docs, id_col, text_col, num_hashes, k, seed))
-    new_sig = new_feats.select("__id", "__sig")
-    new_bands = _bands_from_sig(new_sig, num_hashes, bands)
-    store_bands = _bands_from_sig(store_features.select("__id", "__sig"), num_hashes, bands)
-    return _incremental_verify(store_features, new_feats, new_bands, store_bands, threshold)
-
-
-def _incremental_verify(
-    store_features: DataFrame,
-    new_feats: DataFrame,
-    new_bands: DataFrame,
-    store_bands: DataFrame,
-    threshold: float,
-    broadcast_new: bool = False,
-    max_broadcast_candidates: int = 2_000_000,
-) -> DataFrame:
-    """Candidate generation + exact-Jaccard verify shared by the in-memory
-    (`minhash_incremental_pairs`) and on-disk (`minhash_store_probe`)
-    incremental paths.
-
-    ``broadcast_new=True`` pins every batch-derived frame (bands,
-    candidate pairs, shingle sets) to the build side of its join, so the
-    STORE side — index scan and feature scan, the 100 TB frames — streams
-    through broadcast hash joins with ZERO store-side Exchange (the only
-    shuffles left are candidate-pair-sized: the dedup `distinct`). Only
-    safe under the incremental contract that the batch is store-fraction-
-    sized; the in-memory path defaults to shuffled joins because its
-    callers pass arbitrarily large batches.
-
-    The CANDIDATE-PAIR frame is the one batch-derived frame whose size the
-    incremental contract does NOT bound: it is batch bands x store bucket
-    occupancy, so one hot/skewed bucket in a large store can make it
-    arbitrarily large, and an explicit broadcast hint bypasses
-    autoBroadcastJoinThreshold entirely (ADVICE r7). So the pair frame's
-    hint is GUARDED: pairs are persisted and counted (the count reuses the
-    already-pruned, already-broadcast band join — one cheap job over work
-    the verify pays anyway), and past ``max_broadcast_candidates`` the
-    pair-vs-store-features join falls back to a shuffle while the
-    genuinely batch-sized frames (bands, shingle sets) keep their hints.
-    The broadcast frame is the pair frame ALONE (two longs per row — the
-    join order below attaches shingle arrays only after the store join,
-    so the count cap is a real byte cap): 2M pairs x 16 B = ~32 MB,
-    well inside executor/driver broadcast comfort.
-    """
-    maybe_b = F.broadcast if broadcast_new else (lambda df: df)
-    nb = new_bands.select("__id", "band", "bucket")
-    cross = (
-        maybe_b(nb.select("band", "bucket", F.col("__id").alias("id_new")))
-        .join(
-            store_bands.select("band", "bucket", F.col("__id").alias("id_old")),
-            on=["band", "bucket"],
-        )
-        .select("id_new", "id_old")
-        .distinct()
+    return _with_sides(
+        *minhash_feature_pairs(new_feats, threshold, store_features, num_hashes, bands)
     )
-    if broadcast_new:
-        cross = fence.persist(cross)
-        cand_b = (
-            F.broadcast
-            if cross.count() <= max_broadcast_candidates
-            else (lambda df: df)
-        )
-    else:
-        cand_b = lambda df: df  # noqa: E731
-    # within-batch candidates from the SAME banded frame (no second
-    # explode/concat_ws banding pass over the batch signatures)
-    within = (
-        maybe_b(nb.select("band", "bucket", F.col("__id").alias("id_a")))
-        .join(nb.select("band", "bucket", F.col("__id").alias("id_b")), on=["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sh_new = new_feats.select("__id", "__h")
-    sh_old = store_features.select("__id", "__h")
-    cross_v = (
-        # JOIN ORDER is the byte bound (self-review r8): broadcast the
-        # PAIR frame alone (two longs per row — the count cap really is a
-        # byte cap) against the store features first, THEN attach the
-        # batch shingle arrays from the broadcast batch side. Hinting
-        # cross JOIN sh_new (the pre-r8 shape) would broadcast per-pair
-        # SHINGLE ARRAYS — count-capped but not byte-capped (a hot bucket
-        # at just-under-cap pair counts x KB-sized arrays is GBs).
-        cand_b(cross)
-        .join(
-            sh_old.select(F.col("__id").alias("id_old"), F.col("__h").alias("__sh_o")),
-            on="id_old",
-        )
-        .join(
-            # batch-side shingles: genuinely batch-bounded, hint kept so
-            # the pair-sized stream side never shuffles
-            maybe_b(
-                sh_new.select(
-                    F.col("__id").alias("id_new"), F.col("__h").alias("__sh_n")
-                )
-            ),
-            on="id_new",
-        )
-        .select(
-            F.least("id_new", "id_old").alias("id_a"),
-            F.greatest("id_new", "id_old").alias("id_b"),
-            jaccard(F.col("__sh_n"), F.col("__sh_o")).alias("jaccard_sim"),
-            F.lit("store").alias("vs"),
-        )
-        .filter(F.col("jaccard_sim") >= threshold)
-    )
-    within_v = (
-        within.join(
-            maybe_b(
-                sh_new.select(F.col("__id").alias("id_a"), F.col("__h").alias("__sh_a"))
-            ),
-            on="id_a",
-        )
-        .join(
-            maybe_b(
-                sh_new.select(F.col("__id").alias("id_b"), F.col("__h").alias("__sh_b"))
-            ),
-            on="id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            jaccard(F.col("__sh_a"), F.col("__sh_b")).alias("jaccard_sim"),
-            F.lit("batch").alias("vs"),
-        )
-        .filter(F.col("jaccard_sim") >= threshold)
-    )
-    return cross_v.unionByName(within_v)
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -531,24 +518,17 @@ def minhash_dedup_pairs(
     Output: (id_a, id_b, jaccard_sim) for pairs >= threshold.
 
     One UDF pass computes signatures + shingle-hash sets together
-    (``minhash_features``, persisted); banding reads ``__sig``, the exact-
-    Jaccard verify joins ``__h`` from the SAME persisted frame. Verifying
-    on 31-bit shingle-hash arrays instead of shingle strings makes the
-    intersection a long-array compare (~5x cheaper) with identical Jaccard
-    barring within-pair collisions (~1e-6 at these set sizes)."""
+    (``minhash_features``, persisted: CollapseProject would otherwise
+    inline the UDF into every band's bucket string); banding reads
+    ``__sig``, the exact-Jaccard verify joins ``__h`` from the SAME
+    persisted frame. The only wide ops are one explode (rows x bands) and
+    one equi-self-join on the band bucket — no crossJoin anywhere. This is
+    the pair engine with no history. Verifying on 31-bit shingle-hash
+    arrays instead of shingle strings makes the intersection a long-array
+    compare (~5x cheaper) with identical Jaccard barring within-pair
+    collisions (~1e-6 at these set sizes)."""
     feats = fence.persist(minhash_features(df, id_col, text_col, num_hashes, k, seed))
-    cands = _candidates_from_sig(feats.select("__id", "__sig"), num_hashes, bands)
-    sh = feats.select("__id", "__h")
-    return (
-        cands.join(sh.select(F.col("__id").alias("id_a"), F.col("__h").alias("__sh_a")), on="id_a")
-        .join(sh.select(F.col("__id").alias("id_b"), F.col("__h").alias("__sh_b")), on="id_b")
-        .select(
-            "id_a",
-            "id_b",
-            jaccard(F.col("__sh_a"), F.col("__sh_b")).alias("jaccard_sim"),
-        )
-        .filter(F.col("jaccard_sim") >= threshold)
-    )
+    return minhash_feature_pairs(feats, threshold, None, num_hashes, bands)[0]
 
 
 def ngram_inverted_index(
@@ -1313,9 +1293,10 @@ def minhash_store_probe(
     feature scan stream straight into broadcast hash joins (plan-asserted
     in tests — no SortMergeJoin/ShuffledHashJoin anywhere in the probe).
     The candidate-PAIR frame's hint is additionally guarded by a count
-    (``_incremental_verify``): pair count is store-bucket-occupancy-driven,
-    not batch-bounded, so a hot bucket degrades that one join to a shuffle
-    instead of an oversized broadcast (ADVICE r7).
+    (``_minhash_pairs``, the pair engine every MinHash operator shares):
+    pair count is store-bucket-occupancy-driven, not batch-bounded, so a
+    hot bucket degrades that one join to a shuffle instead of an oversized
+    broadcast (ADVICE r7).
 
     ``batch_features`` lets a caller that ALREADY computed the batch's
     ``minhash_features`` (the streaming accrete-then-probe loop pays the
@@ -1328,7 +1309,8 @@ def minhash_store_probe(
     batch being folded, even if that batch's own rows already landed.
 
     A store that has ingested nothing yet probes as EMPTY history: the
-    result is the within-batch pairs (``vs = 'batch'``) alone.
+    engine runs without a history side, so the result is the within-batch
+    pairs (``vs = 'batch'``) alone, with no pair count and no store read.
     """
     spark = batch_docs.sparkSession
     m = store_manifest(path)
@@ -1352,12 +1334,9 @@ def minhash_store_probe(
         new_feats.select("__id", "__sig"), num_hashes, bands
     ).withColumn("__pfx", F.pmod(F.xxhash64("bucket"), F.lit(num_prefixes))))
     if not store_ingests(path):
-        # no trees on disk yet: the batch's own frames, emptied, stand in
-        # for the history (same columns, no rows)
-        return _incremental_verify(
-            new_feats.limit(0), new_feats, new_bands, new_bands.limit(0),
-            threshold, broadcast_new=True,
-            max_broadcast_candidates=max_broadcast_candidates,
+        # no trees on disk yet: empty history, so no cross half
+        return _with_sides(
+            *_minhash_pairs(new_feats, new_bands, threshold, broadcast_new=True)
         )
     # §2.6 overlap: the store-tree reads (partition discovery, plus a
     # schema-inference job whenever the tree changed since its last read)
@@ -1400,8 +1379,8 @@ def minhash_store_probe(
         store_features = store_features.filter(
             F.col("__ingest") < F.lit(max_ingest_exclusive)
         )
-    return _incremental_verify(
-        store_features, new_feats, new_bands, idx, threshold,
+    return _with_sides(*_minhash_pairs(
+        new_feats, new_bands, threshold, (store_features, idx),
         broadcast_new=True,
         max_broadcast_candidates=max_broadcast_candidates,
-    )
+    ))

@@ -70,24 +70,11 @@ def cosine_topk_bruteforce(
     )
 
 
-def _band_keys(bits, n_planes: int, bands: int):
-    """Band an ``array<int>`` of sign bits into ``bands`` bucket keys
-    (band index folded into the key so buckets never collide across
-    bands)."""
-    per_band = n_planes // bands
-    keys = []
-    for b in range(bands):
-        key = F.lit(b * (1 << (per_band + 1)))
-        for i in range(per_band):
-            key = key + F.element_at(bits, b * per_band + i + 1) * F.lit(1 << i)
-        keys.append(key.cast("long"))
-    return F.array(*keys)
-
-
 def _band_keys_from_dots(dots, n_planes: int, bands: int):
-    """Same band keys, but straight from an ``array<double>`` of plane
-    dot products (sign >= 0 -> bit 1): keeps banding as flat codegen-able
-    element_at/CASE expressions over the UDF output column."""
+    """``bands`` bucket keys straight from an ``array<double>`` of plane
+    dot products (sign >= 0 -> bit 1; band index folded into the key so
+    buckets never collide across bands): keeps banding as flat
+    codegen-able element_at/CASE expressions over the UDF output column."""
     per_band = n_planes // bands
     keys = []
     for b in range(bands):

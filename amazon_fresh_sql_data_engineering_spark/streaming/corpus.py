@@ -1,4 +1,5 @@
-"""Streaming corpus ingest: exact dedup as continuous arrival.
+"""Streaming corpus ingest: exact and near-duplicate dedup as continuous
+arrival.
 
 The batch exact-dedup (operators/dedup.exact_dedup) groups the corpus by
 content fingerprint once; a training-data pipeline at 100 TB/day instead
@@ -15,6 +16,13 @@ Two forms, by where the seen-set state lives:
   state is zero, restarts are idempotent (checkpoint + anti-join), and
   the "state" is the output table itself — the form that survives an
   unbounded corpus.
+
+Near duplicates follow the sink-state form:
+:func:`run_corpus_neardup_upsert` publishes each survivor with its MinHash
+signature and shingle-hash set, and screens every later micro-batch
+against those published rows through the package's one MinHash pair
+engine (``operators.dedup.minhash_feature_pairs``) — within-batch pairs
+first, then the batch-vs-published half, both verified by exact Jaccard.
 
 Which document of a duplicate group survives is arrival-order dependent
 (same as any streaming dedup); the dedup GROUPS are deterministic, which
@@ -84,13 +92,18 @@ def run_corpus_neardup_upsert(
     """Streaming NEAR-duplicate dedup (MinHash-LSH), sink-held state.
 
     Online semantics: a document is published iff it is not a near-dup
-    of anything already *published* — within a micro-batch the full batch
-    operator runs (banded candidates -> exact-Jaccard verify -> connected
-    components, keep min id per component), then the surviving
-    representatives are screened against the published table through the
-    same banded-LSH candidate join + verify. Each published row carries
-    its MinHash signature and shingle-hash set, so screening later
-    batches never re-shingles history — the sink table IS the LSH index.
+    of anything already *published*. Each micro-batch pays the shingling
+    pass ONCE (``minhash_features``) and hands the features to the shared
+    MinHash pair engine (``minhash_feature_pairs``) with the published
+    rows as history. The engine's within-batch pairs give the full batch
+    semantics (connected components, keep min id per component); its
+    cross half — batch vs published, keyed ``id_new``/``id_old`` — then
+    screens the surviving representatives: a survivor that verifies
+    against a published row is dropped. Each published row carries its
+    MinHash signature and shingle-hash set, so screening later batches
+    never re-shingles history — the sink table IS the LSH index. Docs
+    under the shingle width publish with empty ``__sig``/``__h`` and band
+    to nothing, so they never pair.
 
     Differences from the batch operator, stated honestly: transitive
     closure never spans batches (an arrival matching only never-published
@@ -106,66 +119,43 @@ def run_corpus_neardup_upsert(
     """
     from pyspark.errors import AnalysisException
 
-    from ..operators.dedup import (
-        _candidates_from_sig,
-        dedup_corpus,
-        jaccard,
-        minhash_dedup_pairs,
-        minhash_features,
-    )
+    from .. import fence
+    from ..operators.dedup import dedup_corpus, minhash_feature_pairs, minhash_features
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = batch_df.dropDuplicates([id_col])
-        # within-batch: full batch semantics (components, min-id reps)
-        pairs = minhash_dedup_pairs(
-            batch, id_col, text_col, threshold, num_hashes, bands, k, seed
-        )
-        reps = dedup_corpus(batch, pairs, id_col)
-        feats = minhash_features(reps, id_col, text_col, num_hashes, k, seed)
-        sig_t = feats.schema["__sig"].dataType
-        h_t = feats.schema["__h"].dataType
-        # left join + empty-array fill: docs under the shingle width have
-        # no features but are still unique content (batch semantics keeps
-        # them); their empty sets can never verify >= threshold
-        out = (
-            reps.join(feats.withColumnRenamed("__id", id_col), on=id_col, how="left")
-            .withColumn("__sig", F.coalesce("__sig", F.array().cast(sig_t)))
-            .withColumn("__h", F.coalesce("__h", F.array().cast(h_t)))
-        )
         try:
-            published = read_parquet(spark, out_path).select(id_col, "__sig", "__h")
+            published = read_parquet(spark, out_path).select(
+                F.col(id_col).alias("__id"), "__sig", "__h"
+            )
         except AnalysisException:
             published = None  # first batch: nothing published yet
-        if published is not None:
-            # ids on the published side are negated so the a<b dedup in the
-            # banded self-join can't collapse a (batch, published) pair with
-            # a same-id batch row, and side membership stays decodable
-            pub_sig = published.select(
-                (-F.col(id_col) - 1).alias("__id"), "__sig"
+        # the foreachBatch thread has no owner: the scope frees this
+        # batch's pins when it returns, and on failure before a replay
+        with fence.scope():
+            feats = fence.persist(
+                minhash_features(batch, id_col, text_col, num_hashes, k, seed)
             )
-            both = out.select(F.col(id_col).alias("__id"), "__sig").unionByName(
-                pub_sig
+            within, cross = minhash_feature_pairs(
+                feats, threshold, published, num_hashes, bands
             )
-            cands = _candidates_from_sig(both, num_hashes, bands).filter(
-                # exactly one side published (negative id)
-                (F.col("id_a") < 0) != (F.col("id_b") < 0)
+            out = dedup_corpus(batch, within, id_col)
+            if cross is not None:
+                out = out.join(
+                    cross.select(F.col("id_new").alias(id_col)), on=id_col, how="left_anti"
+                )
+            sig_t = feats.schema["__sig"].dataType
+            h_t = feats.schema["__h"].dataType
+            # left join + empty-array fill: docs under the shingle width
+            # have no features but are still unique content (batch
+            # semantics keeps them); their empty sets never pair
+            out = (
+                out.join(feats.withColumnRenamed("__id", id_col), on=id_col, how="left")
+                .withColumn("__sig", F.coalesce("__sig", F.array().cast(sig_t)))
+                .withColumn("__h", F.coalesce("__h", F.array().cast(h_t)))
             )
-            cross = cands.select(
-                F.greatest("id_a", "id_b").alias("__bid"),
-                (-F.least("id_a", "id_b") - 1).alias("__pid"),
-            )
-            ph = published.select(F.col(id_col).alias("__pid"), F.col("__h").alias("__ph"))
-            bh = out.select(F.col(id_col).alias("__bid"), F.col("__h").alias("__bh"))
-            dupe_ids = (
-                cross.join(bh, "__bid")
-                .join(ph, "__pid")
-                .filter(jaccard(F.col("__bh"), F.col("__ph")) >= threshold)
-                .select(F.col("__bid").alias(id_col))
-                .distinct()
-            )
-            out = out.join(dupe_ids, on=id_col, how="left_anti")
-        out.write.mode("append").parquet(out_path)
+            out.write.mode("append").parquet(out_path)
 
     q = (
         docs_stream.writeStream.foreachBatch(_write)

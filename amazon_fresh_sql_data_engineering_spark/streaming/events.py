@@ -106,20 +106,6 @@ def stream_events_from_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_stream_to_memory(
-    spark: SparkSession, stream_df: DataFrame, table_name: str
-) -> None:
-    """Drain an availableNow stream into an in-memory sink (tests/demos)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def user_totals_stateful(events: DataFrame) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``: per-user
     running (n_events, total_value), re-emitted on every micro-batch that

@@ -428,6 +428,50 @@ def test_corpus_neardup_stream_screens_arrivals(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == published.count()
 
 
+def test_corpus_neardup_stream_negative_ids_short_docs_no_pins(spark, sf_dir, tmp_path):
+    """One two-wave drain of the near-dup stream, three contracts: exact
+    copies never publish, whatever the sign of the ids; docs under the
+    shingle width still publish but band to nothing, so the screen never
+    pairs them with each other; and the drain leaves no pinned frame
+    behind."""
+    from amazon_fresh_sql_data_engineering_spark.operators import dedup as D
+    from amazon_fresh_sql_data_engineering_spark.streaming import corpus as SC
+
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", "text")
+        .orderBy("doc_id")
+        .limit(16)
+    )
+
+    def short(ids):
+        return spark.createDataFrame([(i, f"tiny{i} doc") for i in ids], docs.schema)
+
+    src = str(tmp_path / "arrivals")
+    out = str(tmp_path / "published")
+    ckpt = str(tmp_path / "ckpt")
+    pins = spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    wave1 = docs.withColumn("doc_id", -F.col("doc_id") - 10).unionByName(short([-1, -2, -3, -4]))
+    wave1.coalesce(1).write.parquet(src)
+    SC.run_corpus_neardup_upsert(SC.stream_documents_from_parquet(spark, src), out, ckpt)
+    n_first = spark.read.parquet(out).count()
+    # wave 2: exact copies under fresh negative ids, plus two new short docs
+    wave2 = docs.withColumn("doc_id", -F.col("doc_id") - 1_000_000).unionByName(short([-5, -6]))
+    wave2.coalesce(1).write.mode("append").parquet(src)
+    SC.run_corpus_neardup_upsert(SC.stream_documents_from_parquet(spark, src), out, ckpt)
+
+    published = spark.read.parquet(out)
+    pub_ids = {r.doc_id for r in published.select("doc_id").collect()}
+    assert published.count() == n_first + 2
+    assert not any(i <= -1_000_000 for i in pub_ids)
+    assert set(range(-6, 0)) <= pub_ids
+    pub_feats = published.select(F.col("doc_id").alias("__id"), "__sig")
+    # the short docs (ids -1..-6) carry empty signatures: no band rows
+    assert D._bands_from_sig(pub_feats, 64, 16).filter(F.col("__id") > -10).count() == 0
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == pins
+
+
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     """Watermarked stream-stream LEFT OUTER interval join: matched pairs
     equal the batch join, and the unmatched purchase's NULL row flushes
