@@ -250,7 +250,10 @@ def minhash_features(
             hs.append(hv)
         return pd.DataFrame({"sig": sigs, "h": hs})
 
-    f = df.select(F.col(id_col).alias("__id"), _feat(F.col(text_col)).alias("__f"))
+    # nondeterministic only to Catalyst: it keeps the NOT NULL filter below
+    # from being pushed under a caller's repartition, which ran the UDF twice
+    feat = _feat.asNondeterministic()
+    f = df.select(F.col(id_col).alias("__id"), feat(F.col(text_col)).alias("__f"))
     return f.select("__id", F.col("__f.sig").alias("__sig"), F.col("__f.h").alias("__h")).filter(
         F.col("__sig").isNotNull()
     )

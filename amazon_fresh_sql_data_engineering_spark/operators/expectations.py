@@ -28,6 +28,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from . import constraints
+
 
 @dataclass(frozen=True)
 class RowRule:
@@ -133,17 +135,12 @@ def check_foreign_key(
     parent_key: str,
 ) -> DataFrame:
     """Referential expectation: count child rows whose non-NULL key has no
-    parent (NULL FKs are not orphans — SQL FK semantics). One anti-join;
-    Spark broadcasts the parent side when it is small enough, which is the
-    dim-vs-fact case this exists for."""
-    orphans = (
-        child.filter(F.col(child_key).isNotNull())
-        .join(
-            parent.select(F.col(parent_key).alias(child_key)).distinct(),
-            child_key,
-            "left_anti",
-        )
-        .agg(F.count(F.lit(1)).alias("n_violations"))
+    parent (NULL FKs are not orphans — SQL FK semantics). The orphans are
+    ``constraints.check_foreign_key``'s one anti-join; Spark broadcasts the
+    parent side when it is small enough, which is the dim-vs-fact case
+    this exists for."""
+    orphans = constraints.check_foreign_key(child, child_key, parent, parent_key).agg(
+        F.count(F.lit(1)).alias("n_violations")
     )
     total = child.agg(F.count(F.lit(1)).alias("n_checked"))
     return total.crossJoin(orphans).select(

@@ -272,7 +272,8 @@ def run_incremental_clean(
     micro-batch of dirty staging runs the full cleaning program
     (:func:`clean_entity`) inside ``foreachBatch``, then upserts into the
     final table with first-writer-wins semantics (the reference's
-    ``ON CONFLICT DO NOTHING``, T:119, in streaming form).
+    ``ON CONFLICT DO NOTHING``, T:119, in streaming form, through
+    ``streaming/sink.upsert_append``).
 
     Idempotence is layered: content-addressed PK repair makes re-delivered
     dirty rows clean to IDENTICAL rows, and the upsert anti-join drops
@@ -281,22 +282,13 @@ def run_incremental_clean(
     to the same final table a single batch run would produce. At 100 TB
     this is the continuous-ingest shape: the per-batch work is the same
     narrow validate/repair/cast program, and the only sink-side cost is
-    one anti-join against the final table's key projection.
+    one anti-join against the final table's key projection plus the
+    append of the new rows. Read the table as plain parquet.
     """
-    from ..streaming.events import upsert_sink_foreach_batch
-
-    sink = upsert_sink_foreach_batch(out_path, [spec.pk])
+    from ..streaming.sink import run_sink, upsert_append
 
     def _clean_and_upsert(batch_df, batch_id: int) -> None:
-        cleaned = clean_entity(
-            batch_df, spec, deterministic_ids=deterministic_ids
-        ).final
-        sink(cleaned, batch_id)
+        cleaned = clean_entity(batch_df, spec, deterministic_ids=deterministic_ids).final
+        upsert_append(cleaned, out_path, [spec.pk])
 
-    q = (
-        staging_stream.writeStream.foreachBatch(_clean_and_upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_sink(staging_stream, checkpoint, _clean_and_upsert)

@@ -22,15 +22,18 @@ Two kinds of callers share the layout:
 
 - time-travel tables (``write_snapshot``/``read_snapshot``/``rollback``)
   keep history until an explicit ``vacuum``;
-- single-version sinks and stores (the streaming CDC and MV sinks, each
-  bucket of the bucketed MV sink, the append-layout minhash store) pass
-  ``keep_last`` so superseded snapshots go at the flip, and ``heal``
-  before every read. ``heal`` is never run on a time-travel table: after
-  a rollback the newer snapshots sit above the pointer and would be lost.
+- single-version sinks and stores (the streaming CDC, MV and near-dup
+  sinks, each bucket of the bucketed MV sink, the append-layout minhash
+  store) pass ``keep_last`` so superseded snapshots go at the flip, and
+  ``heal`` before every read. ``heal`` is never run on a time-travel
+  table: after a rollback the newer snapshots sit above the pointer and
+  would be lost.
 
 Readers that hold a DataFrame onto ``data/v=N`` are unaffected by later
-publishes — immutability IS the isolation. Single writer per table is
-assumed, as with any lakehouse on a filesystem without a commit service.
+publishes until ``v=N`` is vacuumed — immutability IS the isolation;
+under ``keep_last=1`` that is the next publish. Single writer per table
+is assumed, as with any lakehouse on a filesystem without a commit
+service.
 """
 
 from __future__ import annotations

@@ -3,22 +3,20 @@ from an arriving I/U/D changelog — the streaming twin of
 ``operators/cdc.changelog_apply`` (same merge logic, same results,
 asserted in tests/test_streaming.py).
 
-State lives in the SINK, not the engine (the streaming/corpus.py
-pattern): each micro-batch merges into the published compacted log
-(tombstones retained — see ``operators/cdc.compact_log``) and publishes it
-as the sink's next snapshot (:mod:`..sources.versioned`: immutable
-``data/v=N`` behind an atomically flipped pointer). Engine state is zero,
-restarts are idempotent (checkpoint tracks consumed files; a replayed
-batch re-merges rows whose (key, seq) already won or lost — content is
-unchanged either way), and a crash anywhere leaves the previous snapshot
-published.
+State lives in the SINK, not the engine: a fold over
+``streaming/sink.run_state_sink`` merges each micro-batch into the
+published compacted log (tombstones retained — see
+``operators/cdc.compact_log``) and publishes it as the next snapshot.
+Restarts are idempotent (a replayed batch re-merges rows whose (key,
+seq) already won or lost), and a crash leaves the previous snapshot
+published. Read live rows with :func:`read_current_state`, the log
+with tombstones with ``versioned.read_snapshot``.
 
-Scale notes: per micro-batch this is one key-partitioned window over
-(published ∪ batch). For a 100 TB table that full rewrite is the naive
-tier — partition the sink by a stable key hash and rewrite ONLY the
-partitions a batch touches, exactly how Hudi copy-on-write tables apply
-upserts (streaming/mv.py's bucketed sink does this for view state); the
-merge logic is unchanged, so this module keeps the simple form.
+Scale notes: each micro-batch is one key-partitioned window over
+(published ∪ batch) and rewrites the whole log, O(|sink|) — the naive
+tier. For a 100 TB table, partition the sink by a stable key hash and
+rewrite ONLY the partitions a batch touches, as Hudi copy-on-write
+tables do (streaming/mv.py's bucketed sink does this for view state).
 """
 
 from __future__ import annotations
@@ -28,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..operators.cdc import compact_log
 from ..sources import versioned as V
+from .sink import run_state_sink
 
 
 def run_cdc_apply_stream(
@@ -39,21 +38,11 @@ def run_cdc_apply_stream(
 ) -> None:
     """Drain an availableNow changelog stream into a compacted sink."""
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # prune a never-published snapshot left by a crashed batch
-        V.heal(out_path)
-        cur = V.read_or_none(spark, out_path)
-        merged = cur.unionByName(batch_df) if cur is not None else batch_df
-        V.write_snapshot(compact_log(merged, keys, seq_col), out_path, keep_last=1)
+    def fold(batch: DataFrame, current: DataFrame | None, batch_id: int) -> DataFrame:
+        merged = batch if current is None else current.unionByName(batch)
+        return compact_log(merged, keys, seq_col)
 
-    q = (
-        log_stream.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_state_sink(log_stream, out_path, checkpoint_dir, fold)
 
 
 def read_current_state(

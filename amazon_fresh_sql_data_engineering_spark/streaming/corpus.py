@@ -12,7 +12,7 @@ Two forms, by where the seen-set state lives:
   can bound it) — use only for bounded backfills.
 - :func:`run_corpus_dedup_upsert` — state lives in the SINK: each
   micro-batch anti-joins its fingerprints against the already-published
-  table (events.upsert_sink_foreach_batch, first-writer-wins). Engine
+  table (``streaming/sink.upsert_append``, first-writer-wins). Engine
   state is zero, restarts are idempotent (checkpoint + anti-join), and
   the "state" is the output table itself — the form that survives an
   unbounded corpus.
@@ -24,6 +24,9 @@ against those published rows through the package's one MinHash pair
 engine (``operators.dedup.minhash_feature_pairs``) — within-batch pairs
 first, then the batch-vs-published half, both verified by exact Jaccard.
 
+The exact sink appends (O(|batch|) written); the near-dup sink is a
+versioned table rewritten per batch (``streaming/sink.py``).
+
 Which document of a duplicate group survives is arrival-order dependent
 (same as any streaming dedup); the dedup GROUPS are deterministic, which
 is what tests/test_streaming.py asserts against the batch operator.
@@ -34,8 +37,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fence
+from ..operators.dedup import dedup_corpus, minhash_feature_pairs, minhash_features
 from ..sources.loaders import read_parquet
-from .events import upsert_sink_foreach_batch
+from .sink import run_sink, run_state_sink, upsert_append
 
 
 def fingerprint(text_col: str = "text") -> "F.Column":
@@ -68,13 +73,7 @@ def run_corpus_dedup_upsert(
     per micro-batch, fingerprints anti-join the published table so each
     distinct content is written exactly once across batches AND restarts."""
     fp = docs_stream.withColumn("fp", fingerprint(text_col))
-    q = (
-        fp.writeStream.foreachBatch(upsert_sink_foreach_batch(out_path, ["fp"]))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_sink(fp, checkpoint_dir, lambda batch, _: upsert_append(batch, out_path, ["fp"]))
 
 
 def run_corpus_neardup_upsert(
@@ -91,19 +90,22 @@ def run_corpus_neardup_upsert(
 ) -> None:
     """Streaming NEAR-duplicate dedup (MinHash-LSH), sink-held state.
 
-    Online semantics: a document is published iff it is not a near-dup
-    of anything already *published*. Each micro-batch pays the shingling
-    pass ONCE (``minhash_features``) and hands the features to the shared
-    MinHash pair engine (``minhash_feature_pairs``) with the published
-    rows as history. The engine's within-batch pairs give the full batch
-    semantics (connected components, keep min id per component); its
-    cross half — batch vs published, keyed ``id_new``/``id_old`` — then
-    screens the surviving representatives: a survivor that verifies
-    against a published row is dropped. Each published row carries its
-    MinHash signature and shingle-hash set, so screening later batches
-    never re-shingles history — the sink table IS the LSH index. Docs
-    under the shingle width publish with empty ``__sig``/``__h`` and band
-    to nothing, so they never pair.
+    Online semantics: a document is published iff its id is not yet
+    published (so a replay adds nothing, short docs included) and it is
+    not a near-dup of anything already *published*. Each micro-batch
+    pays the shingling pass ONCE (``minhash_features``) and hands the
+    features to the shared MinHash pair engine (``minhash_feature_pairs``)
+    with the published rows as history. The engine's within-batch pairs
+    give the full batch semantics (connected components, keep min id per
+    component); its cross half — batch vs published, keyed
+    ``id_new``/``id_old`` — then screens the surviving representatives: a
+    survivor that verifies against a published row is dropped. Each
+    published row carries its MinHash signature and shingle-hash set, so
+    screening later batches never re-shingles history — the sink table IS
+    the LSH index. Docs under the shingle width publish with empty
+    ``__sig``/``__h`` and band to nothing, so they never pair. A batch
+    with no survivors publishes nothing. Read the sink with
+    ``versioned.read_snapshot`` after the drain (``streaming/sink.py``).
 
     Differences from the batch operator, stated honestly: transitive
     closure never spans batches (an arrival matching only never-published
@@ -117,50 +119,34 @@ def run_corpus_neardup_upsert(
     candidate probe prunes to matching buckets instead of scanning the
     full index (the same lever as every LSH family here).
     """
-    from pyspark.errors import AnalysisException
 
-    from .. import fence
-    from ..operators.dedup import dedup_corpus, minhash_feature_pairs, minhash_features
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, current: DataFrame | None, batch_id: int):
         batch = batch_df.dropDuplicates([id_col])
-        try:
-            published = read_parquet(spark, out_path).select(
-                F.col(id_col).alias("__id"), "__sig", "__h"
-            )
-        except AnalysisException:
-            published = None  # first batch: nothing published yet
-        # the foreachBatch thread has no owner: the scope frees this
-        # batch's pins when it returns, and on failure before a replay
-        with fence.scope():
-            feats = fence.persist(
-                minhash_features(batch, id_col, text_col, num_hashes, k, seed)
-            )
-            within, cross = minhash_feature_pairs(
-                feats, threshold, published, num_hashes, bands
-            )
-            out = dedup_corpus(batch, within, id_col)
-            if cross is not None:
-                out = out.join(
-                    cross.select(F.col("id_new").alias(id_col)), on=id_col, how="left_anti"
-                )
-            sig_t = feats.schema["__sig"].dataType
-            h_t = feats.schema["__h"].dataType
-            # left join + empty-array fill: docs under the shingle width
-            # have no features but are still unique content (batch
-            # semantics keeps them); their empty sets never pair
-            out = (
-                out.join(feats.withColumnRenamed("__id", id_col), on=id_col, how="left")
-                .withColumn("__sig", F.coalesce("__sig", F.array().cast(sig_t)))
-                .withColumn("__h", F.coalesce("__h", F.array().cast(h_t)))
-            )
-            out.write.mode("append").parquet(out_path)
+        published = None if current is None else current.select(
+            F.col(id_col).alias("__id"), "__sig", "__h"
+        )
+        feats = fence.persist(
+            minhash_features(batch, id_col, text_col, num_hashes, k, seed)
+        )
+        within, cross = minhash_feature_pairs(feats, threshold, published, num_hashes, bands)
+        # components span the whole batch, so a replay rebuilds the first
+        # run's; published ids leave the survivors (short docs never pair)
+        out = dedup_corpus(batch, within, id_col)
+        if cross is not None:
+            screened = cross.select(F.col("id_new").alias(id_col))
+            out = out.join(screened.unionByName(current.select(id_col)), id_col, "left_anti")
+        sig_t = feats.schema["__sig"].dataType
+        h_t = feats.schema["__h"].dataType
+        # left join + empty-array fill: docs under the shingle width have
+        # no features but are still unique content (batch semantics keeps
+        # them); their empty sets never pair
+        out = fence.persist(
+            out.join(feats.withColumnRenamed("__id", id_col), on=id_col, how="left")
+            .withColumn("__sig", F.coalesce("__sig", F.array().cast(sig_t)))
+            .withColumn("__h", F.coalesce("__h", F.array().cast(h_t)))
+        )
+        if out.isEmpty():
+            return None  # nothing survives: the sink stays as it is
+        return out if current is None else current.unionByName(out)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_state_sink(docs_stream, out_path, checkpoint_dir, fold)

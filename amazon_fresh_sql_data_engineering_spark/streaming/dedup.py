@@ -51,6 +51,9 @@ through it and touches no store path itself. The whole loop runs on
 driver-side ``os``/pyarrow calls and DataFrame I/O — no JVM filesystem
 gateway, so it also runs under Spark Connect.
 
+It starts through ``streaming/sink.run_sink`` with its own publish body
+(batch-sized partitions); read the pairs with :func:`read_dedup_pairs`.
+
 OWNERSHIP (the streaming/mv.py lesson, ADVICE r7): micro-batch ids are
 checkpoint-scoped, so a fresh checkpoint restarting at 0 would dynamic-
 overwrite ``__ingest=0`` — destroying a prior stream's first batch. The
@@ -78,7 +81,7 @@ from ..operators.dedup import (
     store_manifest,
 )
 from ..sources.loaders import read_parquet, read_record
-from .mv import _owner_id
+from .sink import owner_id, run_sink
 
 _EPOCH_SPAN = 1_000_000_000
 
@@ -125,7 +128,7 @@ def adopt_minhash_store_stream(
             )
         epoch = ingests[-1] // _EPOCH_SPAN
     new_epoch = epoch + 1
-    _write_stream_meta(spark, store_path, _owner_id(checkpoint_dir), new_epoch)
+    _write_stream_meta(spark, store_path, owner_id(checkpoint_dir), new_epoch)
     return new_epoch
 
 
@@ -141,14 +144,11 @@ def run_store_dedup_stream(
     trigger: dict | None = None,
     block: bool = True,
 ):
-    """Run a document stream through the accrete-then-probe loop. Default
-    trigger is an availableNow drain (blocks until the backlog drains);
-    pass e.g. ``trigger={"processingTime": "10 seconds"}, block=False``
-    for a long-running cadence — the returned StreamingQuery is the
-    caller's to stop. The store must exist (``bootstrap_minhash_store`` or
-    a prior drain); emitted pair rows are ``(id_a, id_b, jaccard_sim,
-    vs)`` plus the ``__ingest`` batch key, partitioned by it in
-    ``pairs_path``.
+    """Run a document stream through the accrete-then-probe loop;
+    ``trigger``/``block`` as in ``streaming/sink.run_sink``. The store
+    must exist (``bootstrap_minhash_store`` or a prior drain); emitted
+    pair rows are ``(id_a, id_b, jaccard_sim, vs)`` plus the ``__ingest``
+    batch key, partitioned by it in ``pairs_path``.
 
     ``compact_every=N`` runs ``compact_minhash_store`` INSIDE the loop at
     the start of every Nth micro-batch (VERDICT r8 item 4), bounding the
@@ -163,7 +163,7 @@ def run_store_dedup_stream(
     are untouched, then dynamically overwritten by the re-accrete).
     Probe results are compaction-invariant (the folded stamp is
     ``upto - 1`` < every future ``max_ingest_exclusive``)."""
-    owner = _owner_id(checkpoint_dir)
+    owner = owner_id(checkpoint_dir)
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -205,41 +205,31 @@ def run_store_dedup_stream(
             # committed (docstring) — fold it before we accrete
             compact_minhash_store(spark, store_path, ingest)
         m = store_manifest(store_path)
-        # a throwing batch REPLAYS: the scope frees its pins on failure too
-        with fence.scope():
-            feats = fence.persist(minhash_features(
-                batch_df, id_col, text_col, m["num_hashes"], m["k"], m["seed"]
-            ))
-            if feats.first() is None:
-                # empty micro-batch: nothing to accrete, nothing to pair,
-                # so skip the probe's jobs and the pairs write
-                return
-            # accrete FIRST (idempotent overwrite of this batch's leaf
-            # partitions), then probe history strictly older than us —
-            # insensitive to whether a torn earlier attempt already landed
-            append_minhash_store(feats, store_path, ingest)
-            pairs = minhash_store_probe(
-                batch_df, store_path, id_col, text_col, threshold=threshold,
-                batch_features=feats, max_ingest_exclusive=ingest,
-            )
-            (
-                pairs.withColumn("__ingest", F.lit(ingest).cast("long"))
-                .repartition("__ingest")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__ingest")
-                .parquet(pairs_path)
-            )
+        feats = fence.persist(minhash_features(
+            batch_df, id_col, text_col, m["num_hashes"], m["k"], m["seed"]
+        ))
+        if feats.first() is None:
+            # empty micro-batch: nothing to accrete, nothing to pair, so
+            # skip the probe's jobs and the pairs write
+            return
+        # accrete FIRST (idempotent overwrite of this batch's leaf
+        # partitions), then probe history strictly older than us —
+        # insensitive to whether a torn earlier attempt already landed
+        append_minhash_store(feats, store_path, ingest)
+        pairs = minhash_store_probe(
+            batch_df, store_path, id_col, text_col, threshold=threshold,
+            batch_features=feats, max_ingest_exclusive=ingest,
+        )
+        (
+            pairs.withColumn("__ingest", F.lit(ingest).cast("long"))
+            .repartition("__ingest")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__ingest")
+            .parquet(pairs_path)
+        )
 
-    q = (
-        doc_stream.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
-    if block:
-        q.awaitTermination()
-    return q
+    return run_sink(doc_stream, checkpoint_dir, _write, trigger, block)
 
 
 def read_dedup_pairs(spark: SparkSession, pairs_path: str) -> DataFrame:

@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import dec
-from ..sources.loaders import events_ts, read_events_raw, read_parquet, table_path
+from ..sources.loaders import events_ts, read_events_raw, table_path
+from .sink import run_sink, upsert_append
 
 
 def hourly_rollup(events: DataFrame) -> DataFrame:
@@ -188,44 +189,14 @@ def enrich_with_dim(
     return events.join(F.broadcast(dim), key, how)
 
 
-def upsert_sink_foreach_batch(out_path: str, keys: list[str]):
-    """foreachBatch writer with first-writer-wins upsert semantics
-    (ON CONFLICT DO NOTHING against everything already in the sink).
-
-    Structured Streaming's file sink is append-only exactly-once per
-    batch, but replays from UPSTREAM (at-least-once sources) still land as
-    duplicate rows — this sink closes that gap by anti-joining each batch
-    against the sink's existing keys before appending. Safe under
-    checkpoint-recovery re-delivery of a whole micro-batch too, because
-    the re-delivered rows anti-join away."""
-    from pyspark.errors import AnalysisException
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.dropDuplicates(keys)
-        try:
-            existing = read_parquet(spark, out_path).select(*keys).distinct()
-            batch = batch.join(existing, keys, "left_anti")
-        except AnalysisException:
-            pass  # first batch: sink path doesn't exist yet
-        batch.write.mode("append").parquet(out_path)
-
-    return _write
-
-
 def run_stream_upsert(
     stream: DataFrame, out_path: str, checkpoint: str, keys: list[str] | None = None
 ) -> None:
-    """Drain an availableNow stream through the idempotent upsert sink."""
-    q = (
-        stream.writeStream.foreachBatch(
-            upsert_sink_foreach_batch(out_path, keys or ["event_id"])
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    """Drain an availableNow stream through the first-writer-wins upsert
+    sink (``streaming/sink.upsert_append``): UPSTREAM replays, which the
+    exactly-once file sink would still land, anti-join away."""
+    keys = keys or ["event_id"]
+    run_sink(stream, checkpoint, lambda batch, _: upsert_append(batch, out_path, keys))
 
 
 def clicks_before_purchase_join(

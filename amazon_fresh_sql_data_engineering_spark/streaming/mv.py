@@ -4,13 +4,15 @@ changelog — the streaming twin of ``operators/mv.mv_apply_delta`` (same
 delta rule, same results, asserted in tests/test_streaming.py).
 
 State lives in the SINK, not the engine (the streaming/cdc.py pattern):
-each micro-batch reads the published view state, folds its signed delta
-in with ``mv_apply_delta`` (one |MV|+|delta partials| shuffle, never a
-base rescan), and publishes the result as a new snapshot through
+the flat sink is a fold over streaming/sink.py's state-sink step — each
+micro-batch reads the published view state, folds its signed delta in
+with ``mv_apply_delta`` (one |MV|+|delta partials| shuffle, never a base
+rescan), and publishes the result as a new snapshot through
 :mod:`..sources.versioned` (immutable ``data/v=N`` behind an atomically
 flipped pointer file). Engine state is zero and the sink is the
 recoverable state. A crash anywhere leaves the previous snapshot
-published; the next batch's heal prunes what never published.
+published; the next batch's heal prunes what never published. Read
+either layout back with :func:`read_mv_state`.
 
 Restart idempotency needs one more move than CDC: a (key, seq) merge is
 naturally idempotent under micro-batch replay, but aggregate FOLDING is
@@ -45,8 +47,8 @@ Two layouts; ``read_mv_state`` and ``adopt_mv_sink`` tell them apart on
 disk:
 
 - flat (``run_mv_maintain_stream``): the whole view is one versioned
-  table, rewritten per micro-batch — fine while the state is GROUP-grain
-  (|groups| rows, not base rows);
+  table, rewritten per micro-batch — O(|view|) per batch, fine while the
+  state is GROUP-grain (|groups| rows, not base rows);
 - bucketed (``run_mv_maintain_stream_partitioned``): each stable
   hash-bucket of the grain keys is its own versioned table,
   ``out_path/bucket=B``, and a fold rewrites ONLY the buckets it touches;
@@ -59,7 +61,6 @@ paths, so both are object-store-safe and Spark-Connect-safe.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 
@@ -69,6 +70,7 @@ from pyspark.sql import functions as F
 from ..operators.mv import mv_apply_delta, mv_build
 from ..sources import versioned as V
 from ..sources.loaders import read_parquet
+from .sink import owner_id, run_sink, run_state_sink
 
 #: stamp column: last folded micro-batch id, riding inside the snapshot
 _STAMP = "__mv_last_batch"
@@ -86,15 +88,18 @@ _BUCKET_DIR = "bucket="
 _STAGE = ".mvstage-"
 
 
-def _owner_id(checkpoint_dir: str) -> str:
-    return hashlib.md5(str(checkpoint_dir).rstrip("/").encode()).hexdigest()[:16]
-
-
 def _check_owner(published: DataFrame, owner: str, out_path: str) -> bool:
-    """Fail loudly when the sink's stamps belong to a different checkpoint
-    (see OWNERSHIP in the module doc). Checked via the DISTINCT owners, not
-    an arbitrary ``first()`` row (ADVICE r8). Returns True when some rows
-    carry no owner — operator-seeded state the caller adopts."""
+    """Fail loudly when the sink is not stamped view state, or its stamps
+    belong to a different checkpoint (see OWNERSHIP in the module doc).
+    Checked via the DISTINCT owners, not an arbitrary ``first()`` row
+    (ADVICE r8). Returns True when some rows carry no owner —
+    operator-seeded state the caller adopts."""
+    if _STAMP not in published.columns:
+        # NOT an empty state: folding would silently discard published
+        # aggregates, so fail loudly instead (seeders must stamp)
+        raise ValueError(
+            f"mv stream: {out_path} is not stamped view state — refusing to fold"
+        )
     if _OWNER not in published.columns:
         return True
     owners = {r[0] for r in published.select(_OWNER).distinct().collect()}
@@ -118,18 +123,6 @@ def _check_columns(keys: list[str], sums: dict[str, str], op_col: str) -> None:
         raise ValueError(f"mv stream: {sorted(bad)} collide with view columns")
 
 
-def _start(stream: DataFrame, write, checkpoint_dir: str, trigger, block: bool):
-    q = (
-        stream.writeStream.foreachBatch(write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
-    if block:
-        q.awaitTermination()
-    return q
-
-
 def run_mv_maintain_stream(
     delta_stream: DataFrame,
     out_path: str,
@@ -140,48 +133,28 @@ def run_mv_maintain_stream(
     trigger: dict | None = None,
     block: bool = True,
 ):
-    """Fold a signed-delta stream into a flat view-state sink. Default
-    trigger is an availableNow drain (blocks until the backlog is
-    consumed); pass e.g. ``trigger={"processingTime": "10 seconds"},
-    block=False`` for a long-running micro-batch cadence — the returned
-    StreamingQuery is the caller's to stop. Read the state back with
-    :func:`read_mv_state`."""
+    """Fold a signed-delta stream into a flat view-state sink;
+    ``trigger``/``block`` as in ``streaming/sink.run_sink``. Read the
+    state back with :func:`read_mv_state`."""
     _check_columns(keys, sums, op_col)
-    owner = _owner_id(checkpoint_dir)
+    owner = owner_id(checkpoint_dir)
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        V.heal(out_path)
-        published = V.read_or_none(spark, out_path)
-        if published is not None:
-            # a sink that exists but lacks the stamp is NOT an empty
-            # state — treating it as one would silently discard published
-            # aggregates, so fail loudly instead (seeders must stamp)
-            if _STAMP not in published.columns:
-                raise ValueError(
-                    f"mv stream: sink {out_path} exists without {_STAMP!r} — "
-                    "refusing to fold into what may be unstamped state"
-                )
-            _check_owner(published, owner, out_path)
-            last = published.select(F.max(_STAMP)).first()[0]
-            cur = published.drop(_STAMP, _OWNER)
-        else:
-            cur, last = None, None
-        if last is not None and batch_id <= last:
-            return  # replay of an already-folded batch (see module doc)
-        if cur is None:
+    def fold(batch_df: DataFrame, published: DataFrame | None, batch_id: int):
+        if published is None:
             # first batch: an empty state frame with the view's dtypes
             # (mv_build on a filtered-empty delta establishes the same
             # widened aggregate types every later fold casts back to)
             cur = mv_build(batch_df.filter(F.lit(False)).drop(op_col), keys, sums)
+        else:
+            _check_owner(published, owner, out_path)
+            last = published.select(F.max(_STAMP)).first()[0]
+            if last is not None and batch_id <= last:
+                return None  # replay of an already-folded batch (see module doc)
+            cur = published.drop(_STAMP, _OWNER)
         new = mv_apply_delta(cur, batch_df, keys, sums, op_col)
-        V.write_snapshot(
-            new.withColumn(_STAMP, F.lit(batch_id)).withColumn(_OWNER, F.lit(owner)),
-            out_path,
-            keep_last=1,
-        )
+        return new.withColumn(_STAMP, F.lit(batch_id)).withColumn(_OWNER, F.lit(owner))
 
-    return _start(delta_stream, _write, checkpoint_dir, trigger, block)
+    return run_state_sink(delta_stream, out_path, checkpoint_dir, fold, trigger, block)
 
 
 def _bucket_col(keys: list[str], num_buckets: int):
@@ -264,9 +237,9 @@ def run_mv_maintain_stream_partitioned(
     block: bool = True,
 ):
     """Fold a signed-delta stream into a BUCKETED view-state sink,
-    rewriting only the buckets each micro-batch touches. Default trigger
-    is an availableNow drain; ``trigger``/``block`` as in
-    :func:`run_mv_maintain_stream`.
+    rewriting only the buckets each micro-batch touches. It starts through
+    ``streaming/sink.run_sink`` but keeps its own publish body (one flip
+    per touched bucket); ``trigger``/``block`` as there.
 
     Layout: each hash-bucket of the grain keys is its OWN versioned table
     — the pointer in ``out_path/bucket=B`` names an immutable snapshot
@@ -289,7 +262,7 @@ def run_mv_maintain_stream_partitioned(
     sink-wide on the first fold of a run and over the touched buckets
     after."""
     _check_columns(keys, sums, op_col)
-    owner = _owner_id(checkpoint_dir)
+    owner = owner_id(checkpoint_dir)
     owner_checked = {"sink": False}
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
@@ -307,11 +280,6 @@ def run_mv_maintain_stream_partitioned(
             read_parquet(spark, *live, mergeSchema=str(first).lower()) if live else None
         )
         if published is not None:
-            if _STAMP not in published.columns:
-                raise ValueError(
-                    f"mv stream: {out_path} snapshots are not stamped view "
-                    "state — refusing to fold"
-                )
             if _check_owner(published, owner, out_path):
                 _adopt_ownerless_buckets(spark, out_path, owner)
                 published = read_parquet(spark, *_live_dirs(out_path, _buckets(out_path)))
@@ -369,7 +337,7 @@ def run_mv_maintain_stream_partitioned(
                 )
         shutil.rmtree(stage, ignore_errors=True)
 
-    return _start(delta_stream, _write, checkpoint_dir, trigger, block)
+    return run_sink(delta_stream, checkpoint_dir, _write, trigger, block)
 
 
 def _is_flat(out_path: str) -> bool:
@@ -401,7 +369,7 @@ def adopt_mv_sink(
     adopted and unadopted buckets — the unadopted ones still carry the
     foreign owner and the next fold refuses loudly; re-run the adopt to
     finish."""
-    owner = _owner_id(checkpoint_dir)
+    owner = owner_id(checkpoint_dir)
     if _is_flat(out_path):
         V.heal(out_path)
         tables = [out_path]

@@ -338,6 +338,17 @@ def test_minhash_finds_known_dups_and_matches_bruteforce(spark, docs):
         assert abs(brute[p] - j) < 1e-12
 
 
+def test_minhash_features_shingles_each_doc_once_under_repartition(spark, docs):
+    """The shingling UDF runs once per doc: the features' NOT NULL filter
+    must not be pushed under a caller's repartition into each Union
+    branch, which evaluated the UDF there and again above the exchange."""
+    batch = docs.unionByName(docs.withColumn("doc_id", F.col("doc_id") + 100)).repartition(4)
+    feats = D.minhash_features(batch, "doc_id", "text", 64, 3, 42)
+    plan = feats._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert feats.count() == 10
+
+
 def test_exact_dedup_injective_encoding(spark):
     # values containing the old '\x1f' separator (or a literal matching the
     # NULL sentinel) must NOT merge across column boundaries

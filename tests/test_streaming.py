@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from amazon_fresh_sql_data_engineering_spark.sources import versioned as V
 from amazon_fresh_sql_data_engineering_spark.sources.loaders import load_table
 from amazon_fresh_sql_data_engineering_spark.streaming.events import (
     hourly_rollup,
@@ -380,7 +381,7 @@ def test_corpus_neardup_stream_screens_arrivals(spark, sf_dir, tmp_path):
     SC.run_corpus_neardup_upsert(
         SC.stream_documents_from_parquet(spark, src), out, ckpt
     )
-    n_first = spark.read.parquet(out).count()
+    n_first = V.read_snapshot(spark, out).count()
     assert n_first > 0
 
     # wave 2: exact copies, near copies (suffix mutation), and novel docs
@@ -394,7 +395,7 @@ def test_corpus_neardup_stream_screens_arrivals(spark, sf_dir, tmp_path):
     SC.run_corpus_neardup_upsert(
         SC.stream_documents_from_parquet(spark, src), out, ckpt
     )
-    published = spark.read.parquet(out)
+    published = V.read_snapshot(spark, out)
     pub_ids = {r.doc_id for r in published.select("doc_id").collect()}
     # exact copies NEVER publish (identical content always verifies 1.0
     # against its published original, or its original's screener)
@@ -420,12 +421,14 @@ def test_corpus_neardup_stream_screens_arrivals(spark, sf_dir, tmp_path):
     )
     assert leftover.count() == 0
     # fresh-checkpoint redrain: everything self-matches, nothing added
+    # (count first: the redrain's publish would delete the held snapshot)
+    n_published = published.count()
     SC.run_corpus_neardup_upsert(
         SC.stream_documents_from_parquet(spark, src),
         out,
         str(tmp_path / "ckpt2"),
     )
-    assert spark.read.parquet(out).count() == published.count()
+    assert V.read_snapshot(spark, out).count() == n_published
 
 
 def test_corpus_neardup_stream_negative_ids_short_docs_no_pins(spark, sf_dir, tmp_path):
@@ -433,7 +436,7 @@ def test_corpus_neardup_stream_negative_ids_short_docs_no_pins(spark, sf_dir, tm
     copies never publish, whatever the sign of the ids; docs under the
     shingle width still publish but band to nothing, so the screen never
     pairs them with each other; and the drain leaves no pinned frame
-    behind."""
+    behind. Then a sink directory of plain parquet is refused."""
     from amazon_fresh_sql_data_engineering_spark.operators import dedup as D
     from amazon_fresh_sql_data_engineering_spark.streaming import corpus as SC
 
@@ -455,13 +458,13 @@ def test_corpus_neardup_stream_negative_ids_short_docs_no_pins(spark, sf_dir, tm
     wave1 = docs.withColumn("doc_id", -F.col("doc_id") - 10).unionByName(short([-1, -2, -3, -4]))
     wave1.coalesce(1).write.parquet(src)
     SC.run_corpus_neardup_upsert(SC.stream_documents_from_parquet(spark, src), out, ckpt)
-    n_first = spark.read.parquet(out).count()
+    n_first = V.read_snapshot(spark, out).count()
     # wave 2: exact copies under fresh negative ids, plus two new short docs
     wave2 = docs.withColumn("doc_id", -F.col("doc_id") - 1_000_000).unionByName(short([-5, -6]))
     wave2.coalesce(1).write.mode("append").parquet(src)
     SC.run_corpus_neardup_upsert(SC.stream_documents_from_parquet(spark, src), out, ckpt)
 
-    published = spark.read.parquet(out)
+    published = V.read_snapshot(spark, out)
     pub_ids = {r.doc_id for r in published.select("doc_id").collect()}
     assert published.count() == n_first + 2
     assert not any(i <= -1_000_000 for i in pub_ids)
@@ -470,6 +473,15 @@ def test_corpus_neardup_stream_negative_ids_short_docs_no_pins(spark, sf_dir, tm
     # the short docs (ids -1..-6) carry empty signatures: no band rows
     assert D._bands_from_sig(pub_feats, 64, 16).filter(F.col("__id") > -10).count() == 0
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == pins
+    # a sink of plain parquet (no pointer: what the append-era near-dup
+    # sink left) fails loudly instead of being folded from empty
+    plain = str(tmp_path / "plain")
+    wave1.write.parquet(plain)
+    with pytest.raises(Exception, match="no _LATEST pointer"):
+        SC.run_corpus_neardup_upsert(
+            SC.stream_documents_from_parquet(spark, src), plain, str(tmp_path / "ckpt_plain")
+        )
+    assert spark.read.parquet(plain).count() == 20
 
 
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
@@ -1957,6 +1969,43 @@ def test_mvcc_sink_snapshot_churn_bounded(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
+# One place starts streams: only streaming/sink.py names writeStream
+# ---------------------------------------------------------------------------
+
+
+def _write_stream_refs(source: str) -> list[int]:
+    """Lines that name the ``writeStream`` attribute."""
+    import ast
+
+    return [
+        node.lineno
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Attribute) and node.attr == "writeStream"
+    ]
+
+
+def test_lint_flags_write_stream():
+    assert _write_stream_refs("q = df.writeStream.start()\nw = 'writeStream'\n") == [1]
+
+
+def test_only_the_sink_module_starts_streams():
+    import amazon_fresh_sql_data_engineering_spark as PKG
+
+    root = os.path.dirname(PKG.__file__)
+    sink_py = os.path.join(root, "streaming", "sink.py")
+    hits = []
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == sink_py:
+                continue
+            src = open(path, encoding="utf-8").read()
+            hits += [f"{os.path.relpath(path, root)}:{n}" for n in _write_stream_refs(src)]
+    assert hits == []
+    assert _write_stream_refs(open(sink_py, encoding="utf-8").read())
+
+
+# ---------------------------------------------------------------------------
 # Crash injection: every publish step of every pointer user
 # ---------------------------------------------------------------------------
 
@@ -1991,16 +2040,17 @@ def _inject_crash(monkeypatch, stop):
 
 
 @pytest.mark.parametrize("stop", _CRASH_STOPS)
-@pytest.mark.parametrize("sink", ["flat_mv", "cdc", "bucketed_mv"])
+@pytest.mark.parametrize("sink", ["flat_mv", "cdc", "bucketed_mv", "neardup"])
 def test_sink_publish_crash_injection_converges(spark, tmp_path, monkeypatch, sink, stop):
     """A micro-batch that dies at any publish step leaves the sink on
     exactly its old state or its new one — per bucket on the bucketed
     layout, where each bucket flips on its own — once the next heal runs;
     replaying the batch under the same checkpoint converges to the batch
-    result."""
+    result (for the near-dup sink: to an uncrashed drain over the same
+    files)."""
     from amazon_fresh_sql_data_engineering_spark.operators import cdc, mv
-    from amazon_fresh_sql_data_engineering_spark.sources import versioned as V
     from amazon_fresh_sql_data_engineering_spark.streaming import cdc as CDC
+    from amazon_fresh_sql_data_engineering_spark.streaming import corpus as SC
     from amazon_fresh_sql_data_engineering_spark.streaming import mv as MV
 
     src = str(tmp_path / "src")
@@ -2031,6 +2081,39 @@ def test_sink_publish_crash_injection_converges(spark, tmp_path, monkeypatch, si
                 spark.createDataFrame(rows, sch), ["k"], "seq", op_col="op"
             )
             return {r["k"]: r["v"] for r in log.collect()}
+
+        group_of = {}
+    elif sink == "neardup":
+        sch = "doc_id long, text string"
+        words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+        chain, tail = [f"w{i}" for i in range(30)], [f"x{i}" for i in range(8)]
+        # batch 2: an exact copy of doc 1 (screened), a new doc, a short
+        # doc that a replay must not publish twice, and a chain 7 ~ 9 ~ 8
+        # with 7 !~ 8 (Jaccard 0.78, 0.78, 0.56) whose one survivor, 7, a
+        # replay must not turn into two
+        batches = [
+            [(1, " ".join(words)), (2, " ".join(reversed(words))), (3, "tiny doc")],
+            [(4, " ".join(words)), (5, " ".join(words[3:] + ["nu", "xi"])), (6, "short one"),
+             (7, " ".join(chain)), (8, " ".join(chain[8:] + tail)), (9, " ".join(chain + tail))],
+        ]
+
+        def run(stream, o, c):
+            SC.run_corpus_neardup_upsert(stream, o, c)
+
+        ref_out, ref_ckpt = str(tmp_path / "ref"), str(tmp_path / "ref_ckpt")
+
+        def drain(o=out, c=ckpt):
+            run(spark.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(src), o, c)
+
+        def state(o=out):
+            # a multiset of rows: a replay that republishes shows as a dup
+            cols = [c.split()[0] for c in sch.split(", ")]
+            return sorted(tuple(r) for r in V.read_snapshot(spark, o).select(*cols).collect())
+
+        def expect(n):
+            # an uncrashed drain over the same files, one file further
+            drain(ref_out, ref_ckpt)
+            return state(ref_out)
 
         group_of = {}
     else:
@@ -2080,9 +2163,11 @@ def test_sink_publish_crash_injection_converges(spark, tmp_path, monkeypatch, si
 
     spark.createDataFrame(batches[0], sch).coalesce(1).write.parquet(src)
     drain()
-    old, new = expect(1), expect(2)
-    assert state() == old and old != new
+    old = expect(1)
+    assert state() == old
     spark.createDataFrame(batches[1], sch).coalesce(1).write.mode("append").parquet(src)
+    new = expect(2)
+    assert old != new
     with monkeypatch.context() as m:
         _inject_crash(m, stop)
         with pytest.raises(Exception, match=f"injected crash {stop}"):
@@ -2110,6 +2195,55 @@ def test_sink_publish_crash_injection_converges(spark, tmp_path, monkeypatch, si
     # replay converges to the batch result
     drain()
     assert state() == new
+
+
+@pytest.mark.parametrize("stop", ["before_append", "torn_append", "after_append"])
+def test_upsert_sink_torn_append_converges(spark, tmp_path, monkeypatch, stop):
+    """The first-writer-wins sink appends plain parquet, so a micro-batch
+    can die before its append, after part of it landed, or after all of
+    it but before the checkpoint commits the batch. Replaying the batch
+    under the same checkpoint converges to an uncrashed drain over the
+    same files: the landed keys anti-join away."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from amazon_fresh_sql_data_engineering_spark.streaming.events import run_stream_upsert
+
+    sch = "k int, v string"
+    src = str(tmp_path / "src")
+
+    def drain(name):
+        run_stream_upsert(
+            spark.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(src),
+            str(tmp_path / name), str(tmp_path / f"{name}_ckpt"), keys=["k"],
+        )
+
+    def state(name):
+        # a multiset of rows: a republished key shows as a duplicate
+        return sorted(tuple(r) for r in spark.read.parquet(str(tmp_path / name)).collect())
+
+    spark.createDataFrame([(1, "a"), (2, "b"), (1, "a")], sch).coalesce(1).write.parquet(src)
+    drain("sink")
+    spark.createDataFrame([(2, "b"), (3, "c"), (4, "d")], sch).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    drain("ref")
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **k):
+        if stop == "torn_append":
+            real(self._df.limit(1).write.mode("append"), path)
+        elif stop == "after_append":
+            real(self, path, *a, **k)
+        raise RuntimeError(f"injected crash {stop}")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        with pytest.raises(Exception, match=f"injected crash {stop}"):
+            drain("sink")
+    landed = {"before_append": 2, "torn_append": 3, "after_append": 4}[stop]
+    assert len(state("sink")) == landed
+    drain("sink")
+    assert state("sink") == state("ref") == [(1, "a"), (2, "b"), (3, "c"), (4, "d")]
 
 
 @pytest.mark.parametrize("stop", _CRASH_STOPS)
