@@ -189,12 +189,7 @@ def q_pipe_clean_customers(spark, sf_dir):
 def _staged_customers(spark, sf_dir):
     c = _t(spark, sf_dir, "customer")
     k = F.col("c_custkey")
-    h = F.md5(F.concat(F.lit("cust"), k.cast("string")))
-    uuid_base = F.lower(
-        F.concat_ws(
-            "-", h.substr(1, 8), h.substr(9, 4), h.substr(13, 4), h.substr(17, 4), h.substr(21, 12)
-        )
-    )
+    uuid_base = _uuidify_col(F.md5(F.concat(F.lit("cust"), k.cast("string"))))
     # lazy local checkpoint = the staging/clean stage boundary: projection
     # collapse + pushdown would otherwise re-inline the md5/regex CASE columns
     # into every downstream filter/projection of the cleaning program (~4x
@@ -268,17 +263,9 @@ _ORD_FP_SQL = (
 def _staged_orders(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     k, ck = F.col("o_orderkey"), F.col("o_custkey")
-
-    def uuidify(h):
-        return F.lower(
-            F.concat_ws(
-                "-", h.substr(1, 8), h.substr(9, 4), h.substr(13, 4), h.substr(17, 4), h.substr(21, 12)
-            )
-        )
-
-    ord_uuid = uuidify(F.md5(F.concat(F.lit("ord"), k.cast("string"))))
-    cust_uuid = uuidify(F.md5(F.concat(F.lit("cust"), ck.cast("string"))))
-    ghost_uuid = uuidify(F.md5(F.concat(F.lit("ghost"), ck.cast("string"))))
+    ord_uuid = _uuidify_col(F.md5(F.concat(F.lit("ord"), k.cast("string"))))
+    cust_uuid = _uuidify_col(F.md5(F.concat(F.lit("cust"), ck.cast("string"))))
+    ghost_uuid = _uuidify_col(F.md5(F.concat(F.lit("ghost"), ck.cast("string"))))
     # lazy checkpoint: the staging/clean stage boundary (_staged_customers)
     return fence.checkpoint(o.select(
         F.when(k % 20 == 0, "")

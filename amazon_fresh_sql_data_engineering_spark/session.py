@@ -32,6 +32,14 @@ from .registry import ensure_engine_confs
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half of
+    physical memory (the rest is headroom for Python workers and the OS),
+    between 1g and 16g."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16, max(1, phys // 2 // 2**30))}g"
+
+
 def build_session(
     app_name: str = "amazon-fresh-spark-engine",
     master: str | None = None,
@@ -50,11 +58,12 @@ def build_session(
         # In local mode the driver JVM *is* the executor; Spark's 1g default
         # heap is undersized for 32 task threads plus checkpoint/broadcast
         # blocks accumulated across a long catalog run (bench OOMed at 211
-        # queries). Only takes effect when this process launches the JVM —
-        # on a real cluster the submitter's --driver-memory governs.
+        # queries), and a heap past physical memory gets the JVM killed.
+        # Only takes effect when this process launches the JVM — on a real
+        # cluster the submitter's --driver-memory governs.
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
         )
         .config(
             "spark.sql.shuffle.partitions",

@@ -143,11 +143,16 @@ def _paths_fingerprint(paths: tuple[str, ...]):
     return tuple(out)
 
 
-def read_parquet(spark: SparkSession, *paths: str, **options) -> DataFrame:
+def read_parquet(
+    spark: SparkSession, *paths: str, schema: T.StructType | None = None, **options
+) -> DataFrame:
     """OP-SCAN primitive: ``spark.read.options(**options).parquet(*paths)``
     with the inferred schema memoized (module docstring: key, invalidation,
-    remote-path bypass). Reader options are part of the key."""
+    remote-path bypass). Reader options are part of the key. A given
+    ``schema`` is used as is: no inference, no memo."""
     reader = spark.read.options(**options) if options else spark.read
+    if schema is not None:
+        return reader.schema(schema).parquet(*paths)
     fps = _paths_fingerprint(paths)
     if fps is None:
         with _SCHEMA_CACHE_LOCK:
@@ -171,8 +176,8 @@ def read_parquet(spark: SparkSession, *paths: str, **options) -> DataFrame:
 
 
 def read_record(path: str) -> dict | None:
-    """First row of a one-row parquet directory (a store manifest, a stream
-    owner record) as a dict, read DRIVER-SIDE with pyarrow: table-format
+    """First row of a one-row parquet directory (a store manifest) as a
+    dict, read DRIVER-SIDE with pyarrow: table-format
     metadata needs no schema-inference or collect job. None when the
     directory is missing or holds no rows (a torn overwrite leaves only
     ``_temporary``/``_SUCCESS`` entries, which pyarrow skips). Local paths

@@ -30,10 +30,16 @@ Two kinds of callers share the layout:
   would be lost.
 
 Readers that hold a DataFrame onto ``data/v=N`` are unaffected by later
-publishes until ``v=N`` is vacuumed — immutability IS the isolation;
-under ``keep_last=1`` that is the next publish. Single writer per table
-is assumed, as with any lakehouse on a filesystem without a commit
-service.
+publishes until ``v=N`` is vacuumed — immutability IS the isolation. The
+streaming state sinks keep two snapshots (``streaming/sink.KEEP_LAST``),
+so a frame read from one survives the next publish and goes at the one
+after: one batch of grace. Single writer per table is assumed, as with
+any lakehouse on a filesystem without a commit service.
+
+:func:`replace_json` is the one atomic metadata write: the pointer flip
+and the streaming owner record (``streaming/sink.py``) both go through
+it, and :func:`drop_litter` removes what a crash before its
+``os.replace`` left behind.
 """
 
 from __future__ import annotations
@@ -81,11 +87,18 @@ def next_version(table_dir: str) -> int:
     return (versions[-1] + 1) if versions else 1
 
 
-def _flip(table_dir: str, version: int) -> None:
-    tmp = os.path.join(table_dir, f"{_POINTER}.tmp.{version}")
+def replace_json(path: str, obj: dict, tag: int) -> None:
+    """Publish ``obj`` as the JSON file ``path``: write the sibling
+    ``path.tmp.<tag>``, then ``os.replace`` it in (atomic on POSIX). A
+    crash before the replace leaves the old file standing."""
+    tmp = f"{path}.tmp.{tag}"
     with open(tmp, "w") as f:
-        json.dump({"version": version}, f)
-    os.replace(tmp, os.path.join(table_dir, _POINTER))
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+def _flip(table_dir: str, version: int) -> None:
+    replace_json(os.path.join(table_dir, _POINTER), {"version": version}, version)
 
 
 def publish(table_dir: str, version: int, keep_last: int | None = None) -> None:
@@ -178,11 +191,12 @@ def rollback(table_dir: str, version: int) -> None:
     _flip(table_dir, version)
 
 
-def _drop_pointer_litter(table_dir: str) -> None:
-    # a crash between _flip's write and its os.replace leaves a tmp file
-    # that is never read; the single-writer contract makes removing it at
-    # the writer's own heal/GC points race-free
-    for t in glob.glob(os.path.join(table_dir, f"{_POINTER}.tmp.*")):
+def drop_litter(table_dir: str) -> None:
+    """Remove the tmp files of :func:`replace_json` writes that died
+    before their ``os.replace``: never read, and the single-writer
+    contract makes removing them at the writer's own heal points
+    race-free."""
+    for t in glob.glob(os.path.join(table_dir, "_*.tmp.*")):
         try:
             os.remove(t)
         except OSError:
@@ -202,22 +216,22 @@ def vacuum(table_dir: str, keep_last: int = 2) -> list[int]:
         if v not in keep:
             shutil.rmtree(snapshot_path(table_dir, v))
             removed.append(v)
-    _drop_pointer_litter(table_dir)
+    drop_litter(table_dir)
     return removed
 
 
 def heal(table_dir: str) -> bool:
     """Prune snapshots NEWER than the pointer — writes that never
-    published — plus pointer tmp litter. Never restores anything: the
-    pointed snapshot stayed live through any crash. Snapshots below the
-    pointer are retention, left to :func:`vacuum`. Single-version sinks
-    and stores only (module doc). Returns True when something was
-    pruned."""
+    published — plus tmp litter (:func:`drop_litter`). Never restores
+    anything: the pointed snapshot stayed live through any crash.
+    Snapshots below the pointer are retention, left to :func:`vacuum`.
+    Single-version sinks and stores only (module doc). Returns True when
+    something was pruned."""
     cur = current_version(table_dir)
     pruned = False
     for v in list_versions(table_dir):
         if cur is None or v > cur:
             shutil.rmtree(snapshot_path(table_dir, v), ignore_errors=True)
             pruned = True
-    _drop_pointer_litter(table_dir)
+    drop_litter(table_dir)
     return pruned

@@ -54,15 +54,11 @@ gateway, so it also runs under Spark Connect.
 It starts through ``streaming/sink.run_sink`` with its own publish body
 (batch-sized partitions); read the pairs with :func:`read_dedup_pairs`.
 
-OWNERSHIP (the streaming/mv.py lesson, ADVICE r7): micro-batch ids are
-checkpoint-scoped, so a fresh checkpoint restarting at 0 would dynamic-
-overwrite ``__ingest=0`` — destroying a prior stream's first batch. The
-store carries a ``stream`` record (owner hash of the checkpoint location +
-an epoch counter); a mismatched owner FAILS LOUDLY, and the explicit
-re-home `adopt_minhash_store_stream` bumps the epoch instead of reusing
-ids: ingest keys are ``epoch * 1e9 + batch_id``, so a new epoch's batches
-sort strictly after all prior history and prior epochs remain probe-visible
-store content. (1e9 bounds batches-per-epoch, not corpus size.)
+OWNERSHIP: ingest keys are streaming/sink.py's batch keys, and the store
+root's owner record is claimed on every batch, so a fresh checkpoint
+cannot overwrite ``__ingest`` partitions of another's history.
+:func:`adopt_minhash_store_stream` re-homes the store; prior epochs stay
+probe-visible history.
 """
 
 from __future__ import annotations
@@ -80,56 +76,26 @@ from ..operators.dedup import (
     store_ingests,
     store_manifest,
 )
-from ..sources.loaders import read_parquet, read_record
-from .sink import owner_id, run_sink
-
-_EPOCH_SPAN = 1_000_000_000
+from ..sources.loaders import read_parquet
+from .sink import adopt, batch_key, claim, run_sink
 
 
-def _read_stream_meta(store_path: str):
-    """``(owner, epoch)`` of the store's stream record; ``(None, None)``
-    when the record is missing or empty (no owner)."""
-    row = read_record(f"{store_path}/stream")
-    return (row["owner"], row["epoch"]) if row else (None, None)
-
-
-def _write_stream_meta(spark: SparkSession, store_path: str, owner: str, epoch: int) -> None:
-    spark.createDataFrame(
-        [(owner, epoch)], "owner string, epoch long"
-    ).write.mode("overwrite").parquet(f"{store_path}/stream")
+def _max_ingest(store_path: str) -> int | None:
+    ingests = store_ingests(store_path)
+    return ingests[-1] if ingests else None
 
 
 def adopt_minhash_store_stream(
     spark: SparkSession, store_path: str, checkpoint_dir: str
 ) -> int:
-    """Explicitly re-home an append-layout store onto a NEW checkpoint:
-    bumps the epoch so the new stream's ingest keys cannot collide with —
-    or overwrite — any prior epoch's partitions, and stamps the new owner.
-    Prior epochs stay in the store as probe-visible history. Returns the
-    new epoch.
-
-    Also the RECOVERY path for a torn stream record (self-review r8: the
-    record's overwrite is delete-then-write, so a crash mid-adopt can
-    leave it missing while the store holds history — the ingest loop then
-    fails loudly and points here): with no record, the safe epoch is
-    derived from the DATA — one past the highest epoch any ingested key
-    belongs to — so the re-homed stream still cannot collide with
-    anything on disk."""
+    """Explicitly re-home an append-layout store onto a NEW checkpoint
+    (``streaming/sink.adopt``): the new stream's ingest keys sort after
+    every key on disk, so nothing prior is overwritten. Also the way in
+    for a store with history but no owner record (a staged seed). Returns
+    the new epoch."""
     # prune a torn compaction's unpointed generation before reading
     heal_minhash_store(store_path)
-    owner, epoch = _read_stream_meta(store_path)
-    if owner is None:
-        ingests = store_ingests(store_path)
-        if not ingests:
-            raise ValueError(
-                f"dedup stream: {store_path} has no stream record and no "
-                "ingested history — nothing to adopt (a first run stamps "
-                "itself)"
-            )
-        epoch = ingests[-1] // _EPOCH_SPAN
-    new_epoch = epoch + 1
-    _write_stream_meta(spark, store_path, owner_id(checkpoint_dir), new_epoch)
-    return new_epoch
+    return adopt(store_path, checkpoint_dir, lambda: _max_ingest(store_path))
 
 
 def run_store_dedup_stream(
@@ -163,38 +129,14 @@ def run_store_dedup_stream(
     are untouched, then dynamically overwritten by the re-accrete).
     Probe results are compaction-invariant (the folded stamp is
     ``upto - 1`` < every future ``max_ingest_exclusive``)."""
-    owner = owner_id(checkpoint_dir)
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # prune a torn compaction's unpointed generation before anything
         # reads the store
         heal_minhash_store(store_path)
-        cur_owner, epoch = _read_stream_meta(store_path)
-        if cur_owner is None:
-            # a MISSING stream record over a store that already holds
-            # history is a torn record (its overwrite is delete-then-
-            # write), NOT an unowned store — stamping epoch 0 here would
-            # be exactly the ingest-key collision the guard exists to
-            # prevent (self-review r8). Fail loudly; adopt recovers.
-            if store_ingests(store_path):
-                raise ValueError(
-                    f"dedup stream: store {store_path} holds ingested "
-                    "history but its stream record is missing (torn "
-                    "write?) — refusing to stamp epoch 0 over live ingest "
-                    "keys. Recover with adopt_minhash_store_stream()."
-                )
-            epoch = 0
-            _write_stream_meta(spark, store_path, owner, epoch)
-        elif cur_owner != owner:
-            raise ValueError(
-                f"dedup stream: store {store_path} is owned by checkpoint "
-                f"{cur_owner!r}, not this stream's {owner!r} — its ingest keys "
-                "would collide (fresh checkpoints restart batch ids at 0, "
-                "silently overwriting prior history). If the re-home is "
-                "intentional, call adopt_minhash_store_stream()."
-            )
-        ingest = epoch * _EPOCH_SPAN + batch_id
+        epoch = claim(store_path, checkpoint_dir, lambda: _max_ingest(store_path))
+        ingest = batch_key(epoch, batch_id)
         if (
             compact_every
             and batch_id > 0

@@ -21,18 +21,14 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    from pyspark.sql import SparkSession
-
     from amazon_fresh_sql_data_engineering_spark.catalog import CATALOG
+    from amazon_fresh_sql_data_engineering_spark.session import build_session
     from oracle_compare import compare, duckdb_connect
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
+    spark = build_session(
+        app_name="parity-sweep",
+        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
+        shuffle_partitions=8,
     )
     con = duckdb_connect(sf_dir)
 

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from amazon_fresh_sql_data_engineering_spark.sources import versioned as V
 from amazon_fresh_sql_data_engineering_spark.sources.loaders import load_table
+from amazon_fresh_sql_data_engineering_spark.streaming import sink as S
 from amazon_fresh_sql_data_engineering_spark.streaming.events import (
     hourly_rollup,
     sliding_rollup,
@@ -979,6 +980,115 @@ def test_streaming_mv_partitioned_adopt_rehomes(spark, tmp_path):
     assert got == {"a": (1, 10.0), "b": (1, 5.0)}
 
 
+@pytest.mark.parametrize("layout", ["flat", "bucketed"])
+def test_streaming_mv_emptied_view_keeps_its_owner(spark, tmp_path, layout):
+    """A fold that empties the view leaves no row behind, yet the sink
+    stays owned: a fresh checkpoint on a new source is refused, and the
+    owning checkpoint still resumes."""
+    from amazon_fresh_sql_data_engineering_spark.streaming import mv as MV
+
+    keys, sums = ["g"], {"rev": "rev"}
+    sch = "id int, g string, rev double, __op int"
+    out = str(tmp_path / "mv_state")
+    run, kw = (
+        (MV.run_mv_maintain_stream, {})
+        if layout == "flat"
+        else (MV.run_mv_maintain_stream_partitioned, {"num_buckets": 4})
+    )
+
+    def drain(src, ckpt):
+        run(
+            spark.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(src),
+            out, ckpt, keys, sums, **kw,
+        )
+
+    src_a, ckpt_a = str(tmp_path / "dA"), str(tmp_path / "ckptA")
+    spark.createDataFrame([(1, "a", 10.0, 1)], sch).coalesce(1).write.parquet(src_a)
+    spark.createDataFrame([(1, "a", 10.0, -1)], sch).coalesce(1).write.mode(
+        "append"
+    ).parquet(src_a)
+    drain(src_a, ckpt_a)
+    assert MV.read_mv_state(spark, out).count() == 0
+    src_b = str(tmp_path / "dB")
+    spark.createDataFrame([(2, "b", 5.0, 1)], sch).coalesce(1).write.parquet(src_b)
+    with pytest.raises(Exception, match="owned by checkpoint"):
+        drain(src_b, str(tmp_path / "ckptB"))
+    assert MV.read_mv_state(spark, out).count() == 0
+    spark.createDataFrame([(3, "c", 1.0, 1)], sch).coalesce(1).write.mode(
+        "append"
+    ).parquet(src_a)
+    drain(src_a, ckpt_a)
+    got = {
+        r["g"]: (r["__mv_cnt"], float(r["rev"]))
+        for r in MV.read_mv_state(spark, out).collect()
+    }
+    assert got == {"c": (1, 1.0)}
+
+
+def test_streaming_mv_partitioned_adopt_rewrites_no_bucket(spark, tmp_path):
+    """adopt_mv_sink on a bucketed sink is an epoch bump in the owner
+    record: every bucket's data files stay byte-identical."""
+    from amazon_fresh_sql_data_engineering_spark.streaming import mv as MV
+
+    keys, sums = ["g"], {"rev": "rev"}
+    sch = "id int, g string, rev double, __op int"
+    src, out = str(tmp_path / "d1"), str(tmp_path / "mv_state")
+    spark.createDataFrame(
+        [(1, "a", 10.0, 1), (2, "b", 5.0, 1), (3, "c", 1.0, 1)], sch
+    ).coalesce(1).write.parquet(src)
+    MV.run_mv_maintain_stream_partitioned(
+        spark.readStream.schema(sch).parquet(src),
+        out, str(tmp_path / "ckptA"), keys, sums, num_buckets=4,
+    )
+    before = _dir_snapshot(out)
+    assert before
+    epoch = MV.adopt_mv_sink(spark, out, str(tmp_path / "ckptB"))
+    assert _dir_snapshot(out) == before
+    assert epoch == 1
+    assert S.read_owner(out) == {"owner": S.owner_id(str(tmp_path / "ckptB")), "epoch": 1}
+
+
+def test_streaming_mv_partitioned_folds_across_int_and_long_stamps(spark, tmp_path):
+    """Stamps are batch keys: int while they fit, long from epoch 3 on. A
+    fold that touches a bucket stamped in epoch 0 and one stamped in
+    epoch 3 reads both."""
+    from amazon_fresh_sql_data_engineering_spark.streaming import mv as MV
+
+    keys, sums, nb = ["g"], {"rev": "rev"}, 4
+    sch = "id int, g string, rev double, __op int"
+    out = str(tmp_path / "mv_state")
+    b_of = {
+        r["g"]: r["b"]
+        for r in spark.createDataFrame([(g,) for g in "abcde"], "g string")
+        .withColumn("b", MV._bucket_col(keys, nb))
+        .collect()
+    }
+    g2 = next(g for g in "bcde" if b_of[g] != b_of["a"])
+    # g1's bucket sorts after g2's, so a Spark read of both infers its
+    # schema from g2's epoch-0 (int) snapshot
+    g2, g1 = sorted(["a", g2], key=b_of.get)
+
+    def drain(name, rows):
+        src = str(tmp_path / name)
+        spark.createDataFrame(rows, sch).coalesce(1).write.mode("append").parquet(src)
+        MV.run_mv_maintain_stream_partitioned(
+            spark.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(src),
+            out, str(tmp_path / f"ckpt_{name}"), keys, sums, num_buckets=nb,
+        )
+
+    drain("a", [(1, g1, 1.0, 1), (2, g2, 2.0, 1)])
+    for name in ("b", "c", "d"):
+        epoch = MV.adopt_mv_sink(spark, out, str(tmp_path / f"ckpt_{name}"))
+    assert epoch == 3
+    drain("d", [(3, g1, 4.0, 1)])
+    drain("d", [(4, g1, 8.0, 1), (5, g2, 16.0, 1)])
+    got = {
+        r["g"]: (r["__mv_cnt"], float(r["rev"]))
+        for r in MV.read_mv_state(spark, out).collect()
+    }
+    assert got == {g1: (3, 13.0), g2: (2, 18.0)}
+
+
 def test_store_dedup_stream_accretes_and_matches_full_corpus(spark, sf_dir, tmp_path):
     """Continuous dedup ingest (streaming/dedup.py): draining the corpus
     batch-by-batch through accrete-then-probe emits exactly the pairs of
@@ -1031,8 +1141,8 @@ def test_store_dedup_stream_accretes_and_matches_full_corpus(spark, sf_dir, tmp_
     # torn-batch replay: re-run the LAST batch's three effects by hand
     # (accrete + probe + publish under the same ingest key) — dynamic
     # partition overwrite + max_ingest_exclusive make it a no-op
-    _owner, epoch = SD._read_stream_meta(store)
-    last_key = epoch * SD._EPOCH_SPAN + 1  # second micro-batch
+    epoch = S.read_owner(store)["epoch"]
+    last_key = S.batch_key(epoch, 1)  # second micro-batch
     feats = D.minhash_features(
         wave2, "doc_id", "text", 64, 3, 42
     )
@@ -1130,18 +1240,16 @@ def test_streaming_mv_partitioned_recovers_torn_fold(spark, tmp_path):
     assert not any(d.startswith(MV._STAGE) for d in os.listdir(out))
     for b in MV._buckets(out):
         t = MV._bucket_dir(out, b)
-        assert V.list_versions(t) == [V.current_version(t)]
+        vs = V.list_versions(t)
+        assert vs[-1] == V.current_version(t) and len(vs) <= S.KEEP_LAST
 
 
 
 def test_store_dedup_stream_torn_meta_refused_then_adopted(spark, sf_dir, tmp_path):
-    """A missing stream record over a store WITH history (the torn
-    delete-then-write window of the record's overwrite) must refuse to
-    stamp epoch 0 — that would overwrite live ingest keys — and
-    adopt_minhash_store_stream must recover by deriving the epoch from
+    """A missing owner record over a store WITH history (deleted by hand)
+    must refuse to claim epoch 0 — that would overwrite live ingest keys —
+    and adopt_minhash_store_stream must recover by deriving the epoch from
     the data. An EMPTY first micro-batch must not wedge the stream."""
-    import shutil
-
     import pytest
 
     from amazon_fresh_sql_data_engineering_spark.operators import dedup as D
@@ -1173,11 +1281,11 @@ def test_store_dedup_stream_torn_meta_refused_then_adopted(spark, sf_dir, tmp_pa
         .option("maxFilesPerTrigger", 1).parquet(src1),
         store, ck1, pairs_out, "doc_id", "text", 0.6,
     )
-    # tear the stream record (the overwrite's delete-then-write window)
-    shutil.rmtree(f"{store}/stream")
+    # delete the owner record
+    os.remove(os.path.join(store, S._OWNER))
     src2 = str(tmp_path / "src2")
     docs.withColumn("doc_id", F.col("doc_id") + 500_000).coalesce(1).write.parquet(src2)
-    with pytest.raises(Exception, match="stream record is missing"):
+    with pytest.raises(Exception, match="no owner record"):
         SD.run_store_dedup_stream(
             spark.readStream.schema("doc_id long, text string").parquet(src2),
             store, str(tmp_path / "ck2"), pairs_out, "doc_id", "text", 0.6,
@@ -1196,12 +1304,10 @@ def test_store_dedup_stream_torn_meta_refused_then_adopted(spark, sf_dir, tmp_pa
 
 def test_streaming_mv_partitioned_seeded_ownerless_adopts_whole_tree(spark, tmp_path):
     """ADVICE r8 (medium): the first fold over an operator-seeded,
-    owner-less BUCKETED sink must stamp the owner on EVERY bucket — a
-    partial fold would stamp __mv_owner only on the touched buckets,
-    leaving mixed schemas where later plain reads nondeterministically
-    drop the column (ownership guard silently off) or surface NULL owners.
-    After the fold: every row of a PLAIN (non-mergeSchema) read carries a
-    non-null owner, per-row batch stamps survive, the fold's arithmetic is
+    owner-less BUCKETED sink (stamp -1, no owner record) claims the WHOLE
+    sink, though it rewrites only the touched bucket. After the fold: the
+    owner record names the folding checkpoint at epoch 0, per-row batch
+    stamps survive on the untouched bucket, the fold's arithmetic is
     right, and a foreign checkpoint is refused even when it touches only
     buckets the fold never rewrote."""
     import pytest
@@ -1250,13 +1356,14 @@ def test_streaming_mv_partitioned_seeded_ownerless_adopts_whole_tree(spark, tmp_
         for r in read_mv_state(spark, out).collect()
     }
     assert got == {g1: (2, 17.0), g2: (1, 5.0)}
-    # uniform schema: a PLAIN read must see the owner column with zero
-    # NULLs — including on g2's bucket, which the fold never rewrote
+    # one owner record for the whole sink; g2's bucket, which the fold
+    # never rewrote, keeps its seed stamp
+    assert S.read_owner(out) == {
+        "owner": S.owner_id(str(tmp_path / "ckptA")),
+        "epoch": 0,
+    }
     plain = spark.read.parquet(*_live_dirs(out, _buckets(out)))
-    assert "__mv_owner" in plain.columns
     assert plain.filter(F.col("g") == g2).first()["__mv_last_batch"] == -1
-    assert plain.filter(F.col("__mv_owner").isNull()).count() == 0
-    assert plain.select("__mv_owner").distinct().count() == 1
     # the adopted ownership must guard ALL buckets: a foreign checkpoint
     # folding into the never-rewritten bucket is refused
     src2 = str(tmp_path / "deltas2")
@@ -1467,8 +1574,8 @@ def test_streaming_mv_pointer_publish_matches_batch(spark, tmp_path):
     """VERDICT r9 item 3: the flat MV sink on the object-store-safe
     pointer publish — state lives in immutable data/v=N snapshots behind
     one pointer file, no directory rename ever touches the live path,
-    superseded snapshots are pruned, and the folded result matches the
-    batch fold."""
+    superseded snapshots beyond KEEP_LAST are pruned, and the folded
+    result matches the batch fold."""
     import os
 
     from amazon_fresh_sql_data_engineering_spark.sources import versioned as V
@@ -1499,10 +1606,10 @@ def test_streaming_mv_pointer_publish_matches_batch(spark, tmp_path):
         for r in read_mv_state(spark, out).collect()
     }
     assert got == {"a": (2, 12.0), "b": (0, 0.0)} or got == {"a": (2, 12.0)}
-    # layout: pointer + exactly one live snapshot, zero swap siblings
+    # layout: pointer + at most KEEP_LAST snapshots, zero swap siblings
     assert os.path.exists(os.path.join(out, V._POINTER))
     snaps = os.listdir(os.path.join(out, "data"))
-    assert len(snaps) == 1, snaps
+    assert len(snaps) <= S.KEEP_LAST, snaps
     parent = os.path.dirname(out)
     assert not [d for d in os.listdir(parent) if "__old__" in d or "__tmp__" in d]
 
@@ -1549,7 +1656,8 @@ def test_streaming_mv_pointer_publish_torn_write_keeps_old_state(spark, tmp_path
         for r in read_mv_state(spark, out).collect()
     }
     assert got == {"a": (1, 10.0), "b": (1, 5.0)}
-    assert len(os.listdir(os.path.join(out, "data"))) == 1  # orphan pruned
+    # orphan pruned: the replayed fold took its version number
+    assert V.list_versions(out) == [1, 2] and V.current_version(out) == 2
 
 
 def test_flat_mv_sink_needs_no_fs_gateway(spark, tmp_path):
@@ -1702,10 +1810,10 @@ def test_streaming_mv_partitioned_mvcc_heals_and_converges(spark, tmp_path):
     assert not os.path.exists(f"{bdir}/data/v={v + 1}") or V.current_version(
         bdir
     ) == v + 1  # orphan either pruned or legitimately superseded
-    # each bucket holds exactly ONE snapshot (vacuum on publish)
+    # each bucket holds at most KEEP_LAST snapshots (vacuum on publish)
     for b in MV._buckets(out):
         data = f"{MV._bucket_dir(out, b)}/data"
-        assert len(os.listdir(data)) == 1, (b, os.listdir(data))
+        assert len(os.listdir(data)) <= S.KEEP_LAST, (b, os.listdir(data))
     # foreign checkpoint refused
     with pytest.raises(Exception, match="owned by checkpoint"):
         MV.run_mv_maintain_stream_partitioned(
@@ -1915,11 +2023,12 @@ def test_store_pointer_heals_torn_compaction_generation(spark, sf_dir, tmp_path)
 
 def test_mvcc_sink_snapshot_churn_bounded(spark, tmp_path):
     """r11 (VERDICT r10 item 5 lock): the MVCC sink's snapshot churn is
-    bounded — superseded versions are pruned AT the pointer flip, so after
-    any number of folds every bucket holds exactly ONE live snapshot
-    (steady-state disk amplification 1x; transient 2x only inside a fold)
-    and no staging leftovers survive a batch. Version numbers advance
-    monotonically per touched bucket."""
+    bounded — superseded versions beyond KEEP_LAST are pruned AT the
+    pointer flip, so after any number of folds every bucket holds at most
+    KEEP_LAST snapshots, the newest pointed (steady-state disk
+    amplification 2x: one batch of reader grace) and no staging leftovers
+    survive a batch. Version numbers advance monotonically per touched
+    bucket."""
     import os
 
     from amazon_fresh_sql_data_engineering_spark.sources import versioned as V
@@ -1953,11 +2062,11 @@ def test_mvcc_sink_snapshot_churn_bounded(spark, tmp_path):
         if not d.startswith("bucket="):
             continue
         data = os.path.join(out, d, "data")
-        vs = [e for e in os.listdir(data) if e.startswith("v=")]
-        assert len(vs) == 1, f"{d} holds {vs} — superseded snapshot not pruned"
-        seen_versions.append((d, int(vs[0][2:]), V.current_version(os.path.join(out, d))))
+        vs = sorted(int(e[2:]) for e in os.listdir(data) if e.startswith("v="))
+        assert len(vs) <= S.KEEP_LAST, f"{d} holds {vs} — superseded snapshot not pruned"
+        seen_versions.append((d, vs[-1], V.current_version(os.path.join(out, d))))
     assert seen_versions
-    # the on-disk version IS the pointed version, and the repeatedly
+    # the newest on-disk version IS the pointed version, and the repeatedly
     # touched bucket advanced once per fold that touched it (4 folds)
     assert all(on_disk == pointed for _, on_disk, pointed in seen_versions)
     assert max(v for _, v, _ in seen_versions) == 4
@@ -2003,6 +2112,53 @@ def test_only_the_sink_module_starts_streams():
             hits += [f"{os.path.relpath(path, root)}:{n}" for n in _write_stream_refs(src)]
     assert hits == []
     assert _write_stream_refs(open(sink_py, encoding="utf-8").read())
+
+
+#: names of the owner record's policy; only streaming/sink.py may use them
+_OWNERSHIP_NAMES = {"owner_id", "_OWNER", "_EPOCH_SPAN"}
+
+
+def _ownership_refs(source: str) -> list[int]:
+    """Lines that name the owner-record internals: one of
+    ``_OWNERSHIP_NAMES`` as a name, attribute or import, or the record's
+    file name inside a string."""
+    import ast
+
+    hits = set()
+    for node in ast.walk(ast.parse(source)):
+        name = {ast.Name: "id", ast.Attribute: "attr", ast.alias: "name"}.get(type(node))
+        if name and getattr(node, name) in _OWNERSHIP_NAMES:
+            hits.add(node.lineno)
+        elif isinstance(node, ast.Constant) and "_OWNER" in str(node.value):
+            hits.add(node.lineno)
+    return sorted(hits)
+
+
+def test_lint_flags_ownership_names():
+    src = (
+        "from .sink import owner_id\n"
+        "key = epoch * S._EPOCH_SPAN\n"
+        "path = f'{root}/_OWNER'\n"
+        "owner = read_owner(root)['owner']\n"
+    )
+    assert _ownership_refs(src) == [1, 2, 3]
+
+
+def test_only_the_sink_module_handles_ownership():
+    import amazon_fresh_sql_data_engineering_spark as PKG
+
+    root = os.path.dirname(PKG.__file__)
+    sink_py = os.path.join(root, "streaming", "sink.py")
+    hits = []
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == sink_py:
+                continue
+            src = open(path, encoding="utf-8").read()
+            hits += [f"{os.path.relpath(path, root)}:{n}" for n in _ownership_refs(src)]
+    assert hits == []
+    assert _ownership_refs(open(sink_py, encoding="utf-8").read())
 
 
 # ---------------------------------------------------------------------------
@@ -2195,6 +2351,81 @@ def test_sink_publish_crash_injection_converges(spark, tmp_path, monkeypatch, si
     # replay converges to the batch result
     drain()
     assert state() == new
+
+
+def test_owner_record_crash_before_replace_keeps_old_record(spark, tmp_path, monkeypatch):
+    """An adopt that dies between the owner record's tmp write and its
+    ``os.replace`` leaves the old record standing: the foreign checkpoint
+    is still refused and the owner still resumes. Heal drops the tmp
+    file."""
+    import glob
+
+    from amazon_fresh_sql_data_engineering_spark.streaming import mv as MV
+
+    keys, sums = ["g"], {"rev": "rev"}
+    sch = "id int, g string, rev double, __op int"
+    src, out = str(tmp_path / "src"), str(tmp_path / "sink")
+    ckpt_a, ckpt_b = str(tmp_path / "ckptA"), str(tmp_path / "ckptB")
+
+    def drain(ckpt):
+        MV.run_mv_maintain_stream(
+            spark.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(src),
+            out, ckpt, keys, sums,
+        )
+
+    spark.createDataFrame([(1, "a", 10.0, 1)], sch).coalesce(1).write.parquet(src)
+    drain(ckpt_a)
+    record = S.read_owner(out)
+    real = os.replace
+
+    def _replace(src_path, dst, *a, **k):
+        if os.path.basename(dst) == S._OWNER:
+            raise RuntimeError("injected crash")
+        return real(src_path, dst, *a, **k)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", _replace)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            MV.adopt_mv_sink(spark, out, ckpt_b)
+    litter = os.path.join(out, f"{S._OWNER}.tmp.*")
+    assert glob.glob(litter)
+    assert S.read_owner(out) == record
+    V.heal(out)
+    assert not glob.glob(litter)
+    with pytest.raises(Exception, match="owned by checkpoint"):
+        drain(ckpt_b)
+    spark.createDataFrame([(2, "a", 1.0, 1)], sch).coalesce(1).write.mode("append").parquet(src)
+    drain(ckpt_a)
+    got = {
+        r["g"]: (r["__mv_cnt"], float(r["rev"]))
+        for r in MV.read_mv_state(spark, out).collect()
+    }
+    assert got == {"a": (2, 11.0)}
+
+
+def test_cdc_sink_snapshot_survives_one_more_batch(spark, tmp_path):
+    """A frame read from a state sink survives the next publish: the sink
+    keeps KEEP_LAST = 2 snapshots, one batch of grace for a reader."""
+    from amazon_fresh_sql_data_engineering_spark.streaming import cdc as CDC
+
+    sch = "k int, v string, op string, seq long"
+    src, out = str(tmp_path / "src"), str(tmp_path / "sink")
+
+    def drain():
+        CDC.run_cdc_apply_stream(
+            spark.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(src),
+            out, str(tmp_path / "ckpt"), ["k"], "seq",
+        )
+
+    spark.createDataFrame(
+        [(1, "x", "U", 1), (2, "y", "U", 2), (3, "z", "U", 3)], sch
+    ).coalesce(1).write.parquet(src)
+    drain()
+    held = V.read_snapshot(spark, out)
+    spark.createDataFrame([(4, "w", "U", 4)], sch).coalesce(1).write.mode("append").parquet(src)
+    drain()
+    assert held.count() == 3
+    assert V.read_snapshot(spark, out).count() == 4
 
 
 @pytest.mark.parametrize("stop", ["before_append", "torn_append", "after_append"])
