@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
+from .arrow import arrow_udf
+
 # Small embedded marker lists: enough for a deterministic n-gram/stopword
 # heuristic. Real pipelines would swap in fastText/CLD3 via a pandas UDF.
 EN_MARKERS = ["the", "a", "of", "and", "to", "in", "is"]
@@ -189,9 +191,7 @@ def winnow_fingerprint_array(
     non-space whitespace — true of this corpus (oracle hash parity at all
     three SFs). Still a pure map: the plan stays zero-exchange
     (plan-asserted in tests/test_plans.py)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
+    @arrow_udf("array<string>")
     def _winnow(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
@@ -279,14 +279,12 @@ def text_features_udf():
     """
     import string
 
-    from pyspark.sql.functions import pandas_udf
-
     word_chars = frozenset(string.ascii_letters + string.digits + "_")
     ws_chars = frozenset(" \t\n\x0b\x0c\r")
     en, es, stops = frozenset(EN_MARKERS), frozenset(ES_MARKERS), frozenset(STOPWORDS)
 
-    @pandas_udf("lang_pred string, n_tokens long, quality double")
-    def _feat(texts):
+    @arrow_udf("lang_pred string, n_tokens long, quality double")
+    def _text_features(texts):
         import pandas as pd
 
         langs, ns, quals = [], [], []
@@ -316,7 +314,7 @@ def text_features_udf():
             quals.append(q)
         return pd.DataFrame({"lang_pred": langs, "n_tokens": ns, "quality": quals})
 
-    return _feat
+    return _text_features
 
 
 def char_entropy_udf():
@@ -337,9 +335,7 @@ def char_entropy_udf():
     import math
     from collections import Counter
 
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("n_chars_counted long, entropy double")
+    @arrow_udf("n_chars_counted long, entropy double")
     def _ent(texts):
         import pandas as pd
 

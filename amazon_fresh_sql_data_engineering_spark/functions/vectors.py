@@ -27,8 +27,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType
+
+from .arrow import arrow_udf
 
 
 def to_double(v: Column | str) -> Column:
@@ -66,7 +67,7 @@ def matrix_dots_udf(matrix):
     """
     m_t = np.asarray(matrix, dtype=np.float64).T
 
-    @pandas_udf(ArrayType(DoubleType()))
+    @arrow_udf(ArrayType(DoubleType()))
     def _dots(vs: pd.Series) -> pd.Series:
         if not len(vs):
             return pd.Series([], dtype=object)
@@ -85,7 +86,7 @@ def matrix_cosine_top_udf(matrix, labels, n_take: int):
     m_unit_t = (m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-300)).T
     lab = np.asarray(labels, dtype=np.int64)
 
-    @pandas_udf(ArrayType(IntegerType()))
+    @arrow_udf(ArrayType(IntegerType()))
     def _top(vs: pd.Series) -> pd.Series:
         if not len(vs):
             return pd.Series([], dtype=object)
@@ -96,7 +97,7 @@ def matrix_cosine_top_udf(matrix, labels, n_take: int):
     return _top
 
 
-@pandas_udf(DoubleType())
+@arrow_udf(DoubleType())
 def cosine_pairs(a: pd.Series, b: pd.Series) -> pd.Series:
     """Row-wise cosine of two vector columns, numpy-batched (the rerank /
     verify kernel for approximate paths). NULL on zero vectors, matching

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.loaders import local_frame
+
 
 def check_not_null(df: DataFrame, cols: list[str]) -> DataFrame:
     """NOT NULL violations (ref T:1170-1176 null-PK audit, A:40-41)."""
@@ -133,7 +135,7 @@ def constraint_catalog(
         "table_name string, conname string, contype string, "
         "columns string, definition string"
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def assert_clean(

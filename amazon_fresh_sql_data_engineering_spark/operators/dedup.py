@@ -30,13 +30,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
 from .. import fence
+from ..functions.arrow import arrow_udf
 from ..functions.text import tokens
 from ..functions.vectors import cosine_pairs, matrix_dots_udf
-from ..sources.loaders import read_parquet, read_record
+from ..sources.loaders import local_frame, read_parquet, read_record
 
 # Mersenne-31: keeps (a*h + b) < 2^62, so permutation arithmetic never
 # overflows a long even under ANSI mode (a vanilla Spark 4 session has
@@ -231,7 +231,7 @@ def minhash_features(
     a_col = perms[:, 0][:, None]
     b_col = perms[:, 1][:, None]
 
-    @pandas_udf("sig array<long>, h array<long>")
+    @arrow_udf("sig array<long>, h array<long>")
     def _feat(texts: pd.Series) -> pd.DataFrame:
         sigs, hs = [], []
         wcache = _MD5_WORD_CACHE
@@ -250,10 +250,7 @@ def minhash_features(
             hs.append(hv)
         return pd.DataFrame({"sig": sigs, "h": hs})
 
-    # nondeterministic only to Catalyst: it keeps the NOT NULL filter below
-    # from being pushed under a caller's repartition, which ran the UDF twice
-    feat = _feat.asNondeterministic()
-    f = df.select(F.col(id_col).alias("__id"), feat(F.col(text_col)).alias("__f"))
+    f = df.select(F.col(id_col).alias("__id"), _feat(F.col(text_col)).alias("__f"))
     return f.select("__id", F.col("__f.sig").alias("__sig"), F.col("__f.h").alias("__h")).filter(
         F.col("__sig").isNotNull()
     )
@@ -562,7 +559,7 @@ def ngram_inverted_index(
     (array column), far smaller than the exploded index, and at 100 TB it
     is the difference between one and two full corpus reads."""
 
-    @pandas_udf(ArrayType(LongType()))
+    @arrow_udf(ArrayType(LongType()))
     def _shs(texts: pd.Series) -> pd.Series:
         wcache: dict = {}
         return pd.Series(
@@ -706,7 +703,7 @@ def ngram_jaccard_pairs(
     )
 
 
-@pandas_udf(LongType())
+@arrow_udf(LongType())
 def simhash64(texts: pd.Series) -> pd.Series:
     """64-bit SimHash over whitespace tokens (Arrow-batched; numpy bit-vote).
 
@@ -754,7 +751,12 @@ def simhash_dedup_pairs(
 ) -> DataFrame:
     """SimHash near-dup pairs: banded 16-bit chunks generate candidates
     (a pair within hamming distance 3 of 64 bits must agree on at least one
-    of 4 chunks — pigeonhole), verified by exact ``bit_count(xor)``."""
+    of 4 chunks — pigeonhole), verified by exact ``bit_count(xor)``.
+
+    The chunk rows are hash-partitioned on the join key once, before the
+    two join sides split: both sides then read one shuffle (the second is a
+    ``ReusedExchange``), so the signature UDF runs once per doc instead of
+    once per side."""
     sig = df.select(
         F.col(id_col).alias("__id"), simhash64(F.col(text_col)).alias("__sig")
     )
@@ -772,7 +774,7 @@ def simhash_dedup_pairs(
                 ]
             )
         ).alias("cc"),
-    ).select("__id", "__sig", "cc.chunk", "cc.key")
+    ).select("__id", "__sig", "cc.chunk", "cc.key").repartition("chunk", "key")
     a = chunks.select("chunk", "key", F.col("__id").alias("id_a"), F.col("__sig").alias("__sig_a"))
     b = chunks.select("chunk", "key", F.col("__id").alias("id_b"), F.col("__sig").alias("__sig_b"))
     return (
@@ -846,7 +848,7 @@ def connected_components(
                 parent[hi] = lo
         rows = [(x, find(x)) for x in parent]
         spark = pairs.sparkSession
-        return spark.createDataFrame(rows, "id long, cluster_id long")
+        return local_frame(spark, rows, "id long, cluster_id long")
     edges = fence.persist(  # read every iteration of the propagation loop
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -968,7 +970,9 @@ def embedding_dedup_pairs(
         F.when(F.element_at(F.col("__dots"), i + 1) >= 0, F.lit(2**i)).otherwise(F.lit(0))
         for i in range(n_planes)
     )
-    keyed = with_dots.select("__id", "__v", bucket.alias("__bucket"))
+    # hash-partitioned on the join key before the sides split: both read
+    # one shuffle (a ReusedExchange), so the plane dots run once per vector
+    keyed = with_dots.select("__id", "__v", bucket.alias("__bucket")).repartition("__bucket")
     a = keyed.select("__bucket", F.col("__id").alias("id_a"), F.col("__v").alias("__va"))
     b = keyed.select("__bucket", F.col("__id").alias("id_b"), F.col("__v").alias("__vb"))
     return (
@@ -1102,7 +1106,8 @@ def bootstrap_minhash_store(
         raise ValueError(
             f"bootstrap_minhash_store: bands={bands} must divide num_hashes={num_hashes}"
         )
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(num_hashes, bands, num_prefixes, k, seed)],
         "num_hashes int, bands int, num_prefixes int, k int, seed int",
     ).write.mode("overwrite").parquet(f"{path}/manifest")

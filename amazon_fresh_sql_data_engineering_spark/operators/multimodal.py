@@ -193,7 +193,7 @@ def sample_frames(
     """Video frame sampling plumbing: ONE input row -> N frame rows.
 
     The 1->N row fan-out is the mapInPandas shape batch UDFs can't do
-    (pandas_udf is 1:1) — each output frame carries its byte offset and a
+    (a scalar Arrow UDF is 1:1) — each output frame carries its byte offset and a
     binary payload, so downstream per-frame decode/embed sees ordinary
     rows. ``fake=True`` slices deterministic pseudo-frames from the media
     bytes; ``fake=False`` raises where an ffmpeg keyframe pull would go —

@@ -19,8 +19,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
+from ..functions.arrow import arrow_udf
 from ..functions.vectors import (
     cosine,
     cosine_pairs,
@@ -310,7 +310,7 @@ def pq_topk(
         lowest position == lowest cid (books are cid-ascending)."""
         mats = [np.asarray(b, dtype=np.float64) for b in books]
 
-        @pandas_udf("array<int>")
+        @arrow_udf("array<int>")
         def enc(vs: pd.Series) -> pd.Series:
             V = np.array(vs.tolist(), dtype=np.float64)
             if V.size == 0:
@@ -419,7 +419,7 @@ def pq_topk(
     mats = [np.asarray(b, dtype=np.float64) for b in c1_books]
     n_q = len(queries)
 
-    @pandas_udf("array<double>")
+    @arrow_udf("array<double>")
     def adc_dists(vs: pd.Series) -> pd.Series:
         V = np.array(vs.tolist(), dtype=np.float64)
         if V.size == 0:

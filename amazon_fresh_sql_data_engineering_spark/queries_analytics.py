@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from .operators.ranking import global_lead, global_ntile
 from .registry import dec, fin, register
 from .registry import tables as _t
+from .sources.loaders import local_frame
 
 
 @register(
@@ -380,7 +381,8 @@ def op_range_join(spark, sf_dir):
     import datetime
 
     o = _t(spark, sf_dir, "orders")
-    promos = spark.createDataFrame(
+    promos = local_frame(
+        spark,
         [
             ("launch95", datetime.date(1995, 1, 1), datetime.date(1996, 6, 30)),
             ("overlap96", datetime.date(1996, 1, 1), datetime.date(1997, 12, 31)),

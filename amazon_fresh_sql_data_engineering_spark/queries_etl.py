@@ -19,7 +19,7 @@ from .operators import dml
 from .pipelines.normalize import normalize_products
 from .registry import dec, fin, register
 from .registry import tables as _t
-from .sources.loaders import read_parquet
+from .sources.loaders import local_frame, read_parquet
 
 
 def _staged_parquet(spark, key: str, build):
@@ -919,14 +919,12 @@ def q_normalize_3nf(spark, sf_dir):
         UNION ALL
         SELECT * FROM (VALUES (100, 'ATLANTIS'), (101, 'LEMURIA')) v(r_regionkey, r_name)
     """,
-    doc="OP-INSERT-VALUES: literal multi-row insert as createDataFrame + "
-    "unionByName (ref A:95-99).",
+    doc="OP-INSERT-VALUES: literal multi-row insert as an Arrow local "
+    "relation (sources.loaders.local_frame) + unionByName (ref A:95-99).",
 )
 def q_insert_values(spark, sf_dir):
     r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    new_rows = spark.createDataFrame(
-        [(100, "ATLANTIS"), (101, "LEMURIA")], r.schema
-    )
+    new_rows = local_frame(spark, [(100, "ATLANTIS"), (101, "LEMURIA")], r.schema)
     return r.unionByName(new_rows)
 
 

@@ -383,8 +383,9 @@ def _corpus_store(spark, sf_dir):
     def _build(tmp: str) -> None:
         d = _t(spark, sf_dir, "documents")
         D.bootstrap_minhash_store(spark, tmp, num_prefixes=8)
-        feats = D.minhash_features(d, "doc_id", "text", 64, 3, 42)
-        D.append_minhash_store(feats, tmp, 0)
+        with fence.scope():  # the append reads the features three times
+            feats = fence.persist(D.minhash_features(d, "doc_id", "text", 64, 3, 42))
+            D.append_minhash_store(feats, tmp, 0)
 
     return process_cache_dir(("mhstore", sf_dir), _build)
 
@@ -1857,7 +1858,9 @@ def text_decontaminate(spark, sf_dir):
     # string-gram counts.
     docs = _docs_with_dups(spark, sf_dir).withColumn("__blk", F.lit(0))
     is_bench = (F.col("__id") % 97 == 0) & (F.col("__id") < 1000000)
-    inv = D.ngram_inverted_index(docs, "doc_id", "text", ["__blk"], k=8)
+    # three branches read the index under different filters: fence the
+    # per-doc shingle frame so the shingling runs once per doc
+    inv = D.ngram_inverted_index(docs, "doc_id", "text", ["__blk"], k=8, persist_shingles=True)
     ex = inv.select("__id", "__s")
     bench = ex.filter(is_bench).select("__s").distinct()
     hits = (

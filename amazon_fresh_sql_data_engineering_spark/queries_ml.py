@@ -15,6 +15,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from . import fence
+from .functions.arrow import arrow_udf
 from .operators import expectations as X
 from .registry import CATALOG, register
 from .registry import tables as _t
@@ -305,9 +306,7 @@ def text_char_lm_score(spark, sf_dir):
     # values: substring-by-codepoint == Python slicing), so the per-doc
     # aggregation happens inside the map pass and only
     # (doc, distinct-bigram, count) rows ever reach an exchange.
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("map<string,long>")
+    @arrow_udf("map<string,long>")
     def _bigram_counts(texts: pd.Series) -> pd.Series:
         from collections import Counter
 

@@ -40,6 +40,7 @@ from . import fence
 from .operators.ranking import global_cumsum
 from .registry import fin, register
 from .registry import tables as _t
+from .sources.loaders import local_frame
 
 # ---------------------------------------------------------------------------
 # op_mann_whitney — tie-corrected Mann-Whitney U rank-sum test
@@ -1990,7 +1991,7 @@ def op_join_size_estimate(spark, sf_dir):
         ("orders*customer@custkey", a2),
         ("lineitem*lineitem@partkey", None),
     ]
-    act = spark.createDataFrame(actuals, "join_name string, actual_rows long")
+    act = local_frame(spark, actuals, "join_name string, actual_rows long")
     return (
         lo.unionAll(oc)
         .unionAll(ll)
@@ -2430,7 +2431,8 @@ def events_shapley_attribution(spark, sf_dir):
         .agg(F.coalesce(F.sum("c"), F.lit(0)).alias("v"))
     )
     v = fence.checkpoint(v)  # both sides of the marginal join
-    channels = spark.createDataFrame(
+    channels = local_frame(
+        spark,
         [("click", 1), ("error", 2), ("signup", 4), ("view", 8)],
         "channel string, bit int",
     )

@@ -32,10 +32,14 @@ from .registry import ensure_engine_confs
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def _default_driver_memory() -> str:
-    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half of
-    physical memory (the rest is headroom for Python workers and the OS),
-    between 1g and 16g."""
+def driver_memory() -> str:
+    """``spark.driver.memory`` for a session this process launches:
+    ``SPARK_GRAFT_DRIVER_MEM`` when set, else half of physical memory (the
+    rest is headroom for Python workers and the OS), between 1g and 16g.
+    The sweep scripts that build their own sessions take it from here."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{min(16, max(1, phys // 2 // 2**30))}g"
 
@@ -61,10 +65,7 @@ def build_session(
         # queries), and a heap past physical memory gets the JVM killed.
         # Only takes effect when this process launches the JVM — on a real
         # cluster the submitter's --driver-memory governs.
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
-        )
+        .config("spark.driver.memory", driver_memory())
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
@@ -87,8 +88,12 @@ def build_session(
         # lets totalBytes/parallelism govern instead; at cluster scale
         # bytesPerCore >> maxPartitionBytes so splits stay 128 MiB — a no-op.
         .config("spark.sql.files.openCostInBytes", str(128 * 1024))
-        # Quiet driver-side UI/log noise in test runs.
+        # Quiet driver-side UI/log noise in test runs. The console progress
+        # bar is written with carriage returns onto stdout lines a caller
+        # prints (a sweep's OK/MISMATCH results); ``extra_conf`` can turn
+        # it back on.
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():

@@ -1,10 +1,14 @@
 """Sources: parquet table registry + CSV staging ingest.
 
-Mirrors the reference's two ingest tiers (SURVEY.md §1.1):
+Mirrors the reference's two ingest tiers (SURVEY.md §1.1) and its literal
+rows:
 - typed tables      -> ``read_parquet`` (columnar, pushdown-friendly)
 - staging tables    -> ``spark.read.csv`` with an all-StringType schema and
   NO inference, matching the reference's all-TEXT staging DDL
   (ref TablesCreated-Imported.sql:80-103).
+- literal rows      -> ``local_frame``: an Arrow ``LocalRelation`` built on
+  the driver, the package's one ``createDataFrame`` (lint in
+  tests/test_loaders.py).
 
 At scale, the parquet reader is the workhorse: column pruning and predicate
 pushdown reach the scan automatically as long as callers express filters and
@@ -238,6 +242,41 @@ def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = N
     DuckDB oracle sees (driver contract)."""
     for n, df in load_tables(spark, sf_dir, names).items():
         df.createOrReplaceTempView(n)
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """Driver-local rows as a DataFrame — the package's one literal frame
+    (the reference's ``INSERT ... VALUES`` and catalog lookups, ref
+    A:95-99 and A:33-36).
+
+    ``rows`` is a sequence of tuples in ``schema`` order; ``schema`` a DDL
+    string or a ``StructType`` (its nullability is kept). The rows become
+    one ``pyarrow.Table`` typed by ``to_arrow_schema(schema)`` and reach the
+    JVM as a ``LocalRelation``: no RDD, no Python worker. (A row list given
+    to ``createDataFrame`` instead becomes a ``LogicalRDD`` whose first scan
+    starts a pool of Python workers only to unpickle it.)
+
+    Values follow Arrow's conversions: a naive ``datetime`` in a
+    ``timestamp`` column is read as UTC wall-clock time. A value Arrow
+    cannot carry as its column's type, a row of the wrong width, or a NULL
+    in a non-nullable column raises; there is no fallback."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, T.StructType) else T._parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(struct)
+    rows = list(rows)
+    width = len(struct.fields)
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"local_frame: every row must have {width} values ({struct.simpleString()})")
+    columns = list(zip(*rows)) if rows else [()] * width
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)], schema=arrow_schema
+    )
+    for i, f in enumerate(struct.fields):
+        if not f.nullable and table.column(i).null_count:
+            raise ValueError(f"local_frame: NULL in non-nullable column {f.name!r}")
+    return spark.createDataFrame(table, struct)
 
 
 def all_string_schema(columns: list[str]) -> T.StructType:

@@ -57,7 +57,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from ..operators.mv import _CNT, mv_apply_delta, mv_build
 from ..sources import versioned as V
-from ..sources.loaders import read_parquet
+from ..sources.loaders import local_frame, read_parquet
 from .sink import KEEP_LAST, adopt, batch_key, claim, run_sink, run_state_sink
 
 #: stamp column: key of the last folded micro-batch, inside the snapshot
@@ -284,7 +284,7 @@ def run_mv_maintain_stream_partitioned(
                 # the fold emptied this bucket: a 0-row snapshot keeps the
                 # schema and publishes behind the same atomic flip
                 V.write_snapshot(
-                    spark.createDataFrame([], out.schema).coalesce(1),
+                    local_frame(spark, [], out.schema).coalesce(1),
                     bdir,
                     keep_last=KEEP_LAST,
                 )

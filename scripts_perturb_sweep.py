@@ -54,12 +54,15 @@ MODES = ("aqeoff", "onepart", "nocodegen", "determinism", "nobroadcast")
 def build_session(mode: str):
     from pyspark.sql import SparkSession
 
+    from amazon_fresh_sql_data_engineering_spark.session import driver_memory
+
     b = (
         SparkSession.builder.master(
             f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
+        .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.driver.memory", driver_memory())
     )
     if mode == "aqeoff":
         b = b.config("spark.sql.adaptive.enabled", "false").config(

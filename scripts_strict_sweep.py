@@ -39,6 +39,8 @@ def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
+    from amazon_fresh_sql_data_engineering_spark.session import driver_memory
+
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
 
@@ -46,7 +48,8 @@ def main() -> int:
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
+        .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.driver.memory", driver_memory())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from amazon_fresh_sql_data_engineering_spark import fence
+from amazon_fresh_sql_data_engineering_spark import queries_ext as QE
 from amazon_fresh_sql_data_engineering_spark.operators import dedup as D
 from amazon_fresh_sql_data_engineering_spark.operators import multimodal as MM
 from amazon_fresh_sql_data_engineering_spark.operators import similarity as S
@@ -310,6 +311,139 @@ def test_store_format_lives_in_one_module():
             src = open(path, encoding="utf-8").read()
             hits += [f"{os.path.relpath(path, root)}:{n}" for n in _store_format_refs(src)]
     assert hits == []
+
+
+#: the Arrow-UDF declaration; only functions/arrow.py may name these
+_ARROW_UDF_NAMES = {"pandas_udf", "asNondeterministic"}
+
+
+def _arrow_udf_refs(source: str) -> list[int]:
+    """Lines that name ``pandas_udf`` or ``asNondeterministic`` as a name,
+    attribute or import."""
+    import ast
+
+    hits = set()
+    for node in ast.walk(ast.parse(source)):
+        name = {ast.Name: "id", ast.Attribute: "attr", ast.alias: "name"}.get(type(node))
+        if name and getattr(node, name) in _ARROW_UDF_NAMES:
+            hits.add(node.lineno)
+    return sorted(hits)
+
+
+def test_lint_flags_arrow_udf_declarations():
+    src = (
+        "from pyspark.sql.functions import pandas_udf\n"
+        "f = F.pandas_udf('long')(g)\n"
+        "h = f.asNondeterministic()\n"
+        "doc = 'pandas_udf'\n"
+        "@arrow_udf('long')\n"
+        "def k(s): return s\n"
+    )
+    assert _arrow_udf_refs(src) == [1, 2, 3]
+
+
+def test_only_the_arrow_module_declares_udfs():
+    """Every Arrow UDF is declared through ``functions/arrow.arrow_udf``, so
+    none can lose the nondeterministic mark that keeps it to one pass."""
+    import os
+
+    import amazon_fresh_sql_data_engineering_spark as PKG
+
+    root = os.path.dirname(PKG.__file__)
+    owner = os.path.join(root, "functions", "arrow.py")
+    hits = []
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == owner:
+                continue
+            src = open(path, encoding="utf-8").read()
+            hits += [f"{os.path.relpath(path, root)}:{n}" for n in _arrow_udf_refs(src)]
+    assert hits == []
+    assert _arrow_udf_refs(open(owner, encoding="utf-8").read())
+
+
+def _arrow_udf_rows(spark, action) -> dict[str, int]:
+    """Rows through each Arrow UDF while ``action()`` runs: the "number of
+    output rows" of every ``ArrowEvalPython`` node in the SQL status store,
+    summed per UDF name. A persisted or reused subtree shows the same node
+    in several plans and executions, so each accumulator id counts once."""
+    import re
+
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids():
+        ex = store.executionsList()
+        return {ex.apply(i).executionId() for i in range(ex.size())}
+
+    sc.listenerBus().waitUntilEmpty(10_000)
+    before = execution_ids()
+    action()
+    sc.listenerBus().waitUntilEmpty(10_000)
+    per_acc: dict[int, tuple[str, int]] = {}
+    for eid in sorted(execution_ids() - before):
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for k in range(nodes.size()):
+            node = nodes.apply(k)
+            if node.name() != "ArrowEvalPython":
+                continue
+            udf = re.match(r"ArrowEvalPython \[(\w+)\(", node.desc()).group(1)
+            metrics = node.metrics()
+            for q in range(metrics.size()):
+                m = metrics.apply(q)
+                if m.name() != "number of output rows":
+                    continue
+                v = values.get(m.accumulatorId())
+                n = int(v.get().replace(",", "")) if v.isDefined() else 0
+                seen = per_acc.get(m.accumulatorId(), (udf, 0))[1]
+                per_acc[m.accumulatorId()] = (udf, max(seen, n))
+    out: dict[str, int] = {}
+    for udf, n in per_acc.values():
+        out[udf] = out.get(udf, 0) + n
+    return out
+
+
+def _containment_universe_rows(spark, sf_dir) -> int:
+    """``dedup_containment``'s shingled universe: every document plus one
+    host per doc id divisible by 25 whose successor id exists."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    hosts = docs.filter(F.col("doc_id") % 25 == 0).join(
+        docs.select((F.col("doc_id") - 1).alias("doc_id")), "doc_id"
+    )
+    return docs.count() + hosts.count()
+
+
+@pytest.mark.parametrize(
+    "query,udf,input_rows",
+    [
+        ("dedup_simhash", "simhash64", lambda s, d: QE._docs_with_dups(s, d).count()),
+        ("dedup_ngram_jaccard", "_shs", lambda s, d: QE._docs_with_dups(s, d).count()),
+        ("dedup_containment", "_shs", _containment_universe_rows),
+        (
+            "text_winnow_fingerprint",
+            "_winnow",
+            lambda s, d: s.read.parquet(f"{d}/documents.parquet").count(),
+        ),
+        ("text_decontaminate", "_shs", lambda s, d: QE._docs_with_dups(s, d).count()),
+        ("dedup_embedding", "_dots", lambda s, d: QE._embeddings_with_dups(s, d).count()),
+    ],
+)
+def test_each_arrow_udf_runs_once_per_input_row(spark, sf_dir, query, udf, input_rows):
+    """A UDF-bearing catalog query sends each row of the UDF's input frame
+    through Python once: no pushed filter copies the UDF below a
+    projection, an exchange or into a union branch, and both sides of a
+    self-join read one evaluation. (``dedup_embedding`` also verifies its
+    candidate pairs with ``cosine_pairs``, one row per pair.)"""
+    from amazon_fresh_sql_data_engineering_spark.catalog import CATALOG
+
+    expected = input_rows(spark, sf_dir)
+    try:
+        rows = _arrow_udf_rows(spark, lambda: CATALOG[query].fn(spark, sf_dir).collect())
+    finally:
+        fence.release_all()
+    assert rows.get(udf) == expected, rows
 
 
 def test_minhash_finds_known_dups_and_matches_bruteforce(spark, docs):

@@ -2,11 +2,16 @@
 schema is memoized on (path, on-disk fingerprint, reader options, inference
 confs), so a repeated table load launches no Spark job, a rewritten path is
 re-inferred, remote paths bypass the memo, and no package module reads
-parquet any other way."""
+parquet any other way. Also the literal-frame primitive
+(sources/loaders.local_frame): an Arrow ``LocalRelation`` with the row-list
+path's rows and schema, and the package's one ``createDataFrame``."""
 
 from __future__ import annotations
 
 import ast
+import calendar
+import datetime
+import decimal
 import os
 import sys
 from concurrent.futures import ThreadPoolExecutor
@@ -15,8 +20,10 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 import amazon_fresh_sql_data_engineering_spark as PKG
+from amazon_fresh_sql_data_engineering_spark import fence
 from amazon_fresh_sql_data_engineering_spark.sources import loaders as L
 
 NANOS = "spark.sql.legacy.parquet.nanosAsLong"
@@ -218,3 +225,130 @@ def test_no_parquet_read_bypasses_the_primitive():
     """Every parquet read goes through ``read_parquet``; a plain
     ``spark.read.parquet`` would bring back one inference job per call."""
     assert _parquet_reads_outside_loaders() == []
+
+
+# ---------------------------------------------------------------------------
+# Driver-local frames: local_frame is the package's one createDataFrame
+# ---------------------------------------------------------------------------
+
+
+def _mv_state_schema(spark):
+    """The bucketed MV sink's snapshot schema: keys, the non-nullable
+    ``__mv_cnt``, the sums, then the bucket and stamp columns."""
+    from amazon_fresh_sql_data_engineering_spark.operators.mv import mv_build
+    from amazon_fresh_sql_data_engineering_spark.streaming.mv import _BUCKET, _STAMP
+
+    base = spark.createDataFrame([("a", 1.0)], "g string, x double")
+    return (
+        mv_build(base, ["g"], {"rev": "x"})
+        .withColumn(_BUCKET, F.lit(0))
+        .withColumn(_STAMP, F.lit(7).cast("long"))
+        .schema
+    )
+
+
+@pytest.mark.parametrize(
+    "rows,schema",
+    [
+        (
+            [
+                (datetime.date(1996, 1, 2), decimal.Decimal("12.34"), None, 7),
+                (datetime.date(2001, 12, 31), decimal.Decimal("-0.50"), 5, None),
+            ],
+            "d date, m decimal(18,2), l long, i int",
+        ),
+        ([("x", None), (None, 3)], "s string, l long"),
+        ([], "id long, cluster_id long"),
+        ([], _mv_state_schema),
+    ],
+    ids=["date-decimal-nulls", "ddl-nulls", "empty-ddl", "empty-mv-state"],
+)
+def test_local_frame_matches_the_row_list_path(spark, rows, schema):
+    """Same rows and the same schema, nullability included, as a row list
+    given to ``createDataFrame``."""
+    if callable(schema):
+        schema = schema(spark)
+    got = L.local_frame(spark, rows, schema)
+    ref = spark.createDataFrame(rows, schema)
+    assert got.schema == ref.schema
+    assert got.collect() == ref.collect()
+
+
+def test_local_frame_keeps_a_struct_schema_nullability(spark):
+    schema = T.StructType(
+        [T.StructField("k", T.LongType(), False), T.StructField("v", T.StringType(), True)]
+    )
+    got = L.local_frame(spark, [(1, None), (2, "b")], schema)
+    assert got.schema == schema
+    assert [tuple(r) for r in got.collect()] == [(1, None), (2, "b")]
+
+
+def test_local_frame_reads_a_naive_timestamp_as_utc(spark):
+    """A naive ``datetime`` is UTC wall-clock time whatever the Python
+    process's local zone is (the row-list path would use that zone)."""
+    ts = datetime.datetime(2024, 1, 2, 3, 4, 5)
+    df = L.local_frame(spark, [(ts,)], "ts timestamp")
+    row = df.select(
+        F.unix_timestamp("ts").alias("epoch"),
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("wall"),
+    ).collect()[0]
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert row["epoch"] == calendar.timegm(ts.timetuple())
+    assert row["wall"] == "2024-01-02 03:04:05"
+
+
+def test_local_frame_raises_on_what_arrow_cannot_carry(spark):
+    with pytest.raises((pa.ArrowInvalid, pa.ArrowTypeError)):
+        L.local_frame(spark, [("not a number",)], "n long")
+    with pytest.raises(ValueError, match="non-nullable"):
+        L.local_frame(
+            spark, [(None,)], T.StructType([T.StructField("k", T.LongType(), False)])
+        )
+    with pytest.raises(ValueError, match="2 values"):
+        L.local_frame(spark, [(1, 2), (3,)], "a long, b long")
+
+
+@pytest.mark.parametrize("query", ["q_constraint_catalog", "op_range_join", "q_insert_values"])
+def test_literal_frames_are_local_relations(spark, sf_dir, query):
+    """Catalog queries that build literal rows plan them as a
+    ``LocalRelation``: no ``LogicalRDD``, so no Python worker unpickles them."""
+    from amazon_fresh_sql_data_engineering_spark.catalog import CATALOG
+
+    try:
+        plan = CATALOG[query].fn(spark, sf_dir)._jdf.queryExecution().analyzed().toString()
+    finally:
+        fence.release_all()
+    assert "LocalRelation" in plan
+    assert "LogicalRDD" not in plan
+
+
+def _create_dataframe_refs(source: str) -> list[int]:
+    """Lines that name the ``createDataFrame`` attribute."""
+    return [
+        node.lineno
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Attribute) and node.attr == "createDataFrame"
+    ]
+
+
+def test_lint_flags_create_dataframe():
+    src = "a = spark.createDataFrame(rows, s)\nb = 'createDataFrame'\nc = local_frame(spark, rows, s)\n"
+    assert _create_dataframe_refs(src) == [1]
+
+
+def test_only_the_loaders_module_creates_dataframes():
+    """Every literal frame goes through ``local_frame``; a row list given to
+    ``createDataFrame`` would bring back the ``LogicalRDD`` and its Python
+    worker pool."""
+    root = os.path.dirname(PKG.__file__)
+    loaders_py = os.path.join(root, "sources", "loaders.py")
+    hits = []
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == loaders_py:
+                continue
+            src = open(path, encoding="utf-8").read()
+            hits += [f"{os.path.relpath(path, root)}:{n}" for n in _create_dataframe_refs(src)]
+    assert hits == []
+    assert _create_dataframe_refs(open(loaders_py, encoding="utf-8").read())
