@@ -16,7 +16,7 @@ convergence, new entries go to the FRONT of _PRIORITY in the same round
 they land — never the back — so a never-sampled tail can't re-accumulate
 (the r3 failure mode). Previously-green queries rotate to the back; the
 full catalog is still oracle-checked locally every round
-(scripts_parity_sweep.py / tests/test_oracle_parity.py), so rotation trades
+(scripts_sweep.py parity / tests/test_oracle_parity.py), so rotation trades
 no coverage — it converts local parity into driver-recorded evidence.
 """
 

@@ -20,6 +20,7 @@ from .pipelines.normalize import normalize_products
 from .registry import dec, fin, register
 from .registry import tables as _t
 from .sources.loaders import local_frame, read_parquet
+from .sources.staging import process_cache_dir, scratch_dir
 
 
 def _staged_parquet(spark, key: str, build):
@@ -32,8 +33,6 @@ def _staged_parquet(spark, key: str, build):
     round-trip is exact, so oracle parity is unchanged. Cache + exit-time
     cleanup live in sources/staging.py (one mechanism for all staged
     fixtures — VERDICT r7 item 5)."""
-    from .sources.staging import process_cache_dir
-
     path = process_cache_dir(
         ("staged", key),
         lambda d: build().write.mode("overwrite").parquet(f"{d}/data"),
@@ -1194,15 +1193,11 @@ def q_constraint_catalog(spark, sf_dir):
     "before the driver collects.",
 )
 def q_csv_staging_roundtrip(spark, sf_dir):
-    import shutil
-    import tempfile
-
     from .functions.cleaning import parse_decimal
     from .sources.loaders import load_staging_csv
 
     cols = ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"]
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_csv_")
-    try:
+    with scratch_dir("csv") as tmp:
         path = f"{tmp}/customer_csv"
         # fixed column order: the staging reader maps schema positionally
         _t(spark, sf_dir, "customer").select(*cols).write.mode(
@@ -1221,8 +1216,6 @@ def q_csv_staging_roundtrip(spark, sf_dir):
             F.max("c_custkey").alias("max_key"),
         )
         return fence.checkpoint(out)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -1249,13 +1242,9 @@ def q_csv_staging_roundtrip(spark, sf_dir):
     "scratch directory can be removed before the driver collects.",
 )
 def q_ctas_roundtrip(spark, sf_dir):
-    import shutil
-    import tempfile
-
     from .sources.sinks import ctas_partitioned
 
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_ctas_")
-    try:
+    with scratch_dir("ctas") as tmp:
         path = f"{tmp}/orders_by_priority"
         ctas_partitioned(
             _t(spark, sf_dir, "orders"), path, ["o_orderpriority"]
@@ -1270,8 +1259,6 @@ def q_ctas_roundtrip(spark, sf_dir):
             F.max("o_orderkey").alias("max_key"),
         )
         return fence.checkpoint(out)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -1308,13 +1295,9 @@ def q_ctas_roundtrip(spark, sf_dir):
     "driver collects.",
 )
 def q_zorder_roundtrip(spark, sf_dir):
-    import shutil
-    import tempfile
-
     from .sources.sinks import ctas_zordered
 
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_zorder_")
-    try:
+    with scratch_dir("zorder") as tmp:
         path = f"{tmp}/lineitem_z"
         li = _t(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_shipdate", "l_returnflag", "l_extendedprice"
@@ -1350,8 +1333,16 @@ def q_zorder_roundtrip(spark, sf_dir):
             F.max("l_orderkey").alias("max_okey"),
         )
         return fence.checkpoint(out)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _tier_by_status(df, tier):
+    """The orders round-trips' per-status aggregate, tagged with its tier."""
+    return df.groupBy("o_orderstatus").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        fin(F.sum(dec("o_totalprice")), 2).alias("sum_price"),
+        F.min("o_orderkey").alias("min_okey"),
+        F.max("o_orderkey").alias("max_okey"),
+    ).select(F.lit(tier).alias("tier"), "*")
 
 
 @register(
@@ -1396,24 +1387,12 @@ def q_zorder_roundtrip(spark, sf_dir):
     "and a full-table rewrite every OPTIMIZE.",
 )
 def q_compaction_roundtrip(spark, sf_dir):
-    import shutil
-    import tempfile
-
     from .sources.sinks import compact_files, compact_partitions
 
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_compact_")
-    try:
+    with scratch_dir("compact") as tmp:
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
-
-        def agg(df, tier):
-            return df.groupBy("o_orderstatus").agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                fin(F.sum(dec("o_totalprice")), 2).alias("sum_price"),
-                F.min("o_orderkey").alias("min_okey"),
-                F.max("o_orderkey").alias("max_okey"),
-            ).select(F.lit(tier).alias("tier"), "*")
 
         # The two tiers are INDEPENDENT write+compact chains over separate
         # scratch directories — submit them from two driver threads so
@@ -1452,12 +1431,10 @@ def q_compaction_roundtrip(spark, sf_dir):
             fa, fb = pool.submit(tier_partitioned), pool.submit(tier_flat)
             fa.result(), fb.result()
 
-        out = agg(read_parquet(spark, part).select(o.columns), "partitioned").unionAll(
-            agg(read_parquet(spark, flat), "flat")
+        out = _tier_by_status(read_parquet(spark, part).select(o.columns), "partitioned").unionAll(
+            _tier_by_status(read_parquet(spark, flat), "flat")
         )
         return fence.checkpoint(out)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -1503,25 +1480,13 @@ def q_compaction_roundtrip(spark, sf_dir):
     "and rollback is a pointer write, not a restore job.",
 )
 def q_pointer_publish_roundtrip(spark, sf_dir):
-    import shutil
-    import tempfile
-
     from .sources import versioned as V
 
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_ptr_")
-    try:
+    with scratch_dir("ptr") as tmp:
         table = f"{tmp}/orders_versioned"
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
-
-        def agg(df, tier):
-            return df.groupBy("o_orderstatus").agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                fin(F.sum(dec("o_totalprice")), 2).alias("sum_price"),
-                F.min("o_orderkey").alias("min_okey"),
-                F.max("o_orderkey").alias("max_okey"),
-            ).select(F.lit(tier).alias("tier"), "*")
 
         v1 = V.write_snapshot(o, table)
         v2 = V.write_snapshot(o.filter(F.col("o_orderstatus") != "F"), table)
@@ -1541,12 +1506,10 @@ def q_pointer_publish_roundtrip(spark, sf_dir):
         latest = V.read_snapshot(spark, table)
         if latest.count() != n_full:
             raise RuntimeError("rollback read still reflects the v=2 delete")
-        out = agg(latest, "latest_after_rollback").unionAll(
-            agg(tt_v2, "time_travel_v2")
+        out = _tier_by_status(latest, "latest_after_rollback").unionAll(
+            _tier_by_status(tt_v2, "time_travel_v2")
         )
         return fence.checkpoint(out)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(

@@ -318,20 +318,23 @@ def text_char_lm_score(spark, sf_dir):
             out.append(dict(Counter(map("".join, zip(t, t[1:])))))
         return pd.Series(out)
 
-    d = _t(spark, sf_dir, "documents")
-    junk = (
-        d.filter(F.col("doc_id") % 25 == 0)
-        .withColumn("doc_id", F.col("doc_id") + 4000000)
-        .withColumn("text", F.regexp_replace("text", "[aeiou]", "x"))
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text", F.lit(True).alias("is_base"))
+    junk = d.filter(F.col("doc_id") % 25 == 0).select(
+        (F.col("doc_id") + 4000000).alias("doc_id"),
+        F.regexp_replace("text", "[aeiou]", "x").alias("text"),
+        F.lit(False).alias("is_base"),
     )
-    doc_counts = (
+    # one bigram-count map per scored doc, fenced: the model is summed from
+    # the base rows of the same frame, so each text crosses into Python once
+    doc_maps = fence.persist(
         d.unionByName(junk)
         .filter(F.length("text") >= 2)
-        .select("doc_id", F.explode(_bigram_counts(F.col("text"))).alias("g", "c_doc"))
+        .select("doc_id", "is_base", _bigram_counts(F.col("text")).alias("m"))
     )
+    doc_counts = doc_maps.select("doc_id", F.explode("m").alias("g", "c_doc"))
     model = (
-        d.filter(F.length("text") >= 2)
-        .select(F.explode(_bigram_counts(F.col("text"))).alias("g", "c_doc"))
+        doc_maps.filter("is_base")
+        .select(F.explode("m").alias("g", "c_doc"))
         .groupBy("g")
         .agg(F.sum("c_doc").alias("c"))
     )

@@ -16,9 +16,10 @@ parity — only what the timer sees.
 from __future__ import annotations
 
 import atexit
+import contextlib
 import shutil
 import tempfile
-from collections.abc import Callable, Hashable
+from collections.abc import Callable, Hashable, Iterator
 
 _CACHE_DIRS: dict[Hashable, str] = {}
 
@@ -44,3 +45,15 @@ def process_cache_dir(key: Hashable, build: Callable[[str], None]) -> str:
         _CACHE_DIRS[key] = tmp
         path = tmp
     return path
+
+
+@contextlib.contextmanager
+def scratch_dir(prefix: str) -> Iterator[str]:
+    """A temp directory for one call's write-then-read round-trip, removed
+    when the block exits (exception included). A frame read from it must be
+    materialized (``fence.checkpoint``) before the block ends."""
+    tmp = tempfile.mkdtemp(prefix=f"sparkgraft_{prefix}_")
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

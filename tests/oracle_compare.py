@@ -14,21 +14,12 @@ import math
 
 import duckdb
 
+from amazon_fresh_sql_data_engineering_spark.sources.loaders import TABLE_NAMES
+
 
 def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
-    for t in [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]:
+    for t in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )

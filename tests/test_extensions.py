@@ -415,6 +415,13 @@ def _containment_universe_rows(spark, sf_dir) -> int:
     return docs.count() + hosts.count()
 
 
+def _lm_scored_rows(spark, sf_dir) -> int:
+    """``text_char_lm_score``'s scored texts: every document of two or more
+    characters plus its vowel-struck copy when its id is divisible by 25."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(F.length("text") >= 2)
+    return docs.count() + docs.filter(F.col("doc_id") % 25 == 0).count()
+
+
 @pytest.mark.parametrize(
     "query,udf,input_rows",
     [
@@ -428,6 +435,7 @@ def _containment_universe_rows(spark, sf_dir) -> int:
         ),
         ("text_decontaminate", "_shs", lambda s, d: QE._docs_with_dups(s, d).count()),
         ("dedup_embedding", "_dots", lambda s, d: QE._embeddings_with_dups(s, d).count()),
+        ("text_char_lm_score", "_bigram_counts", _lm_scored_rows),
     ],
 )
 def test_each_arrow_udf_runs_once_per_input_row(spark, sf_dir, query, udf, input_rows):
